@@ -33,6 +33,7 @@ from iceberg_rust_archive_spark.predicates import (
     Pred, localize_naive_tstz, prune_datafiles, prune_manifests,
     to_spark_filter,
 )
+from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.sources.manifests import (
     read_manifest_list, read_manifests,
 )
@@ -108,7 +109,7 @@ def dv_pairs_df(spark: SparkSession, dv_files: list,
     schema = StructType([StructField(path_col, StringType()),
                          StructField(pos_col, LongType())])
     if not descs:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     total = sum((sz or 0) for _p, _o, sz, _r in descs)
     if total <= DV_DRIVER_DECODE_MAX_BYTES:
         import weakref
@@ -125,16 +126,15 @@ def dv_pairs_df(spark: SparkSession, dv_files: list,
         for path, off, ln, ref in descs:
             blob = store_for(path).read_bytes(path)[off:off + ln]
             pairs.update((ref, p) for p in deserialize_positions(blob))
-        # Arrow-path createDataFrame: a row-list pays per-row schema
-        # verification + py4j pickling (~0.6s per 34k pairs, ON EVERY
-        # statement that scans the table); a pandas frame ships one
-        # Arrow batch
-        import pandas as pd
+        # one Arrow batch: a row-list pays per-row schema verification
+        # + py4j pickling (~0.6s per 34k pairs, ON EVERY statement that
+        # scans the table)
+        import pyarrow as pa
         rows = sorted(pairs)
-        pdf = pd.DataFrame({
-            path_col: pd.array([r[0] for r in rows], dtype=object),
-            pos_col: pd.array([r[1] for r in rows], dtype="int64")})
-        df = spark.createDataFrame(pdf, schema)
+        df = local_frame(spark, pa.table({
+            path_col: pa.array([r[0] for r in rows], pa.string()),
+            pos_col: pa.array([r[1] for r in rows], pa.int64())}),
+            schema)
         _DV_PAIRS_CACHE[key] = (weakref.ref(spark), df)
         while len(_DV_PAIRS_CACHE) > _DV_PAIRS_CACHE_MAX:
             _DV_PAIRS_CACHE.popitem(last=False)
@@ -429,7 +429,7 @@ def scan(spark: SparkSession, md: TableMetadata,
             "plan_mode": None})
 
     if snap is None:
-        df = spark.createDataFrame([], spark_schema)
+        df = local_frame(spark, [], spark_schema)
         if with_row_id:
             from pyspark.sql.types import LongType
             df = (df.withColumn("_row_id", F.lit(None).cast(LongType()))
@@ -780,8 +780,8 @@ def scan(spark: SparkSession, md: TableMetadata,
                 tag_rows = [
                     (fp, seq, pk) if any_scoped else (fp, seq)
                     for fp, (seq, pk) in tag_map.items()]
-                tags = spark.createDataFrame(tag_rows,
-                                             StructType(tag_fields))
+                tags = local_frame(spark, tag_rows,
+                                   StructType(tag_fields))
                 d = d.join(F.broadcast(tags), on="__fp", how="inner")
             else:
                 # ORC/mixed formats: one lit-tagged relation per
@@ -864,7 +864,7 @@ def scan(spark: SparkSession, md: TableMetadata,
             parts.append(read_data(clear))
 
     if not parts:
-        df = spark.createDataFrame([], spark_schema)
+        df = local_frame(spark, [], spark_schema)
         if expose_pos or with_row_id:
             from pyspark.sql.types import LongType, StringType
             df = (df.withColumn("__fp", F.lit(None).cast(StringType()))
@@ -898,8 +898,8 @@ def scan(spark: SparkSession, md: TableMetadata,
                       e.data_file.first_row_id,
                       e.sequence_number)
                      for e in data_entries]
-        base_df = spark.createDataFrame(
-            base_rows, StructType([
+        base_df = local_frame(
+            spark, base_rows, StructType([
                 StructField("__fp", StringType()),
                 StructField("__rid_base", LongType()),
                 StructField("__file_seq", LongType())]))

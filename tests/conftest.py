@@ -21,3 +21,24 @@ def spark():
 def tables(spark):
     from iceberg_rust_archive_spark.session import load_tables
     return load_tables(spark, SF_DIR)
+
+
+@pytest.fixture()
+def no_leaked_caches(spark):
+    """Fail a test that leaves a cached relation or a persisted RDD
+    behind: every cached frame is released by its owner. Counted
+    against the state the test started from, so a leak from an earlier
+    test is not blamed on this one."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys()) | {
+            i.id() for i in jsc.sc().getRDDStorageInfo()}
+
+    cached, rdds = cache.numCachedEntries(), persisted()
+    yield
+    leaked = persisted() - rdds
+    assert not leaked, f"persisted RDDs left behind: {sorted(leaked)}"
+    assert cache.numCachedEntries() <= cached, \
+        "cached relations left behind"

@@ -8,8 +8,17 @@ from iceberg_rust_archive_spark.plans.engine import Engine
 from iceberg_rust_archive_spark.plans.sqlparse import (
     find_relations, parse_select,
 )
-from iceberg_rust_archive_spark.plans.mv import FULL, INCR_AGG, INCR_APPEND, classify
-from iceberg_rust_archive_spark.sources.manifests import read_manifest_list
+from iceberg_rust_archive_spark.plans.mv import (
+    CHANGELOG_AGG, FULL, INCR_AGG, INCR_APPEND, classify,
+)
+from iceberg_rust_archive_spark.sources.manifests import (
+    read_manifest_list, read_manifests,
+)
+from iceberg_rust_archive_spark.spec.manifest import (
+    CONTENT_DATA, CONTENT_EQUALITY_DELETES, STATUS_ADDED, STATUS_DELETED,
+)
+
+pytestmark = pytest.mark.usefixtures("no_leaked_caches")
 
 
 @pytest.fixture()
@@ -115,41 +124,137 @@ def test_aggregate_mv_incremental(engine):
     assert any(m.content == 1 for m in mlist), "expected delete manifest"
 
 
-def test_mv_refresh_loop_auto_compacts(engine):
+def _live_delete_strata(table) -> set:
+    """Distinct sequence numbers of the live equality deletes: the
+    merge-on-read strata a scan of ``table`` must apply."""
+    mans = [m.manifest_path for m in read_manifest_list(
+        table.metadata.current_snapshot().manifest_list) if m.content == 1]
+    return {e.sequence_number for entries in read_manifests(mans)
+            for e in entries if e.status != STATUS_DELETED
+            and e.data_file.content == CONTENT_EQUALITY_DELETES}
+
+
+@pytest.mark.parametrize("mv_sql", [
+    "SELECT sum(quantity) AS total, product_id FROM db.orders "
+    "GROUP BY product_id",
+    # one group: each refresh writes one delete file, so the commit
+    # path packs the delete manifests into 1-2 while strata grow
+    "SELECT sum(quantity) AS total, product_id FROM db.orders "
+    "WHERE product_id = 1 GROUP BY product_id",
+], ids=["multi_group", "single_group"])
+def test_mv_refresh_loop_auto_compacts(engine, mv_sql):
     """An INCR_AGG refresh loop must not grow the storage table's
-    merge-on-read chain without bound: after the delete-strata threshold
-    the driver rewrites the storage table (one anti-join worth of strata
-    left at most), the refresh state survives the compaction (the NEXT
-    refresh is still INCR_AGG, not a silent FULL demotion), and the MV
-    contents stay equal to a full recompute throughout."""
+    merge-on-read chain without bound: once the live delete strata
+    (distinct delete sequence numbers, not delete manifests) reach the
+    threshold the driver rewrites the storage table, the refresh state
+    survives the compaction (the NEXT refresh is still INCR_AGG, not a
+    silent FULL demotion), and the MV contents stay equal to a full
+    recompute throughout."""
     from iceberg_rust_archive_spark.plans.mv import (
         _STORAGE_COMPACT_DELETE_STRATA,
     )
-    engine.sql("CREATE MATERIALIZED VIEW db.loop_mv AS "
-               "SELECT sum(quantity) AS total, product_id FROM db.orders "
-               "GROUP BY product_id")
+    engine.sql(f"CREATE MATERIALIZED VIEW db.loop_mv AS {mv_sql}")
     engine.refresh_materialized_view("db.loop_mv")
-    max_strata = 0
+    max_strata, compacted = 0, False
     for i in range(7, 7 + 2 * _STORAGE_COMPACT_DELETE_STRATA):
         engine.sql(f"INSERT INTO db.orders VALUES "
                    f"({i},1,1,DATE '2020-03-01',{i % 3 + 1})")
         assert engine.refresh_materialized_view("db.loop_mv") == INCR_AGG
-        want = _sums(engine, "db.orders")
+        want = {r[1]: r[0] for r in engine.sql(mv_sql).collect()}
         got = {r["product_id"]: r["total"] for r in
                engine.sql("SELECT * FROM db.loop_mv").collect()}
         assert got == want, f"divergence after refresh {i}"
-        storage = engine.load_table("db.loop_mv_storage")
-        strata = sum(1 for m in read_manifest_list(
-            storage.metadata.current_snapshot().manifest_list)
-            if m.content == 1)
+        strata = len(_live_delete_strata(
+            engine.load_table("db.loop_mv_storage")))
+        compacted = compacted or strata == 0
         max_strata = max(max_strata, strata)
     # the chain was bounded by the threshold, and at least one
-    # compaction actually ran (strata dropped back to zero at some point)
-    assert max_strata < _STORAGE_COMPACT_DELETE_STRATA + 1, max_strata
-    final = sum(1 for m in read_manifest_list(
-        engine.load_table("db.loop_mv_storage")
-        .metadata.current_snapshot().manifest_list) if m.content == 1)
-    assert final < _STORAGE_COMPACT_DELETE_STRATA, final
+    # compaction actually ran (strata dropped back to zero)
+    assert max_strata < _STORAGE_COMPACT_DELETE_STRATA, max_strata
+    assert compacted
+
+
+def test_mv_null_group_key_keeps_history(engine):
+    """A NULL group key merges with its stored row: the equality delete
+    retracts the NULL group null-safely, so the merge join must match it
+    null-safely too, or the group restarts from the delta alone. A sum
+    over NULL values only stays NULL through the merge, in a stored
+    group and in a brand-new one."""
+    engine.sql("CREATE TABLE db.nk (k STRING, v BIGINT)")
+    engine.sql("INSERT INTO db.nk VALUES ('a', 1), (NULL, 10), ('b', NULL)")
+    mv_sql = "SELECT k, count(*) AS n, sum(v) AS s FROM db.nk GROUP BY k"
+    engine.sql(f"CREATE MATERIALIZED VIEW db.nk_mv AS {mv_sql}")
+    assert engine.refresh_materialized_view("db.nk_mv") == FULL
+    engine.sql("INSERT INTO db.nk VALUES "
+               "('a', 2), (NULL, 20), ('b', NULL), ('c', NULL)")
+    assert engine.refresh_materialized_view("db.nk_mv") == INCR_AGG
+    got = {tuple(r) for r in engine.sql("SELECT * FROM db.nk_mv").collect()}
+    assert got == {tuple(r) for r in engine.sql(mv_sql).collect()}
+    assert got == {("a", 2, 3), (None, 2, 30), ("b", 2, None),
+                   ("c", 1, None)}
+
+
+def test_global_aggregate_mv_stays_one_row(engine):
+    """An aggregate without GROUP BY has no keys to retract by: the
+    merged row replaces the stored one instead of piling up beside it."""
+    mv_sql = "SELECT count(*) AS n, sum(quantity) AS q FROM db.orders"
+    engine.sql(f"CREATE MATERIALIZED VIEW db.g_mv AS {mv_sql}")
+    engine.refresh_materialized_view("db.g_mv")
+    engine.sql("INSERT INTO db.orders VALUES (7,1,3,DATE '2020-01-03',4)")
+    assert engine.refresh_materialized_view("db.g_mv") == INCR_AGG
+    engine.sql("DELETE FROM db.orders WHERE id = 1")
+    assert engine.refresh_materialized_view("db.g_mv") == CHANGELOG_AGG
+    got = [tuple(r) for r in engine.sql("SELECT * FROM db.g_mv").collect()]
+    assert got == [tuple(r) for r in engine.sql(mv_sql).collect()]
+    assert got == [(6, 14)]
+
+
+def test_mv_refresh_owns_its_lifetimes(engine, spark):
+    """A small-delta incremental refresh commits one data file and one
+    equality-delete file, and leaves no cached relation, no persisted
+    RDD and no changed session conf behind."""
+    engine.sql("CREATE MATERIALIZED VIEW db.own_mv AS "
+               "SELECT product_id, count(*) AS n, sum(quantity) AS q "
+               "FROM db.orders GROUP BY product_id")
+    engine.refresh_materialized_view("db.own_mv")
+    engine.sql("INSERT INTO db.orders VALUES "
+               "(7,1,3,DATE '2020-01-03',1),(8,2,1,DATE '2020-01-03',2),"
+               "(9,2,4,DATE '2020-01-03',5)")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc.sc()
+    confs, cached = dict(spark.conf.getAll), cache.numCachedEntries()
+    stored = {i.id() for i in jsc.getRDDStorageInfo()}
+    assert engine.refresh_materialized_view("db.own_mv") == INCR_AGG
+    assert dict(spark.conf.getAll) == confs
+    assert cache.numCachedEntries() == cached
+    assert {i.id() for i in jsc.getRDDStorageInfo()} <= stored
+    snap = engine.load_table("db.own_mv_storage") \
+        .metadata.current_snapshot()
+    added = [e.data_file.content for entries in read_manifests(
+        [m.manifest_path for m in read_manifest_list(snap.manifest_list)])
+        for e in entries
+        if e.status == STATUS_ADDED and e.snapshot_id == snap.snapshot_id]
+    assert sorted(added) == [CONTENT_DATA, CONTENT_EQUALITY_DELETES]
+
+
+def test_mor_scan_tags_are_local_relations(engine):
+    """With several delete strata the merge-on-read scan tags each data
+    file with its sequence number through a driver-built relation; it
+    must be a JVM LocalRelation, not a LogicalRDD whose every use
+    schedules a parallelize stage."""
+    engine.sql("CREATE MATERIALIZED VIEW db.mor_mv AS "
+               "SELECT sum(quantity) AS total, product_id FROM db.orders "
+               "GROUP BY product_id")
+    engine.refresh_materialized_view("db.mor_mv")
+    for i in range(7, 10):
+        engine.sql(f"INSERT INTO db.orders VALUES "
+                   f"({i},1,{i % 2 + 1},DATE '2020-03-01',1)")
+        assert engine.refresh_materialized_view("db.mor_mv") == INCR_AGG
+    storage = engine.load_table("db.mor_mv_storage")
+    assert len(_live_delete_strata(storage)) == 3
+    plan = storage.scan(engine.spark)._jdf.queryExecution() \
+        .analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
 
 def test_join_aggregate_mv(engine):
