@@ -276,8 +276,8 @@ def _dedup_exact_decontam(s: SparkSession, d: str) -> DataFrame:
         F.col("n_clean").alias("n_keep"),
         F.col("n_contaminated").alias("n_flag"))
     # ExactSubstr (Lee et al. 2021) span dedup: flag counts + integer
-    # span-coverage sums; one cached per-source rollup feeds both rows
-    ss = dedup.substring_dup_spans(s, d).cache()
+    # span-coverage sums; one local per-source rollup feeds both rows
+    ss = dedup.substring_dup_spans(s, d)
     s1 = ss.select(F.lit("substr").alias("method"), "source",
                    "n_docs", F.col("n_clean").alias("n_keep"),
                    F.col("n_flagged").alias("n_flag"))

@@ -705,16 +705,13 @@ def rewrite_position_deletes(spark: SparkSession, table: Table,
     from iceberg_rust_archive_spark.spec.snapshot import Snapshot
     from iceberg_rust_archive_spark.transaction import new_snapshot_id
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
 
     md = table.metadata
     snap = md.current_snapshot(branch)
     if snap is None:
         return table
     keep_groups: dict[tuple, list] = {}
-    pos_files: list[str] = []
+    pos_files: list = []
     dv_files: list = []
     live_paths: list[str] = []
     mlist = read_manifest_list(snap.manifest_list)
@@ -727,7 +724,7 @@ def rewrite_position_deletes(spark: SparkSession, table: Table,
                 if (e.data_file.file_format or "").lower() == "puffin":
                     dv_files.append(e.data_file)
                 else:
-                    pos_files.append(e.data_file.file_path)
+                    pos_files.append(e.data_file)
                 continue
             if e.data_file.content == 0:
                 live_paths.append(e.data_file.file_path)
@@ -738,24 +735,14 @@ def rewrite_position_deletes(spark: SparkSession, table: Table,
     if len(pos_files) + len(dv_files) <= 1 and not (to_dv and pos_files):
         return table  # nothing to merge
 
-    pd_schema = StructType([StructField("file_path", StringType()),
-                            StructField("pos", LongType())])
-    norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+    from iceberg_rust_archive_spark.operators.scan import pos_delete_pairs
+    from iceberg_rust_archive_spark.sources.readers import norm_path
     live_df = spark.createDataFrame(
-        [(p,) for p in live_paths], "file_path string").select(
-        norm("file_path").alias("file_path"))
-    parts = []
-    if pos_files:
-        parts.append(spark.read.schema(pd_schema).parquet(*pos_files)
-                     .select(norm("file_path").alias("file_path"), "pos"))
-    if dv_files:
-        from iceberg_rust_archive_spark.operators.scan import dv_pairs_df
-        parts.append(dv_pairs_df(spark, dv_files, path_col="file_path",
-                                 pos_col="pos"))
-    pairs = parts[0]
-    for p_ in parts[1:]:
-        pairs = pairs.unionByName(p_)
-    pairs = (pairs.dropDuplicates(["file_path", "pos"])
+        [(norm_path(p),) for p in live_paths], "file_path string")
+    pairs = (pos_delete_pairs(spark, pos_files + dv_files)
+             .select(F.col("__fp").alias("file_path"),
+                     F.col("__pos").alias("pos"))
+             .dropDuplicates(["file_path", "pos"])
              .join(live_df, "file_path"))  # drop superseded targets
     if to_dv:
         from iceberg_rust_archive_spark.sources.write import (

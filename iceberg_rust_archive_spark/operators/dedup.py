@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from iceberg_rust_archive_spark.session import materialize_local
+
 N_HASHES = 12
 BAND_SIZE = 3  # → 4 bands
 MERSENNE_P = (1 << 61) - 1
@@ -183,8 +185,22 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str,
 
     Output: one row per source — docs considered (≥ win chars), docs
     clean, docs flagged, covered span chars, flagged docs' total chars.
-    All integers, so the DuckDB oracle hash-matches exactly.
+    All integers, so the DuckDB oracle hash-matches exactly. The rollup
+    runs eagerly and comes back as a local relation, so the window rows
+    cached at the fork are released before this returns.
     """
+    wins = _substring_windows(spark, sf_dir, win).cache()
+    try:
+        return materialize_local(spark, _substring_rollup(wins, win))
+    finally:
+        wins.unpersist()
+
+
+def _substring_windows(spark: SparkSession, sf_dir: str,
+                      win: int = SUBSTR_WIN) -> DataFrame:
+    """One row per (document, word-start window) for
+    :func:`substring_dup_spans`: doc id, source, doc length, window
+    offset and the 60-bit md5 key of the window's content."""
     d = _docs(spark, sf_dir)
     # single-space split on BOTH engines (not \s+): empty tokens keep
     # the running offset exact (each consumed separator is one char).
@@ -210,18 +226,21 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str,
                                 F.array_append(acc["ps"], acc["off"]))
                             .otherwise(acc["ps"]).alias("ps")),
                         lambda acc: acc["ps"])))
-    # one corpus scan total: the window rows are cached at the fork
-    # (ForkNode pattern, A25) because BOTH the duplicate test and the
-    # per-doc rollup consume them — without the cache the scan + HOF
-    # prefix-sum would run twice
-    wins = (base.select(
+    return (base.select(
                 "doc_id", "source", "dlen", "text",
                 F.explode("anchors").alias("pos"))
             .select("doc_id", "source", "dlen", "pos",
                     F.conv(F.substring(F.md5(
                         F.expr(f"substring(text, pos + 1, {win})")),
-                        1, 15), 16, 10).cast("long").alias("h"))
-            .cache())
+                        1, 15), 16, 10).cast("long").alias("h")))
+
+
+def _substring_rollup(wins: DataFrame, win: int = SUBSTR_WIN) -> DataFrame:
+    """The per-source rollup of :func:`substring_dup_spans` over its
+    window rows. One corpus scan total when ``wins`` is cached at the
+    fork (ForkNode pattern, A25): BOTH the duplicate test and the
+    per-doc rollup consume it — uncached, the scan + HOF prefix-sum
+    would run twice."""
     # windows whose content crosses documents; one output row per key,
     # so the join back cannot fan out. Keys are 60-bit md5 prefixes —
     # the shuffle carries 8 bytes per window, not the 40-char content;

@@ -5,13 +5,13 @@ Pipeline (mirrors datafusion_iceberg/src/table.rs:265-728):
 2. read the manifest list; partition-level pruning on FieldSummary bounds,
 3. read surviving manifests; file-level pruning on column min/max + nulls,
 4. split data vs equality-delete files; files newer than every delete
-   become one bulk ``spark.read.parquet(*files)`` (the delete-free
-   FileScanConfig, table.rs:694-727), older files take ONE
-   sequence-tagged pass — per-file (sequence, partition) tags via a
-   broadcast path join, then one anti-join per distinct
-   equality-column set with the sequence/scope comparisons as
-   residual join conditions (A5 semantics of table.rs:498-531,631-641
-   with plan size O(#column-sets), not O(strata × partitions)),
+   become one bulk read (the delete-free FileScanConfig,
+   table.rs:694-727), older files take ONE pass — per-entry (sequence,
+   partition) tags via a broadcast path join, then per distinct
+   equality-id set one delete read (its tags looked up by file path)
+   and one anti-join with the sequence/scope comparisons as residual
+   join conditions (A5 semantics of table.rs:498-531,631-641 with a
+   plan whose relations do not grow with the delete debt),
 5. residual filter re-applied above the scan (inexact semantics, A7) and
    projection pushed into Spark (A6 — Catalyst prunes parquet columns).
 
@@ -25,6 +25,7 @@ from __future__ import annotations
 import dataclasses as _dc
 import json
 from collections import defaultdict
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,7 +38,9 @@ from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.sources.manifests import (
     read_manifest_list, read_manifests,
 )
-from iceberg_rust_archive_spark.sources.readers import read_data_files
+from iceberg_rust_archive_spark.sources.readers import (
+    norm_format, norm_path, read_data_files,
+)
 from iceberg_rust_archive_spark.spec.manifest import (
     CONTENT_DATA, CONTENT_EQUALITY_DELETES, CONTENT_POSITION_DELETES,
     STATUS_DELETED,
@@ -155,6 +158,61 @@ def dv_pairs_df(spark: SparkSession, dv_files: list,
                                            sc.defaultParallelism))) \
         .mapPartitions(decode)
     return spark.createDataFrame(rdd, schema)
+
+
+def pos_delete_pairs(spark: SparkSession, delete_files: list
+                     ) -> DataFrame:
+    """``(__fp, __pos)`` pairs named by position-delete DataFiles:
+    parquet position-delete files and deletion vectors (puffin) in one
+    frame, not deduplicated. An empty list yields an empty frame."""
+    from pyspark.sql.types import (
+        LongType, StringType, StructField, StructType,
+    )
+    pq = [f.file_path for f in delete_files
+          if norm_format(f.file_format) != "puffin"]
+    dv = [f for f in delete_files if norm_format(f.file_format) == "puffin"]
+    parts = []
+    if pq:
+        parts.append(
+            spark.read.schema(StructType([
+                StructField("file_path", StringType()),
+                StructField("pos", LongType())])).parquet(*pq)
+            .select(F.regexp_replace("file_path", "^file:/+", "/")
+                    .alias("__fp"), F.col("pos").alias("__pos")))
+    if dv or not parts:
+        parts.append(dv_pairs_df(spark, dv))
+    return reduce(DataFrame.unionByName, parts)
+
+
+def eq_delete_keys(spark: SparkSession, fields: list, entries: list,
+                   seq: bool = False, scope=None) -> DataFrame:
+    """The rows of one equality-id set's delete files as ONE relation:
+    the key ``fields`` renamed ``__del_<name>``. ``seq`` adds
+    ``__del_seq``, the row's delete sequence number; ``scope`` (entry →
+    partition key, None for a global delete) adds ``__del_pk``. Both
+    tags are literal-map lookups on the row's file path, so the plan
+    stays one relation however many sequence numbers the files carry.
+    A delete file planned twice applies at its newest sequence."""
+    tags: dict[str, tuple] = {}
+    for e in sorted(entries, key=lambda e: e.sequence_number or 0):
+        tags[norm_path(e.data_file.file_path)] = (
+            e.sequence_number or 0, scope(e) if scope else None)
+    d = read_data_files(
+        spark, spark_schema_for(StructTypeSpec(tuple(fields))),
+        dict.fromkeys((e.data_file.file_path, e.data_file.file_format)
+                      for e in entries),
+        with_fp=seq or scope is not None)
+
+    def by_path(i):
+        return F.element_at(F.create_map(*[
+            F.lit(x) for fp, t in tags.items() for x in (fp, t[i])]),
+            F.col("__fp"))
+    cols = [F.col(f.name).alias(f"__del_{f.name}") for f in fields]
+    if seq:
+        cols.append(by_path(0).alias("__del_seq"))
+    if scope is not None:
+        cols.append(by_path(1).cast("string").alias("__del_pk"))
+    return d.select(*cols)
 
 
 def plan_mode_used(md, mlist) -> str:
@@ -481,29 +539,7 @@ def scan(spark: SparkSession, md: TableMetadata,
     # The reference PANICS on this content type (datafusion_iceberg/src/
     # table.rs:422-425); Spark's _metadata.row_index virtual column makes
     # merge-on-read natural, so we support it as a parity superset.
-    # __fp/__pos also carry the equality-delete sequence tags (the
-    # per-file broadcast attach below joins on the normalized path);
-    # ORC files have no _metadata.row_index, so mixed/ORC tables tag
-    # sequence groups with literals instead
-    # Single-stratum fast path (the common post-compaction state,
-    # reference's simple case table.rs:631-641): every delete file
-    # shares ONE sequence number and none is partition-scoped. Then
-    # every affected data file (seq < that number, by construction)
-    # satisfies the sequence residual vacuously and no scope residual
-    # exists — the whole tag machinery (per-file __dseq attach, pk
-    # literals, residual join conditions) collapses to a plain
-    # null-safe left_anti per equality-column set, and the scan never
-    # needs _metadata.row_index for tag-carrying purposes.
-    eq_single_stratum = bool(delete_entries) and len(
-        {e.sequence_number or 0 for e in delete_entries}) == 1 \
-        and all(all(v is None for v in e.data_file.partition.values())
-                for e in delete_entries)
-    eq_tags_via_fp = bool(delete_entries) and not eq_single_stratum \
-        and all(
-            (e.data_file.file_format or "parquet").lower() == "parquet"
-            for e in data_entries)
-    has_pos = bool(pos_delete_entries) or expose_pos or with_row_id \
-        or eq_tags_via_fp
+    has_pos = bool(pos_delete_entries) or expose_pos or with_row_id
 
     # tables holding add_files-registered external files (no embedded
     # field ids) carry the name-mapping property → resolve BY NAME
@@ -564,15 +600,17 @@ def scan(spark: SparkSession, md: TableMetadata,
                    for f in schema.fields
                    if getattr(f, "initial_default", None) is not None]
 
-    def read_data(entries: list) -> DataFrame:
+    def read_data(entries: list, with_fp: bool = False) -> DataFrame:
         # format-aware (DataFile.file_format — parquet/ORC may mix after
-        # a write.format.default flip); __fp normalizes file:///p -> /p
-        # to match DataFile.file_path form when pos-deletes are in play
+        # a write.format.default flip); __fp/__pos address rows for
+        # position deletes and row lineage, __fp alone carries the
+        # equality-delete tags
         def _read(es):
             return read_data_files(
                 spark, spark_schema,
                 [(e.data_file.file_path, e.data_file.file_format)
-                 for e in es], with_pos=has_pos, by_name=by_name)
+                 for e in es], with_fp=with_fp, with_pos=has_pos,
+                by_name=by_name)
         if not dflt_fields:
             return _read(entries)
         groups: dict[frozenset, list] = defaultdict(list)
@@ -592,10 +630,7 @@ def scan(spark: SparkSession, md: TableMetadata,
                         name, F.lit(dv).cast(
                             spark_schema[name].dataType))
             parts.append(d)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     def apply_pos_deletes(d: DataFrame) -> DataFrame:
         """Anti-join the (file_path, pos) delete pairs, drop helpers.
@@ -606,31 +641,8 @@ def scan(spark: SparkSession, md: TableMetadata,
         Broadcast only while the delete set is provably small (sum of
         delete-file bytes ≤ 64 MB); a bulk-deleted 100 TB table falls
         back to a shuffle anti-join, which scales with the delete set."""
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
-        )
-        pd_schema = StructType([StructField("file_path", StringType()),
-                                StructField("pos", LongType())])
-        pq_entries = [e for e in pos_delete_entries
-                      if (e.data_file.file_format or "").lower()
-                      != "puffin"]
-        dv_entries = [e for e in pos_delete_entries
-                      if (e.data_file.file_format or "").lower()
-                      == "puffin"]
-        parts = []
-        if pq_entries:
-            pd_paths = [e.data_file.file_path for e in pq_entries]
-            parts.append(
-                spark.read.schema(pd_schema).parquet(*pd_paths)
-                .select(F.regexp_replace("file_path", "^file:/+", "/")
-                        .alias("__fp"),
-                        F.col("pos").alias("__pos")))
-        if dv_entries:
-            parts.append(dv_pairs_df(
-                spark, [e.data_file for e in dv_entries]))
-        pairs = parts[0]
-        for p in parts[1:]:
-            pairs = pairs.unionByName(p)
+        pairs = pos_delete_pairs(
+            spark, [e.data_file for e in pos_delete_entries])
         del_bytes = sum(e.data_file.file_size_in_bytes or 0
                         for e in pos_delete_entries)
         if del_bytes <= 64 * 1024 * 1024:
@@ -649,25 +661,22 @@ def scan(spark: SparkSession, md: TableMetadata,
         return d if (expose_pos or with_row_id) \
             else d.drop("__fp", "__pos")
 
-    # A5: equality-delete merge-on-read as ONE sequence-tagged pass.
-    # (Formerly a union of per-stratum join chains: plan size was
-    # O(strata × partitions), so a table carrying 100 DML commits of
-    # delete debt built a 100-branch join-laden union. Now it plans 2
-    # union branches — files old enough to be affected, files newer
-    # than every delete — plus ONE anti-join per distinct
-    # equality-column set, whatever the commit history.)
-    #
-    # Semantics preserved exactly (table.rs:498-531): an equality
+    # A5: equality-delete merge-on-read (table.rs:498-531). An equality
     # delete at sequence s kills rows of data files with sequence < s
     # (strictly earlier), scoped to the delete file's partition tuple
-    # unless that tuple is all-NULL. NOTE the all-None tuple: the Avro
-    # manifest's r102 record is typed from the table spec, so a
-    # partition-LESS delete file ({} at write time) reads back as
-    # {field: None, ...} — treat it as global; the writer
-    # (sources/write.py) only scopes a delete when the partition
+    # unless that tuple is global (_is_global). The plan holds the same
+    # relations whatever the delete debt: one read of the affected files
+    # (older than the newest delete), one of the clear files, and per
+    # distinct equality-id set one delete read and ONE anti-join, with
+    # the sequence/scope comparisons as residual join conditions.
+    #
+    # NOTE the all-None tuple: the Avro manifest's r102 record is typed
+    # from the table spec, so a partition-LESS delete file ({} at write
+    # time) reads back as {field: None, ...} — treat it as global; the
+    # writer (sources/write.py) only scopes a delete when the partition
     # source is among the equality columns, so an all-None scoped
-    # delete would restrict to null-source rows via the null-safe
-    # join anyway, and global application is the same row set.
+    # delete would restrict to null-source rows via the null-safe join
+    # anyway, and global application is the same row set.
     def pkey(e):
         return json.dumps(e.data_file.partition, sort_keys=True, default=str)
 
@@ -702,166 +711,83 @@ def scan(spark: SparkSession, md: TableMetadata,
                    and k in _str_part_names
                    for k, v in part.items())
 
+    max_del_seq = max((e.sequence_number or 0 for e in delete_entries),
+                      default=0)
+    affected = [e for e in data_entries
+                if (e.sequence_number or 0) < max_del_seq]
+    clear = [e for e in data_entries
+             if (e.sequence_number or 0) >= max_del_seq]
     parts: list[DataFrame] = []
-    if not delete_entries:
-        if data_entries:
-            parts.append(read_data(data_entries))
-    else:
-        import re as _re2
-        max_del_seq = max(e.sequence_number or 0 for e in delete_entries)
-        affected = [e for e in data_entries
-                    if (e.sequence_number or 0) < max_del_seq]
-        clear = [e for e in data_entries
-                 if (e.sequence_number or 0) >= max_del_seq]
+    if affected:
         any_scoped = any(not _is_global(e) for e in delete_entries)
-        if affected and eq_single_stratum:
-            # fast path: one distinct delete sequence, all global —
-            # the sequence residual (data seq < delete seq) is TRUE
-            # for every affected file and there is no scope residual,
-            # so each equality-column set applies as one plain
-            # null-safe anti-join with no tag columns at all.
+        # one delete sequence, all global (the post-compaction common
+        # case, the reference's simple case table.rs:631-641): every
+        # affected file is older than every delete, so the rule reduces
+        # to the key match and neither side carries tags
+        tagged = any_scoped or len(
+            {e.sequence_number or 0 for e in delete_entries}) > 1
+        if tagged:
+            # (sequence, partition-key) tags attach by ONE broadcast
+            # hash join on the normalized path: one row per planned
+            # ENTRY, never per data row. Each distinct path is read
+            # once, so a file planned twice yields one copy per entry,
+            # each with its own tags.
+            d = read_data(list({e.data_file.file_path: e
+                                for e in affected}.values()),
+                          with_fp=True)
+            from pyspark.sql.types import (
+                LongType, StringType, StructField, StructType,
+            )
+            tag_fields = [StructField("__fp", StringType()),
+                          StructField("__dseq", LongType())]
+            if any_scoped:
+                tag_fields.append(StructField("__pk", StringType()))
+            tags = local_frame(spark, [
+                (norm_path(e.data_file.file_path), e.sequence_number or 0)
+                + ((pkey(e),) if any_scoped else ())
+                for e in affected], StructType(tag_fields))
+            d = d.join(F.broadcast(tags), on="__fp", how="inner")
+        else:
             d = read_data(affected)
-            by_eq: dict[tuple, list] = defaultdict(list)
-            for de in delete_entries:
-                by_eq[tuple(de.data_file.equality_ids or ())].append(de)
-            for eq_ids, des in by_eq.items():
-                eq_fields = [schema.field_by_id(i) or hist_fields[i]
-                             for i in eq_ids]
-                eq_names = [f.name for f in eq_fields]
-                if not eq_names:
-                    continue
-                del_schema = spark_schema_for(
-                    StructTypeSpec(tuple(eq_fields)))
-                del_df = read_data_files(
-                    spark, del_schema,
-                    [(g.data_file.file_path, g.data_file.file_format)
-                     for g in des]
-                ).select(*[F.col(c).alias(f"__del_{c}")
-                           for c in eq_names])
-                if sum(g.data_file.file_size_in_bytes or 0
-                       for g in des) <= 64 * 1024 * 1024:
-                    del_df = F.broadcast(del_df)
-                cond = F.col(eq_names[0]).eqNullSafe(
-                    F.col(f"__del_{eq_names[0]}"))
-                for c in eq_names[1:]:
-                    cond = cond & F.col(c).eqNullSafe(
-                        F.col(f"__del_{c}"))
-                d = d.join(del_df, on=cond, how="left_anti")
-            parts.append(d)
-            affected = []  # handled; fall through to `clear` below
-        # per-file (sequence, partition-key) tags keyed by normalized
-        # path; a path planned twice with CONFLICTING tags (same file
-        # registered under two entries) would fan rows out through the
-        # tag join, so that degenerate case takes the lit-tag branch
-        tag_map: dict[str, tuple] = {}
-        tag_conflict = False
-        for e in affected:
-            fp = _re2.sub(r"^file:/+", "/", e.data_file.file_path)
-            val = (e.sequence_number or 0,
-                   pkey(e) if any_scoped else None)
-            if tag_map.setdefault(fp, val) != val:
-                tag_conflict = True
-        if affected:
-            if eq_tags_via_fp and not tag_conflict:
-                d = read_data(affected)
-                # tags attach via ONE broadcast hash join on the
-                # normalized path — one row per planned FILE, never
-                # per data row (the same shape as the v3 row-lineage
-                # attach below). Bounded by the planned-file count
-                # under live delete debt, which compaction keeps far
-                # below broadcast limits.
-                from pyspark.sql.types import (
-                    LongType, StringType, StructField, StructType,
-                )
-                tag_fields = [StructField("__fp", StringType()),
-                              StructField("__dseq", LongType())]
-                if any_scoped:
-                    tag_fields.append(StructField("__pk", StringType()))
-                tag_rows = [
-                    (fp, seq, pk) if any_scoped else (fp, seq)
-                    for fp, (seq, pk) in tag_map.items()]
-                tags = local_frame(spark, tag_rows,
-                                   StructType(tag_fields))
-                d = d.join(F.broadcast(tags), on="__fp", how="inner")
-            else:
-                # ORC/mixed formats: one lit-tagged relation per
-                # distinct (sequence, partition) group — branch count
-                # bounded by distinct delete-relevant groups
-                grp: dict[tuple, list] = defaultdict(list)
-                for e in affected:
-                    grp[((e.sequence_number or 0),
-                         pkey(e) if any_scoped else None)].append(e)
-                subparts = []
-                for (dseq, pk), es in grp.items():
-                    r = read_data(es).withColumn("__dseq", F.lit(dseq))
-                    if any_scoped:
-                        r = r.withColumn("__pk",
-                                         F.lit(pk).cast("string"))
-                    subparts.append(r)
-                d = subparts[0]
-                for r in subparts[1:]:
-                    d = d.unionByName(r)
-
-            # one anti-join per distinct equality-id set: the build
-            # side unions that set's delete files, each tagged with
-            # its own (sequence, scope). eqNullSafe keys keep it an
-            # equi hash join — Iceberg equality deletes compare with
-            # *null-safe* equality (a NULL in the delete row matches a
-            # NULL in the data row), so a plain ``on=names`` anti-join
-            # would silently keep matched rows containing NULLs — and
-            # the sequence/scope comparisons ride along as residual
-            # join conditions. Broadcast only provably-small delete
-            # sets (the reference forces CollectLeft likewise,
-            # table.rs:631-641); a bulk delete falls back to a shuffle
-            # anti-join that scales with the delete set.
-            by_eq: dict[tuple, list] = defaultdict(list)
-            for de in delete_entries:
-                by_eq[tuple(de.data_file.equality_ids or ())].append(de)
-            for eq_ids, des in by_eq.items():
-                # present fields keep their scan-schema name; dropped
-                # ones resolve to the __hist_<fid> helper read above
-                eq_fields = [schema.field_by_id(i) or hist_fields[i]
-                             for i in eq_ids]
-                eq_names = [f.name for f in eq_fields]
-                if not eq_names:
-                    continue
-                del_schema = spark_schema_for(
-                    StructTypeSpec(tuple(eq_fields)))
-                del_groups: dict[tuple, list] = defaultdict(list)
-                for de in des:
-                    scope = None if _is_global(de) else pkey(de)
-                    del_groups[(de.sequence_number or 0, scope)].append(de)
-                rels = []
-                for (dseq, scope), dgrp in del_groups.items():
-                    r = read_data_files(
-                        spark, del_schema,
-                        [(g.data_file.file_path, g.data_file.file_format)
-                         for g in dgrp]
-                    ).select(*[F.col(c).alias(f"__del_{c}")
-                               for c in eq_names])
-                    r = r.withColumn("__del_seq", F.lit(dseq))
-                    if any_scoped:
-                        r = r.withColumn("__del_pk",
-                                         F.lit(scope).cast("string"))
-                    rels.append(r)
-                del_df = rels[0]
-                for r in rels[1:]:
-                    del_df = del_df.unionByName(r)
-                if sum(g.data_file.file_size_in_bytes or 0
-                       for g in des) <= 64 * 1024 * 1024:
-                    del_df = F.broadcast(del_df)
-                cond = F.col("__dseq") < F.col("__del_seq")
-                if any_scoped:
-                    cond = cond & (F.col("__del_pk").isNull()
-                                   | (F.col("__del_pk") == F.col("__pk")))
-                for c in eq_names:
-                    cond = cond & F.col(c).eqNullSafe(F.col(f"__del_{c}"))
-                d = d.join(del_df, on=cond, how="left_anti")
-            d = d.drop("__dseq", "__pk") if any_scoped \
-                else d.drop("__dseq")
-            parts.append(d)
-        if clear:
-            parts.append(read_data(clear))
+        # Iceberg equality deletes compare with *null-safe* equality (a
+        # NULL in the delete row matches a NULL in the data row), so a
+        # plain ``on=names`` anti-join would silently keep matched rows
+        # containing NULLs; eqNullSafe keys keep it an equi hash join.
+        # Broadcast only provably-small delete sets (the reference
+        # forces CollectLeft likewise, table.rs:631-641); a bulk delete
+        # falls back to a shuffle anti-join that scales with the set.
+        by_eq: dict[tuple, list] = defaultdict(list)
+        for de in delete_entries:
+            by_eq[tuple(de.data_file.equality_ids or ())].append(de)
+        for eq_ids, des in by_eq.items():
+            # present fields keep their scan-schema name; dropped ones
+            # resolve to the __hist_<fid> helper read above
+            eq_fields = [schema.field_by_id(i) or hist_fields[i]
+                         for i in eq_ids]
+            if not eq_fields:
+                continue
+            keys = eq_delete_keys(
+                spark, eq_fields, des, seq=tagged,
+                scope=(lambda e: None if _is_global(e) else pkey(e))
+                if any_scoped else None)
+            if sum(g.data_file.file_size_in_bytes or 0
+                   for g in des) <= 64 * 1024 * 1024:
+                keys = F.broadcast(keys)
+            cond = None
+            for f in eq_fields:
+                term = F.col(f.name).eqNullSafe(F.col(f"__del_{f.name}"))
+                cond = term if cond is None else cond & term
+            if tagged:
+                cond = cond & (F.col("__dseq") < F.col("__del_seq"))
+            if any_scoped:
+                cond = cond & (F.col("__del_pk").isNull()
+                               | (F.col("__del_pk") == F.col("__pk")))
+            d = d.join(keys, on=cond, how="left_anti")
+        if tagged:
+            d = d.drop("__dseq", "__pk", *([] if has_pos else ["__fp"]))
+        parts.append(d)
+    if clear:
+        parts.append(read_data(clear))
 
     if not parts:
         df = local_frame(spark, [], spark_schema)
@@ -870,14 +796,9 @@ def scan(spark: SparkSession, md: TableMetadata,
             df = (df.withColumn("__fp", F.lit(None).cast(StringType()))
                     .withColumn("__pos", F.lit(None).cast(LongType())))
     else:
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = reduce(DataFrame.unionByName, parts)
         if pos_delete_entries:
             df = apply_pos_deletes(df)
-        elif has_pos and not (expose_pos or with_row_id):
-            # __fp/__pos existed only to carry the sequence tags
-            df = df.drop("__fp", "__pos")
     if hist_fields:
         df = df.drop(*[f.name for f in hist_fields.values()])
 
@@ -892,9 +813,7 @@ def scan(spark: SparkSession, md: TableMetadata,
         from pyspark.sql.types import (
             LongType, StringType, StructField, StructType,
         )
-        import re as _re
-        base_rows = [(_re.sub(r"^file:/+", "/",
-                              e.data_file.file_path),
+        base_rows = [(norm_path(e.data_file.file_path),
                       e.data_file.first_row_id,
                       e.sequence_number)
                      for e in data_entries]

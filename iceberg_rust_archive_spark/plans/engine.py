@@ -676,24 +676,26 @@ class Engine:
             # ONE scan of the matched rows feeds both the delete side
             # and the re-insert side (cached across the two writes —
             # the merge-on-read scan under it can be expensive)
-            old = self._run_select(
-                f"SELECT * FROM {ident} WHERE {pred}").cache()
-            new = old.selectExpr(*[
-                f"({assigns[c.lower()]}) AS {c}" if c.lower() in assigns
-                else c for c in cols])
             from iceberg_rust_archive_spark.sources.write import (
                 write_delete_and_data,
             )
             schema = t.metadata.current_schema()
             eq_ids = tuple(schema.field_by_name(c).field_id for c in cols)
-            del_files, data_files = write_delete_and_data(
-                self.spark, t.metadata, old, eq_ids, new)
+            old = self._run_select(
+                f"SELECT * FROM {ident} WHERE {pred}").cache()
+            try:
+                new = old.selectExpr(*[
+                    f"({assigns[c.lower()]}) AS {c}"
+                    if c.lower() in assigns else c for c in cols])
+                del_files, data_files = write_delete_and_data(
+                    self.spark, t.metadata, old, eq_ids, new)
+            finally:
+                old.unpersist()
             txn = (t.new_transaction().append_delete_files(del_files)
                    .append_files(data_files))
             txn.commit_with_retry(
                 lambda x: x.append_delete_files(del_files)
                 .append_files(data_files))
-            old.unpersist()
             return None
 
         m = re.match(

@@ -9,7 +9,11 @@ by format and unions one bulk relation per format — the scan plan stays
 O(#formats), not O(#files), and Catalyst still sees plain file-source
 relations it can prune and push filters into.
 
-Position-delete ordinals are the one parquet-only feature: Spark exposes
+Two helper columns come from Spark's file metadata. ``__fp``, the
+file's path in manifest form, exists for every format: Spark exposes
+``_metadata.file_path`` for Parquet and ORC alike, so path-keyed joins
+such as the equality-delete sequence tags work on any table.
+``__pos`` (the row's ordinal in its file) is Parquet-only: Spark exposes
 ``_metadata.row_index`` for its Parquet reader but not ORC (probed on
 this runtime), so callers that need row ordinals pass ``with_pos=True``
 and get a loud error if any ORC file is in range, instead of a silent
@@ -164,14 +168,23 @@ def raw_path_col(col, paths=None):
         "^file:/+", "/")
 
 
+def norm_path(path: str) -> str:
+    """A file path in manifest form: ``file:`` scheme dropped, the same
+    key :func:`raw_path_col` yields for the file's rows."""
+    return re.sub(r"^file:/+", "/", path)
+
+
 def read_data_files(spark: SparkSession, spark_schema,
-                    path_fmt_pairs, with_pos: bool = False,
+                    path_fmt_pairs, with_fp: bool = False,
+                    with_pos: bool = False,
                     by_name: bool = False) -> DataFrame:
     """One DataFrame over a mixed-format file list.
 
     ``path_fmt_pairs``: iterable of ``(file_path, file_format)``.
-    ``with_pos``: add ``__fp``/``__pos`` helper columns from the file
-    metadata (parquet only — ORC in range raises).
+    ``with_fp``: add the ``__fp`` helper column, each row's file path in
+    manifest form (any format).
+    ``with_pos``: add ``__fp`` and ``__pos``, the row's ordinal in its
+    file (parquet only — ORC in range raises).
     ``by_name``: resolve columns by name instead of field id (the
     name-mapping read path for registered external files).
     """
@@ -193,10 +206,13 @@ def read_data_files(spark: SparkSession, spark_schema,
                 "has no _metadata.row_index for ORC data files — use "
                 "equality deletes on ORC tables")
         d = _bulk_relation(spark, spark_schema, paths, fmt)
+        helpers = []
+        if with_fp or with_pos:
+            helpers.append(raw_path_col(F.col("_metadata.file_path"),
+                                        paths=paths).alias("__fp"))
         if with_pos:
-            d = (d.withColumn("__fp",
-                              raw_path_col(F.col("_metadata.file_path"),
-                                           paths=paths))
-                 .withColumn("__pos", F.col("_metadata.row_index")))
+            helpers.append(F.col("_metadata.row_index").alias("__pos"))
+        if helpers:
+            d = d.select("*", *helpers)
         out = d if out is None else out.unionByName(d)
     return out

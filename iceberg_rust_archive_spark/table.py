@@ -6,7 +6,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_rust_archive_spark.catalog.base import Catalog
-from iceberg_rust_archive_spark.operators.scan import scan as _scan
+from iceberg_rust_archive_spark.operators.scan import (
+    eq_delete_keys, pos_delete_pairs, scan as _scan,
+)
 from iceberg_rust_archive_spark.predicates import Pred
 from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.spec.manifest import (
@@ -17,13 +19,10 @@ from iceberg_rust_archive_spark.spec.schema import Schema
 from iceberg_rust_archive_spark.spec.sort import SortOrder
 from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
 from iceberg_rust_archive_spark.sources.readers import (
-    raw_path_col as _raw_path_col,
-    read_data_files,
+    norm_path, read_data_files,
 )
 from iceberg_rust_archive_spark.sources.write import write_datafiles
-from iceberg_rust_archive_spark.spec.types import (
-    StructTypeSpec, iceberg_to_spark_type,
-)
+from iceberg_rust_archive_spark.spec.types import iceberg_to_spark_type
 from iceberg_rust_archive_spark.transaction import Transaction
 
 
@@ -543,7 +542,6 @@ class Table:
                     "pass from_snapshot_id within retained history")
             if added_deletes and s.parent_snapshot_id is not None:
                 import json as _json
-                import re as _re
 
                 def _dpk(d):
                     return _json.dumps(d.partition, sort_keys=True,
@@ -572,7 +570,7 @@ class Table:
                         StringType, StructField, StructType,
                     )
                     tag_rows = [
-                        (_re.sub(r"^file:/+", "/", e.data_file.file_path),
+                        (norm_path(e.data_file.file_path),
                          _dpk(e.data_file))
                         for entries in read_manifests(
                             [m.manifest_path for m in read_manifest_list(
@@ -616,35 +614,20 @@ class Table:
                                 f"equality delete references field id "
                                 f"{i} not found in any table schema")
                         dfields.append(f)
-                    names = [f.name for f in dfields]
-                    if not names:
+                    if not dfields:
                         continue
-                    dsch = spark_schema_for(StructTypeSpec(tuple(dfields)))
-                    krels = []
-                    for de in des:
-                        k = (read_data_files(
-                            spark, dsch,
-                            [(de.data_file.file_path,
-                              de.data_file.file_format)])
-                            .select(*[F.col(c).alias(f"__k_{c}")
-                                      for c in names]))
-                        if any_scoped:
-                            scope = None if _dglobal(de.data_file) \
-                                else _dpk(de.data_file)
-                            k = k.withColumn(
-                                "__del_pk", F.lit(scope).cast("string"))
-                        krels.append(k)
-                    keys = krels[0]
-                    for k in krels[1:]:
-                        keys = keys.unionByName(k)
-                    keys = keys.dropDuplicates()
+                    keys = eq_delete_keys(
+                        spark, dfields, des,
+                        scope=(lambda e: None if _dglobal(e.data_file)
+                               else _dpk(e.data_file))
+                        if any_scoped else None).dropDuplicates()
                     cond = None
                     for f in dfields:
                         pf_ = ps.field_by_id(f.field_id)
                         data_e = F.col(pf_.name) if pf_ is not None \
                             else F.lit(f.initial_default).cast(
                                 iceberg_to_spark_type(f.field_type))
-                        term = data_e.eqNullSafe(F.col(f"__k_{f.name}"))
+                        term = data_e.eqNullSafe(F.col(f"__del_{f.name}"))
                         cond = term if cond is None else cond & term
                     if any_scoped:
                         cond = cond & (F.col("__del_pk").isNull()
@@ -662,38 +645,12 @@ class Table:
                 # the targeted files with _metadata row ordinals.
                 # (Our pos-delete writer only targets live rows, so no
                 # double-retraction with earlier logical deletes.)
-                from pyspark.sql.types import (
-                    LongType, StringType, StructField, StructType,
-                )
-                pd_schema = StructType([
-                    StructField("file_path", StringType()),
-                    StructField("pos", LongType())])
-                pq_pos = [e for e in added_pos
-                          if (e.data_file.file_format or "").lower()
-                          != "puffin"]
-                dv_pos = [e for e in added_pos
-                          if (e.data_file.file_format or "").lower()
-                          == "puffin"]
-                pair_parts = []
-                if pq_pos:
-                    pair_parts.append(
-                        spark.read.schema(pd_schema).parquet(
-                            *[e.data_file.file_path for e in pq_pos])
-                        .select(F.regexp_replace("file_path",
-                                                 "^file:/+", "/")
-                                .alias("__fp"),
-                                F.col("pos").alias("__pos")))
-                if dv_pos:
-                    from iceberg_rust_archive_spark.operators.scan import (
-                        dv_pairs_df,
-                    )
-                    pair_parts.append(dv_pairs_df(
-                        spark, [e.data_file for e in dv_pos]))
-                pairs = pair_parts[0]
-                for pp in pair_parts[1:]:
-                    pairs = pairs.unionByName(pp)
+                pairs = pos_delete_pairs(
+                    spark, [e.data_file for e in added_pos])
                 pairs = pairs.dropDuplicates()
-                if dv_pos and s.parent_snapshot_id is not None:
+                if any((e.data_file.file_format or "").lower()
+                       == "puffin" for e in added_pos) \
+                        and s.parent_snapshot_id is not None:
                     # the v3 one-DV-per-file invariant makes a DV
                     # commit MERGE-and-replace: the new blob re-encodes
                     # every position already dead before this commit,
@@ -704,50 +661,27 @@ class Table:
                     # delete pairs so each row's delete surfaces
                     # exactly once, at the commit that killed it.
                     parent = md.snapshots.get(s.parent_snapshot_id)
-                    prior_pq, prior_dv = [], []
-                    if parent is not None:
+                    prior_files = [] if parent is None else [
+                        pe.data_file
                         for entries in read_manifests(
-                                [m.manifest_path for m in
-                                 read_manifest_list(
-                                     parent.manifest_list)]):
-                            for pe in entries:
-                                if pe.status == STATUS_DELETED \
-                                        or pe.data_file.content \
-                                        != CONTENT_POSITION_DELETES:
-                                    continue
-                                if (pe.data_file.file_format
-                                        or "").lower() == "puffin":
-                                    prior_dv.append(pe.data_file)
-                                else:
-                                    prior_pq.append(pe.data_file)
-                    prior_parts = []
-                    if prior_pq:
-                        prior_parts.append(
-                            spark.read.schema(pd_schema).parquet(
-                                *[f.file_path for f in prior_pq])
-                            .select(F.regexp_replace(
-                                "file_path", "^file:/+", "/")
-                                .alias("__fp"),
-                                F.col("pos").alias("__pos")))
-                    if prior_dv:
-                        prior_parts.append(dv_pairs_df(spark, prior_dv))
-                    if prior_parts:
-                        prior = prior_parts[0]
-                        for pp in prior_parts[1:]:
-                            prior = prior.unionByName(pp)
-                        pairs = pairs.join(prior.dropDuplicates(),
-                                           ["__fp", "__pos"],
-                                           "left_anti")
+                            [m.manifest_path for m in read_manifest_list(
+                                parent.manifest_list)])
+                        for pe in entries
+                        if pe.status != STATUS_DELETED
+                        and pe.data_file.content
+                        == CONTENT_POSITION_DELETES]
+                    if prior_files:
+                        pairs = pairs.join(
+                            pos_delete_pairs(spark, prior_files)
+                            .dropDuplicates(),
+                            ["__fp", "__pos"], "left_anti")
                 targets = [r["__fp"] for r in
                            pairs.select("__fp").distinct().collect()]
                 if targets:
-                    victims = (spark.read.schema(spark_schema)
-                               .parquet(*targets)
-                               .withColumn("__fp", _raw_path_col(
-                                   F.col("_metadata.file_path"),
-                                   paths=targets))
-                               .withColumn("__pos",
-                                           F.col("_metadata.row_index"))
+                    victims = (read_data_files(
+                                   spark, spark_schema,
+                                   [(p, "parquet") for p in targets],
+                                   with_pos=True)
                                .join(pairs, ["__fp", "__pos"],
                                      "left_semi")
                                .drop("__fp", "__pos"))
@@ -996,14 +930,16 @@ class Table:
         # costs max(), not the sum; concurrent first-touch of the cache
         # is serialized by Spark's cache lock)
         from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f_dv = ex.submit(write_deletion_vectors, spark, md, hits,
-                             existing_dv)
-            f_da = ex.submit(write_datafiles, spark, md, new,
-                             branch=branch)
-            dv_files, data_files = f_dv.result(), f_da.result()
-        if cached:
-            matched.unpersist()
+        try:
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                f_dv = ex.submit(write_deletion_vectors, spark, md, hits,
+                                 existing_dv)
+                f_da = ex.submit(write_datafiles, spark, md, new,
+                                 branch=branch)
+                dv_files, data_files = f_dv.result(), f_da.result()
+        finally:
+            if cached:
+                matched.unpersist()
         if not dv_files and not data_files:
             return self  # nothing matched — don't commit a snapshot
 

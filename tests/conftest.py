@@ -42,3 +42,18 @@ def no_leaked_caches(spark):
     assert not leaked, f"persisted RDDs left behind: {sorted(leaked)}"
     assert cache.numCachedEntries() <= cached, \
         "cached relations left behind"
+
+
+def file_relations(df) -> list[set[str]]:
+    """The input files of each file-source relation in ``df``'s
+    analyzed plan, as scheme-less paths (the form manifests record).
+    Driver-built ``LocalRelation``s are not counted."""
+    import re
+    it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    out = []
+    while it.hasNext():
+        leaf = it.next()
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            out.append({re.sub(r"^file:/+", "/", p)
+                        for p in leaf.relation().location().inputFiles()})
+    return out

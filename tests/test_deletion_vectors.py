@@ -519,6 +519,46 @@ def test_changelog_respects_eq_delete_partition_scope(spark, catalog):
     assert dels == [(1, 2), (4, 3)], dels
 
 
+def test_changelog_reads_eq_deletes_in_one_key_relation(spark, catalog):
+    """A commit adding several equality-delete files (global and
+    partition-scoped) resolves its delete events through ONE key
+    relation per equality-id set, not one per file, and the scoped
+    file still emits deletes only inside its partition."""
+    import dataclasses
+
+    from iceberg_rust_archive_spark.sources.write import write_datafiles
+    from iceberg_rust_archive_spark.spec.manifest import (
+        CONTENT_EQUALITY_DELETES,
+    )
+    from test_engine import BATCH1, COLS, DAY_SPEC, ORDERS_SCHEMA
+
+    from tests.conftest import file_relations
+
+    t = Table.create(catalog, "db.chg_keys", ORDERS_SCHEMA, DAY_SPEC)
+    t = t.append(spark, spark.createDataFrame(BATCH1, COLS))
+    files = []
+    for ids in ([1], [2, 6], [5]):
+        files += write_datafiles(
+            spark, t.metadata,
+            spark.createDataFrame([(i,) for i in ids], ["id"])
+            .coalesce(1),
+            content=CONTENT_EQUALITY_DELETES, equality_ids=(1,))
+    jan1 = (dt.date(2020, 1, 1) - dt.date(1970, 1, 1)).days
+    # ids 2 and 6 scoped to 2020-01-01: id 6 lives in 2020-02-02
+    files[1] = dataclasses.replace(files[1], partition={"date_day": jan1})
+    txn = t.new_transaction().append_delete_files(files)
+    txn.commit_with_retry(lambda x: x.append_delete_files(files))
+    t = t.refresh()
+    assert sorted(r.id for r in t.scan(spark).collect()) == [3, 4, 6]
+    ch = t.changes(spark)
+    dels = sorted(r["id"] for r in ch.collect()
+                  if r["_change_type"] == "delete")
+    assert dels == [1, 2, 5], dels
+    del_paths = {f.file_path for f in files}
+    key_rels = [fs for fs in file_relations(ch) if fs & del_paths]
+    assert len(files) >= 3 and len(key_rels) == 1, key_rels
+
+
 @pytest.mark.parametrize("to_dv", [False, True])
 def test_changelog_survives_pos_delete_rewrite(spark, catalog, to_dv):
     """A rewrite_position_deletes commit touches only DELETE files

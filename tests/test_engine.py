@@ -783,6 +783,30 @@ def test_update_sql(spark, tmp_path):
     assert eng.sql("SELECT count(*) AS n FROM db.t").collect()[0].n == 4
 
 
+@pytest.mark.parametrize("props", ["", "TBLPROPERTIES "
+                                       "('write.delete.format'='dv')"])
+def test_failed_update_releases_its_cache(spark, tmp_path, props,
+                                          no_leaked_caches):
+    """An UPDATE whose write fails (the equality-delete path and the
+    deletion-vector path) releases the matched-rows cache and leaves
+    the table as it was."""
+    from iceberg_rust_archive_spark.plans.engine import Engine
+
+    eng = Engine(spark, FileCatalog(str(tmp_path / "wh")))
+    eng.sql("CREATE SCHEMA db")
+    eng.sql(f"CREATE TABLE db.t (k BIGINT, v STRING) {props}")
+    eng.sql("INSERT INTO db.t VALUES (1, 'a'), (2, 'b')")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
+    with pytest.raises(Exception, match="boom"):
+        eng.sql("UPDATE db.t SET v = raise_error('boom') WHERE k = 1")
+    # counted before the next SELECT, whose view replacement cascades
+    # an uncache over plans that read the table
+    assert cache.numCachedEntries() == n_cached
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM db.t")
+                  .collect()) == [(1, "a"), (2, "b")]
+
+
 def test_time_travel_sql_and_procedures(spark, tmp_path):
     """VERSION AS OF / TIMESTAMP AS OF suffixes, INSERT OVERWRITE, and
     CALL system.* maintenance procedures through the SQL router."""

@@ -10,7 +10,9 @@ import os
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, file_relations
+
+pytestmark = pytest.mark.usefixtures("no_leaked_caches")
 
 
 def _plan(df) -> str:
@@ -156,15 +158,49 @@ def test_fast_path_resolves_dropped_eq_column(spark, tmp_path):
     assert sorted(tuple(r) for r in df.collect()) == [(1, 10), (3, 30)]
 
 
+def test_mor_scan_file_relations_constant_in_strata(spark, tmp_path):
+    """The merge-on-read scan plans the same file relations at every
+    equality-delete depth: one read of the affected data files, one of
+    the clear files and one delete read per equality-id set. A plan
+    that gained a relation per stratum gained planning time with the
+    delete debt. The sequence tags travel by file path, so the tagged
+    pass reads no _metadata.row_index either."""
+    from iceberg_rust_archive_spark.catalog.file_catalog import FileCatalog
+    from iceberg_rust_archive_spark.plans.engine import Engine
+
+    eng = Engine(spark, FileCatalog(str(tmp_path / "wh")))
+    eng.sql("CREATE SCHEMA db")
+    eng.sql("CREATE TABLE db.strata (k BIGINT, v STRING)")
+    eng.sql("INSERT INTO db.strata VALUES "
+            + ",".join(f"({k}, 'v{k}')" for k in range(8)))
+    counts = []
+    for n in range(1, 7):
+        eng.sql(f"DELETE FROM db.strata WHERE k = {n}")
+        eng.sql(f"INSERT INTO db.strata VALUES ({10 + n}, 'new')")
+        df = eng.load_table("db.strata").scan(spark)
+        counts.append(len(file_relations(df)))
+        assert "row_index" not in _plan(df)
+        assert sorted(r.k for r in df.collect()) == (
+            [0] + list(range(n + 1, 8)) + list(range(11, 11 + n)))
+    assert counts == [3] * 6, counts
+
+
 def test_substring_dedup_plan_shape(spark):
     """ExactSubstr span dedup plans with no cartesian, no window
     functions (the interval merge is an array aggregate), and the
-    window rows cached at the fork (one corpus scan)."""
+    window rows cached at the fork (one corpus scan). The public entry
+    point returns its rollup eagerly and releases that cache (the
+    module's leak guard checks it)."""
     from iceberg_rust_archive_spark.operators import dedup
 
-    df = dedup.substring_dup_spans(spark, SF_DIR)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    wins = dedup._substring_windows(spark, SF_DIR).cache()
+    try:
+        df = dedup._substring_rollup(wins)
+        rows = df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        wins.unpersist()
+    assert dedup.substring_dup_spans(spark, SF_DIR).collect() == rows
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("Window") == 0

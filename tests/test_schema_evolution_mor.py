@@ -12,6 +12,8 @@ from iceberg_rust_archive_spark.spec import (
 )
 from iceberg_rust_archive_spark.table import Table
 
+pytestmark = pytest.mark.usefixtures("no_leaked_caches")
+
 
 def _mk(tmp_path, name="db.t", extra_fields=()):
     cat = FileCatalog(str(tmp_path / "wh"))
