@@ -52,6 +52,9 @@ from pyspark.sql.functions import pandas_udf
 from iceberg_rust_archive_spark.spec.partition import (
     _BUCKET_RE, _TRUNCATE_RE,
 )
+from iceberg_rust_archive_spark.spec.types import (
+    DECIMAL_CONTEXT, decimal_unscaled_bytes,
+)
 
 _EPOCH = _dt.date(1970, 1, 1)
 
@@ -144,9 +147,8 @@ def _single_value_bytes(value, iceberg_type: str) -> bytes:
         return _u.UUID(str(value)).bytes
     if t.startswith("decimal"):
         unscaled = int(Decimal(str(value)).scaleb(
-            int(t.split(",")[1].rstrip(")").strip())))
-        length = max(1, (unscaled.bit_length() + 8) // 8)
-        return unscaled.to_bytes(length, "big", signed=True)
+            int(t.split(",")[1].rstrip(")").strip()), DECIMAL_CONTEXT))
+        return decimal_unscaled_bytes(unscaled)
     raise TypeError(f"type {t!r} cannot be bucketed")
 
 
@@ -174,8 +176,9 @@ def truncate_value(value, width: int, iceberg_type: str):
         # foreign reader computing the spec transform for pruning
         # literals would otherwise mismatch our stored tuples)
         scale = int(iceberg_type.split(",")[1].rstrip(")").strip())
-        unscaled = int(Decimal(str(value)).scaleb(scale))
-        return Decimal(unscaled - unscaled % width).scaleb(-scale)
+        unscaled = int(Decimal(str(value)).scaleb(scale, DECIMAL_CONTEXT))
+        return Decimal(unscaled - unscaled % width).scaleb(
+            -scale, DECIMAL_CONTEXT)
     raise TypeError(f"truncate on {iceberg_type!r}")
 
 

@@ -35,6 +35,10 @@ import json
 import re as _re
 import struct
 
+from iceberg_rust_archive_spark.spec.types import (
+    DECIMAL_CONTEXT, decimal_unscaled_bytes,
+)
+
 _EPOCH = _dt.date(1970, 1, 1)
 
 
@@ -84,14 +88,13 @@ def encode_bound(value, ice_type: str | None) -> bytes:
             return None
     if t.startswith("decimal-binary"):
         scale = _decimal_scale(t)
-        unscaled = _dec.Decimal(str(value)).scaleb(scale)
+        unscaled = _dec.Decimal(str(value)).scaleb(scale, DECIMAL_CONTEXT)
         n = int(unscaled)
         if n != unscaled:
             raise ValueError(
                 f"decimal bound {value!r} not representable at scale "
                 f"{scale} — rounding a bound would un-bound it")
-        length = max(1, (n.bit_length() + 8) // 8)
-        return n.to_bytes(length, "big", signed=True)
+        return decimal_unscaled_bytes(n)
     # value-typed fallback (no schema context / exotic type)
     if isinstance(value, bool):
         return b"\x01" if value else b"\x00"
@@ -127,7 +130,7 @@ def decode_bound(data: bytes, ice_type: str | None):
     if t.startswith("decimal-binary"):
         return _dec.Decimal(
             int.from_bytes(data, "big", signed=True)
-        ).scaleb(-_decimal_scale(t))
+        ).scaleb(-_decimal_scale(t), DECIMAL_CONTEXT)
     if t.startswith("decimal"):
         # pre-r13 manifests: UTF-8 str(value) — parse back to a typed
         # Decimal so old tables' decimal bounds prune too

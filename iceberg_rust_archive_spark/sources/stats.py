@@ -21,6 +21,7 @@ import os
 import struct as _struct
 
 from iceberg_rust_archive_spark.spec.manifest import CONTENT_DATA, DataFile
+from iceberg_rust_archive_spark.spec.types import DECIMAL_CONTEXT
 
 # Sentinel for a row-group stat that exists but cannot be decoded (lazy
 # pyarrow cast failure, unknown physical type, un-decodable bytes) —
@@ -447,7 +448,7 @@ def _decode_stat(raw: bytes, ptype: int, leaf: dict):
         if kind == "date":
             return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
         if kind == "decimal":
-            return _dec.Decimal(v).scaleb(-leaf["scale"])
+            return _dec.Decimal(v).scaleb(-leaf["scale"], DECIMAL_CONTEXT)
         if kind in ("ts_ms", "ts_us", "ts_ns"):
             us = {"ts_ms": v * 1000, "ts_us": v,
                   "ts_ns": v // 1000}[kind]
@@ -467,7 +468,8 @@ def _decode_stat(raw: bytes, ptype: int, leaf: dict):
             return raw.decode("utf-8")
         if kind == "decimal":
             return _dec.Decimal(
-                int.from_bytes(raw, "big", signed=True)).scaleb(-leaf["scale"])
+                int.from_bytes(raw, "big", signed=True)).scaleb(
+                    -leaf["scale"], DECIMAL_CONTEXT)
         return bytes(raw)
     raise ValueError(f"no stats decode for physical type {ptype}")  # INT96
 

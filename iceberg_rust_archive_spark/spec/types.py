@@ -12,6 +12,7 @@ backbone of schema evolution / stats / equality deletes (types.rs:376-389).
 
 from __future__ import annotations
 
+import decimal
 import re
 from dataclasses import dataclass, field
 from typing import Union
@@ -28,6 +29,19 @@ PRIMITIVES = {
 }
 _DECIMAL_RE = re.compile(r"^decimal\((\d+),\s*(\d+)\)$")
 _FIXED_RE = re.compile(r"^fixed\[(\d+)\]$")
+
+# Iceberg decimals carry up to 38 digits; Python's default context
+# rounds to 28. Rescale decimals (scaleb) under this one so no digit
+# is lost.
+DECIMAL_CONTEXT = decimal.Context(prec=100)
+
+
+def decimal_unscaled_bytes(unscaled: int) -> bytes:
+    """Big-endian two's complement of an unscaled decimal in the
+    minimum number of bytes: the spec's hash input and single-value
+    form (-128 is ``80``, not ``ff80``)."""
+    nbits = (unscaled if unscaled >= 0 else ~unscaled).bit_length()
+    return unscaled.to_bytes(nbits // 8 + 1, "big", signed=True)
 
 
 @dataclass(frozen=True)

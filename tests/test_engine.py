@@ -1883,6 +1883,39 @@ def test_decimal_bounds_harvest_roundtrip_and_prune(spark, tmp_path):
         assert t.count(spark, filter=[pred]) == rows
 
 
+def test_wide_decimal_bounds_exact_equality_not_pruned(spark, tmp_path):
+    """A decimal(30,3) value has 30 significant digits; harvesting and
+    encoding its bounds under Python's default 28-digit context rounded
+    999999999999999999999999999.950 up to 10^27, so the stored lower
+    bound sat above the file's only value and an equality filter on it
+    pruned the file and returned nothing."""
+    import decimal
+
+    import pyspark.sql.types as T
+
+    from iceberg_rust_archive_spark.sources.manifests import read_manifest
+
+    cat = FileCatalog(str(tmp_path / "wh"))
+    cat.create_namespace("db")
+    t = Table.create(cat, "db.wide", Schema(0, StructTypeSpec((
+        NestedField(1, "c", "decimal(30,3)", True),))))
+    vals = [decimal.Decimal("999999999999999999999999999.950"),
+            decimal.Decimal("-999999999999999999999999999.999")]
+    t = t.append(spark, spark.createDataFrame(
+        [(v,) for v in vals],
+        T.StructType([T.StructField("c", T.DecimalType(30, 3))])
+    ).coalesce(1))
+    files = [en.data_file
+             for m in read_manifest_list(
+                 t.metadata.current_snapshot().manifest_list)
+             for en in read_manifest(m.manifest_path)]
+    assert [(f.lower_bounds[1], f.upper_bounds[1]) for f in files] \
+        == [(vals[1], vals[0])]
+    for v in vals:
+        rows = t.scan(spark, filter=[Pred("c", "=", v)]).collect()
+        assert [r["c"] for r in rows] == [v]
+
+
 def test_global_eq_delete_rides_unpartitioned_spec(spark, tmp_path):
     """Spec conformance (r12 advice): a GLOBAL equality delete on a
     partitioned table is expressed via an UNPARTITIONED partition spec

@@ -928,3 +928,43 @@ def test_vectorized_decimal_uuid_matches_scalar_hypothesis():
 
     check_dec()
     check_uuid()
+
+
+def test_decimal_unscaled_bytes_minimal_and_exact():
+    """Decimal hash input and bound bytes are the MINIMAL big-endian
+    two's complement of the exact unscaled value: -2^(8k-1) fits in k
+    bytes (-1.28 is ``80``, not ``ff80``), and a 30-digit decimal is
+    rescaled without the default context's 28-digit rounding. The
+    vectorized bucket path agrees with the scalar one on both."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from iceberg_rust_archive_spark.functions.transforms import (
+        _murmur3_32_varlen, _series_to_ragged_bytes, _single_value_bytes,
+        murmur3_32, truncate_value,
+    )
+    from iceberg_rust_archive_spark.sources.manifest_avro import (
+        decode_bound, encode_bound,
+    )
+
+    cases = [("-1.28", "decimal(9,2)", "80"),
+             ("-327.68", "decimal(9,2)", "8000"),
+             ("-1.29", "decimal(9,2)", "ff7f"),
+             ("1.28", "decimal(9,2)", "0080"),
+             ("-0.01", "decimal(9,2)", "ff"),
+             ("0", "decimal(9,2)", "00"),
+             ("999999999999999999999999999.950", "decimal(30,3)",
+              (10 ** 30 - 50).to_bytes(13, "big", signed=True).hex())]
+    for v, t, want in cases:
+        assert _single_value_bytes(Decimal(v), t).hex() == want, v
+        bt = t.replace("decimal", "decimal-binary")
+        assert encode_bound(Decimal(v), bt).hex() == want, v
+        assert decode_bound(bytes.fromhex(want), bt) == Decimal(v), v
+        buf, offs, _ = _series_to_ragged_bytes(
+            pd.Series([Decimal(v)], dtype=object), t)
+        assert _murmur3_32_varlen(buf, offs).tolist() == [
+            murmur3_32(bytes.fromhex(want))], v
+    assert truncate_value(Decimal("999999999999999999999999999.950"), 10,
+                          "decimal(30,3)") \
+        == Decimal("999999999999999999999999999.950")

@@ -23,7 +23,7 @@ import datetime as dt
 import itertools
 from collections import Counter
 import uuid as uuid_mod
-from decimal import Decimal
+from decimal import Context, Decimal
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -46,6 +46,11 @@ SLOW = settings(
 
 _UNIQ = itertools.count()
 
+# decimal(30,3) carries 30 significant digits; the default decimal
+# context rounds to 28, which would turn 10**30 - 50 into 10**27 (31
+# digits, out of the column's range). Scale and normalize exactly.
+_EXACT = Context(prec=64)
+
 # value strategy per iceberg type. Dates span past datetime64[ns]'s
 # 1677-2262 window on purpose — the vectorized date-bucket carrier
 # must hand sentinel dates (9999-12-31) to the scalar path, not NULL
@@ -66,9 +71,9 @@ _VALUES = {
         dt.datetime(1900, 1, 1), dt.datetime(2200, 1, 1)).map(
             lambda d: d.replace(tzinfo=dt.timezone.utc)),
     "decimal(9,2)": st.integers(-(10 ** 9) + 1, 10 ** 9 - 1).map(
-        lambda u: Decimal(u).scaleb(-2)),
+        lambda u: Decimal(u).scaleb(-2, _EXACT)),
     "decimal(30,3)": st.integers(-(10 ** 30) + 1, 10 ** 30 - 1).map(
-        lambda u: Decimal(u).scaleb(-3)),
+        lambda u: Decimal(u).scaleb(-3, _EXACT)),
     "uuid": st.integers(0, (1 << 128) - 1).map(
         lambda i: str(uuid_mod.UUID(int=i))),
 }
@@ -140,7 +145,7 @@ def _norm(v, ice_t):
     if isinstance(v, dt.date):
         return ("d", v.isoformat())
     if isinstance(v, Decimal):
-        return ("dec", str(v.normalize()))
+        return ("dec", str(v.normalize(_EXACT)))
     if isinstance(v, float):
         return ("f", v)
     if isinstance(v, (bytes, bytearray)):
