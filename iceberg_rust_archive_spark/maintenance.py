@@ -190,6 +190,7 @@ def rewrite_partition(spark: SparkSession, table: Table,
     from iceberg_rust_archive_spark.sources.manifests import (
         read_manifest_list, read_manifests,
     )
+    from iceberg_rust_archive_spark.sources.readers import is_dv
     from iceberg_rust_archive_spark.sources.write import write_datafiles
     from iceberg_rust_archive_spark.spec.manifest import (
         CONTENT_DATA, CONTENT_EQUALITY_DELETES, CONTENT_POSITION_DELETES,
@@ -226,9 +227,7 @@ def rewrite_partition(spark: SparkSession, table: Table,
                 data.append((e.data_file, sp))
             elif c == CONTENT_EQUALITY_DELETES:
                 eq_dels.append(e.data_file)
-            elif c == CONTENT_POSITION_DELETES \
-                    and (e.data_file.file_format or "").lower() \
-                    == "puffin":
+            elif c == CONTENT_POSITION_DELETES and is_dv(e.data_file):
                 dvs.append(e.data_file)
 
     scope_tuples = set()
@@ -695,6 +694,7 @@ def rewrite_position_deletes(spark: SparkSession, table: Table,
         read_manifest_list, read_manifests, write_manifest,
         write_manifest_list,
     )
+    from iceberg_rust_archive_spark.sources.readers import is_dv, norm_path
     from iceberg_rust_archive_spark.sources.write import (
         write_position_deletes,
     )
@@ -721,7 +721,7 @@ def rewrite_position_deletes(spark: SparkSession, table: Table,
             if e.status == STATUS_DELETED:
                 continue
             if e.data_file.content == CONTENT_POSITION_DELETES:
-                if (e.data_file.file_format or "").lower() == "puffin":
+                if is_dv(e.data_file):
                     dv_files.append(e.data_file)
                 else:
                     pos_files.append(e.data_file)
@@ -736,7 +736,6 @@ def rewrite_position_deletes(spark: SparkSession, table: Table,
         return table  # nothing to merge
 
     from iceberg_rust_archive_spark.operators.scan import pos_delete_pairs
-    from iceberg_rust_archive_spark.sources.readers import norm_path
     live_df = spark.createDataFrame(
         [(norm_path(p),) for p in live_paths], "file_path string")
     pairs = (pos_delete_pairs(spark, pos_files + dv_files)

@@ -27,6 +27,7 @@ import json
 from collections import defaultdict
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,7 +40,7 @@ from iceberg_rust_archive_spark.sources.manifests import (
     read_manifest_list, read_manifests,
 )
 from iceberg_rust_archive_spark.sources.readers import (
-    norm_format, norm_path, read_data_files,
+    is_dv, norm_path, read_data_files,
 )
 from iceberg_rust_archive_spark.spec.manifest import (
     CONTENT_DATA, CONTENT_EQUALITY_DELETES, CONTENT_POSITION_DELETES,
@@ -95,13 +96,11 @@ _DV_PAIRS_CACHE: "_ODict[tuple, tuple]" = _ODict()
 _DV_PAIRS_CACHE_MAX = 8
 
 
-def dv_pairs_df(spark: SparkSession, dv_files: list,
-                path_col: str = "__fp", pos_col: str = "__pos"
-                ) -> DataFrame:
+def dv_pairs_df(spark: SparkSession, dv_files: list) -> DataFrame:
     """Decode deletion-vector DataFiles (content=1,
-    file_format='puffin') into a (path, pos) pair DataFrame. Small DV
-    sets (≤ DV_DRIVER_DECODE_MAX_BYTES of blob bytes) decode DRIVER-
-    side into one local DataFrame; larger sets ship (puffin_path,
+    file_format='puffin') into a ``(__fp, __pos)`` pair DataFrame.
+    Small DV sets (≤ DV_DRIVER_DECODE_MAX_BYTES of blob bytes) decode
+    DRIVER-side into one local DataFrame; larger sets ship (puffin_path,
     offset, length, referenced_file) descriptors to executors and
     expand in parallel where the anti-join needs them."""
     from pyspark.sql.types import (
@@ -109,14 +108,14 @@ def dv_pairs_df(spark: SparkSession, dv_files: list,
     )
     descs = [(d.file_path, d.content_offset, d.content_size_in_bytes,
               d.referenced_data_file) for d in dv_files]
-    schema = StructType([StructField(path_col, StringType()),
-                         StructField(pos_col, LongType())])
+    schema = StructType([StructField("__fp", StringType()),
+                         StructField("__pos", LongType())])
     if not descs:
         return local_frame(spark, [], schema)
     total = sum((sz or 0) for _p, _o, sz, _r in descs)
     if total <= DV_DRIVER_DECODE_MAX_BYTES:
         import weakref
-        key = (tuple(descs), path_col, pos_col)
+        key = tuple(descs)
         ent = _DV_PAIRS_CACHE.get(key)
         if ent is not None and ent[0]() is spark:
             _DV_PAIRS_CACHE.move_to_end(key)
@@ -135,8 +134,8 @@ def dv_pairs_df(spark: SparkSession, dv_files: list,
         import pyarrow as pa
         rows = sorted(pairs)
         df = local_frame(spark, pa.table({
-            path_col: pa.array([r[0] for r in rows], pa.string()),
-            pos_col: pa.array([r[1] for r in rows], pa.int64())}),
+            "__fp": pa.array([r[0] for r in rows], pa.string()),
+            "__pos": pa.array([r[1] for r in rows], pa.int64())}),
             schema)
         _DV_PAIRS_CACHE[key] = (weakref.ref(spark), df)
         while len(_DV_PAIRS_CACHE) > _DV_PAIRS_CACHE_MAX:
@@ -160,28 +159,31 @@ def dv_pairs_df(spark: SparkSession, dv_files: list,
     return spark.createDataFrame(rdd, schema)
 
 
-def pos_delete_pairs(spark: SparkSession, delete_files: list
-                     ) -> DataFrame:
+def pos_delete_pairs(spark: SparkSession, delete_files: list,
+                     with_format: bool = False) -> DataFrame:
     """``(__fp, __pos)`` pairs named by position-delete DataFiles:
     parquet position-delete files and deletion vectors (puffin) in one
-    frame, not deduplicated. An empty list yields an empty frame."""
+    frame, not deduplicated. ``with_format`` adds ``__fmt``, the
+    format of the file that named the pair. An empty list yields an
+    empty frame."""
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )
-    pq = [f.file_path for f in delete_files
-          if norm_format(f.file_format) != "puffin"]
-    dv = [f for f in delete_files if norm_format(f.file_format) == "puffin"]
-    parts = []
+    pq = [f.file_path for f in delete_files if not is_dv(f)]
+    dv = [f for f in delete_files if is_dv(f)]
+    parts = {}
     if pq:
-        parts.append(
+        parts["parquet"] = (
             spark.read.schema(StructType([
                 StructField("file_path", StringType()),
                 StructField("pos", LongType())])).parquet(*pq)
             .select(F.regexp_replace("file_path", "^file:/+", "/")
                     .alias("__fp"), F.col("pos").alias("__pos")))
     if dv or not parts:
-        parts.append(dv_pairs_df(spark, dv))
-    return reduce(DataFrame.unionByName, parts)
+        parts["puffin"] = dv_pairs_df(spark, dv)
+    return reduce(DataFrame.unionByName, [
+        df.withColumn("__fmt", F.lit(fmt)) if with_format else df
+        for fmt, df in parts.items()])
 
 
 def eq_delete_keys(spark: SparkSession, fields: list, entries: list,
@@ -191,8 +193,9 @@ def eq_delete_keys(spark: SparkSession, fields: list, entries: list,
     ``__del_seq``, the row's delete sequence number; ``scope`` (entry →
     partition key, None for a global delete) adds ``__del_pk``. Both
     tags are literal-map lookups on the row's file path, so the plan
-    stays one relation however many sequence numbers the files carry.
-    A delete file planned twice applies at its newest sequence."""
+    stays one relation however many sequence numbers the files carry;
+    a global file has no key in the scope map and looks up NULL. A
+    delete file planned twice applies at its newest sequence."""
     tags: dict[str, tuple] = {}
     for e in sorted(entries, key=lambda e: e.sequence_number or 0):
         tags[norm_path(e.data_file.file_path)] = (
@@ -203,15 +206,22 @@ def eq_delete_keys(spark: SparkSession, fields: list, entries: list,
                       for e in entries),
         with_fp=seq or scope is not None)
 
-    def by_path(i):
-        return F.element_at(F.create_map(*[
-            F.lit(x) for fp, t in tags.items() for x in (fp, t[i])]),
+    def by_path(pairs):
+        # keys and values each ship as ONE numpy-array literal: a map of
+        # per-file F.lit pairs costs two py4j calls per delete file
+        ks, vs = zip(*pairs) if pairs else ((), ())
+        return F.element_at(F.map_from_arrays(
+            F.lit(np.array(ks, dtype=str)), F.lit(np.array(vs))),
             F.col("__fp"))
     cols = [F.col(f.name).alias(f"__del_{f.name}") for f in fields]
     if seq:
-        cols.append(by_path(0).alias("__del_seq"))
+        cols.append(by_path([(fp, t[0]) for fp, t in tags.items()])
+                    .alias("__del_seq"))
     if scope is not None:
-        cols.append(by_path(1).cast("string").alias("__del_pk"))
+        # a global delete file has no key in the map: NULL scope
+        cols.append(by_path([(fp, t[1]) for fp, t in tags.items()
+                             if t[1] is not None])
+                    .cast("string").alias("__del_pk"))
     return d.select(*cols)
 
 

@@ -34,6 +34,12 @@ def norm_format(fmt: str | None) -> str:
     return (fmt or "parquet").strip().lower()
 
 
+def is_dv(data_file) -> bool:
+    """True for a deletion vector: a position-delete DataFile whose
+    file is a puffin blob, not a parquet pair file."""
+    return norm_format(data_file.file_format) == "puffin"
+
+
 def strip_field_ids(spark_schema):
     """Rebuild the schema without parquet field-id metadata → Spark
     resolves columns BY NAME. Used when the table carries

@@ -19,7 +19,7 @@ from iceberg_rust_archive_spark.spec.schema import Schema
 from iceberg_rust_archive_spark.spec.sort import SortOrder
 from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
 from iceberg_rust_archive_spark.sources.readers import (
-    norm_path, read_data_files,
+    is_dv, norm_path, read_data_files,
 )
 from iceberg_rust_archive_spark.sources.write import write_datafiles
 from iceberg_rust_archive_spark.spec.types import iceberg_to_spark_type
@@ -527,8 +527,7 @@ class Table:
                     ins = _project_by_id(ins, cs, schema)
                 piece = _tag(ins, "insert", s)
             if (added_deletes
-                    or any((e.data_file.file_format or "").lower()
-                           == "puffin" for e in added_pos)) \
+                    or any(is_dv(e.data_file) for e in added_pos)) \
                     and s.parent_snapshot_id is not None \
                     and s.parent_snapshot_id not in md.snapshots:
                 # delete events resolve against the PARENT state
@@ -648,8 +647,7 @@ class Table:
                 pairs = pos_delete_pairs(
                     spark, [e.data_file for e in added_pos])
                 pairs = pairs.dropDuplicates()
-                if any((e.data_file.file_format or "").lower()
-                       == "puffin" for e in added_pos) \
+                if any(is_dv(e.data_file) for e in added_pos) \
                         and s.parent_snapshot_id is not None:
                     # the v3 one-DV-per-file invariant makes a DV
                     # commit MERGE-and-replace: the new blob re-encodes
@@ -783,8 +781,7 @@ class Table:
                 if e.status == STATUS_DELETED:
                     continue
                 if (e.data_file.content == CONTENT_POSITION_DELETES
-                        and (e.data_file.file_format or "").lower()
-                        == "puffin"):
+                        and is_dv(e.data_file)):
                     existing_dv.append(e.data_file)
         # Bound the hit plan to CANDIDATE files: parse the predicate
         # into pruning Preds so manifest + file bounds cut the file
@@ -907,8 +904,7 @@ class Table:
                 if e.status == STATUS_DELETED:
                     continue
                 if (e.data_file.content == CONTENT_POSITION_DELETES
-                        and (e.data_file.file_format or "").lower()
-                        == "puffin"):
+                        and is_dv(e.data_file)):
                     existing_dv.append(e.data_file)
         cols = [f.name for f in md.current_schema(branch).fields]
         sets = {k.lower(): v for k, v in set_exprs.items()}
@@ -1148,54 +1144,24 @@ class Table:
                 rows, "partition string, record_count long, "
                       "file_count int, total_size_bytes long")
         if kind == "position_deletes":
-            # live position-delete state as rows: parquet pair files
-            # read directly, deletion vectors decoded executor-side —
-            # the forensic view of exactly which (file, ordinal) pairs
-            # the next scan will anti-join
+            # live position-delete state as rows, through the reader
+            # the scan uses — the forensic view of exactly which
+            # (file, ordinal) pairs the next scan will anti-join
             from pyspark.sql import functions as F
-            from pyspark.sql.types import (
-                LongType, StringType, StructField, StructType,
-            )
 
-            from iceberg_rust_archive_spark.operators.scan import (
-                dv_pairs_df,
-            )
             from iceberg_rust_archive_spark.spec.manifest import (
                 CONTENT_POSITION_DELETES, STATUS_DELETED,
             )
-            pq_paths, dvs = [], []
-            for es in read_manifests([m.manifest_path for m in mlist]):
-                for e in es:
-                    if e.status == STATUS_DELETED or \
-                            e.data_file.content != \
-                            CONTENT_POSITION_DELETES:
-                        continue
-                    if (e.data_file.file_format or "").lower() \
-                            == "puffin":
-                        dvs.append(e.data_file)
-                    else:
-                        pq_paths.append(e.data_file.file_path)
-            schema = StructType([
-                StructField("file_path", StringType()),
-                StructField("pos", LongType()),
-                StructField("delete_format", StringType())])
-            parts = []
-            if pq_paths:
-                parts.append(
-                    spark.read.schema(StructType(schema.fields[:2]))
-                    .parquet(*pq_paths)
-                    .withColumn("delete_format", F.lit("parquet")))
-            if dvs:
-                parts.append(
-                    dv_pairs_df(spark, dvs, path_col="file_path",
-                                pos_col="pos")
-                    .withColumn("delete_format", F.lit("puffin")))
-            if not parts:
-                return spark.createDataFrame([], schema)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+            files = [e.data_file
+                     for es in read_manifests(
+                         [m.manifest_path for m in mlist])
+                     for e in es
+                     if e.status != STATUS_DELETED
+                     and e.data_file.content == CONTENT_POSITION_DELETES]
+            return pos_delete_pairs(spark, files, with_format=True) \
+                .select(F.col("__fp").alias("file_path"),
+                        F.col("__pos").alias("pos"),
+                        F.col("__fmt").alias("delete_format"))
         if kind == "refs":
             rows = [(name, r.ref_type, r.snapshot_id,
                      r.min_snapshots_to_keep, r.max_snapshot_age_ms,

@@ -185,22 +185,27 @@ def test_mor_scan_file_relations_constant_in_strata(spark, tmp_path):
     assert counts == [3] * 6, counts
 
 
-def test_substring_dedup_plan_shape(spark):
+def test_substring_dedup_plan_shape(spark, monkeypatch):
     """ExactSubstr span dedup plans with no cartesian, no window
     functions (the interval merge is an array aggregate), and the
-    window rows cached at the fork (one corpus scan). The public entry
-    point returns its rollup eagerly and releases that cache (the
-    module's leak guard checks it)."""
+    window rows cached at the fork (one corpus scan). The plan is the
+    one the public entry point materializes; it returns that rollup
+    eagerly and releases the cache (the module's leak guard checks
+    it)."""
     from iceberg_rust_archive_spark.operators import dedup
 
-    wins = dedup._substring_windows(spark, SF_DIR).cache()
-    try:
-        df = dedup._substring_rollup(wins)
-        rows = df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        wins.unpersist()
-    assert dedup.substring_dup_spans(spark, SF_DIR).collect() == rows
+    plans = []
+    real = dedup.materialize_local
+
+    def spy(spark_, df, *args):
+        out = real(spark_, df, *args)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(dedup, "materialize_local", spy)
+    dedup.substring_dup_spans(spark, SF_DIR).collect()
+    assert len(plans) == 1
+    plan = plans[0]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("Window") == 0
