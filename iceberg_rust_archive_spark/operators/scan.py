@@ -446,6 +446,7 @@ def scan(spark: SparkSession, md: TableMetadata,
          from_snapshot_id: int | None = None,
          report: dict | None = None,
          expose_pos: bool = False,
+         expose_fp: bool = False,
          with_row_id: bool = False,
          file_subset: set | None = None) -> DataFrame:
     """``report``, when passed, is filled in place with planning
@@ -461,6 +462,8 @@ def scan(spark: SparkSession, md: TableMetadata,
     ``Table.delete_where_pos`` so the hit set is computed over the full
     merge-on-read resolution — a row already killed by a live equality
     or position delete can never produce a fresh (path, pos) pair.
+    ``expose_fp`` keeps ``__fp`` alone (any file format; no row
+    ordinal is read).
 
     ``with_row_id`` materializes the v3 row-lineage ``_row_id`` column
     (spec §Row Lineage): each data file's assigned first-row-id plus
@@ -550,6 +553,10 @@ def scan(spark: SparkSession, md: TableMetadata,
     # table.rs:422-425); Spark's _metadata.row_index virtual column makes
     # merge-on-read natural, so we support it as a parity superset.
     has_pos = bool(pos_delete_entries) or expose_pos or with_row_id
+    # helper columns the caller keeps in the output
+    kept = ["__fp", "__pos"] if expose_pos else ["__fp"] if expose_fp \
+        else []
+    dropped = [c for c in ("__fp", "__pos") if c not in kept]
 
     # tables holding add_files-registered external files (no embedded
     # field ids) carry the name-mapping property → resolve BY NAME
@@ -619,7 +626,8 @@ def scan(spark: SparkSession, md: TableMetadata,
             return read_data_files(
                 spark, spark_schema,
                 [(e.data_file.file_path, e.data_file.file_format)
-                 for e in es], with_fp=with_fp, with_pos=has_pos,
+                 for e in es], with_fp=with_fp or expose_fp,
+                with_pos=has_pos,
                 by_name=by_name)
         if not dflt_fields:
             return _read(entries)
@@ -668,8 +676,7 @@ def scan(spark: SparkSession, md: TableMetadata,
             # carries each killed (file, pos) once
             pairs = pairs.dropDuplicates(["__fp", "__pos"])
         d = d.join(pairs, on=["__fp", "__pos"], how="left_anti")
-        return d if (expose_pos or with_row_id) \
-            else d.drop("__fp", "__pos")
+        return d if with_row_id else d.drop(*dropped)
 
     # A5: equality-delete merge-on-read (table.rs:498-531). An equality
     # delete at sequence s kills rows of data files with sequence < s
@@ -794,17 +801,19 @@ def scan(spark: SparkSession, md: TableMetadata,
                                | (F.col("__del_pk") == F.col("__pk")))
             d = d.join(keys, on=cond, how="left_anti")
         if tagged:
-            d = d.drop("__dseq", "__pk", *([] if has_pos else ["__fp"]))
+            d = d.drop("__dseq", "__pk",
+                       *([] if has_pos or expose_fp else ["__fp"]))
         parts.append(d)
     if clear:
         parts.append(read_data(clear))
 
     if not parts:
         df = local_frame(spark, [], spark_schema)
-        if expose_pos or with_row_id:
+        if kept or with_row_id:
             from pyspark.sql.types import LongType, StringType
-            df = (df.withColumn("__fp", F.lit(None).cast(StringType()))
-                    .withColumn("__pos", F.lit(None).cast(LongType())))
+            df = df.withColumn("__fp", F.lit(None).cast(StringType()))
+            if expose_pos or with_row_id:
+                df = df.withColumn("__pos", F.lit(None).cast(LongType()))
     else:
         df = reduce(DataFrame.unionByName, parts)
         if pos_delete_entries:
@@ -838,15 +847,13 @@ def scan(spark: SparkSession, md: TableMetadata,
                 .withColumnRenamed("__file_seq",
                                    "_last_updated_sequence_number")
                 .drop("__rid_base"))
-        if not expose_pos:
-            df = df.drop("__fp", "__pos")
+        df = df.drop(*dropped)
 
     residual = to_spark_filter(preds)
     if residual is not None:
         df = df.filter(residual)
     if columns:
-        extra = (["__fp", "__pos"] if expose_pos else []) \
-            + (["_row_id", "_last_updated_sequence_number"]
+        extra = kept + (["_row_id", "_last_updated_sequence_number"]
                if with_row_id else [])
         df = df.select(*(list(columns) + extra) if extra else columns)
 

@@ -1,16 +1,36 @@
 """Partitioned Parquet write path (SURVEY §2 A10-A13, A16).
 
 The reference splits Arrow batches per transformed partition value and
-runs one writer task per partition (arrow/partition.rs:57-148,
-write.rs:215-256). The Spark-native equivalent: derive the transform
-columns, ``repartition`` on them (one shuffle — co-locates each partition's
-rows), and let the parquet writer's ``partitionBy`` lay out
-``<location>/data/<txid>/<p>=<v>/...``. File rolling is Spark's
-``maxRecordsPerFile`` (the reference rolls on real bytes at 512 MB,
-write.rs:66,330-370; Spark's only knob is a record cap, so we derive it
-by parquet-encoding a bounded row sample with the table's codec and
-dividing the byte target by the measured row width — see
-``_records_per_file``).
+writes each partition's files from Arrow (arrow/partition.rs:57-148,
+write.rs:215-256). ``write_datafiles`` has two writers behind one shared
+frame: ``align_to_schema``, the ``_p_*`` partition columns (computed in
+Spark by ``transform_column``, with the empty-string and NULL markers
+and the equality-delete scoping rules), the hive-style
+``<location>/data/<txid>/<p>=<v>/...`` layout (or hashed object-storage
+paths), and, after the files exist, partition-tuple parsing, the footer
+harvest and the removal of empty files.
+
+* **Driver tier** (``_write_arrow``). When the optimizer's size estimate
+  of the frame is at or under ``spark.sql.autoBroadcastJoinThreshold``
+  — the bound Spark itself uses to collect a relation to the driver for
+  a broadcast — the frame is collected once with ``toArrow()`` and
+  pyarrow writes the files: no shuffle, no row-width sample job, no
+  write job. Each column is dictionary-encoded only when parquet-mr
+  would keep its dictionary (``_dictionary_columns``), float columns get
+  exact NaN counts, and a failed collect (``spark.driver.maxResultSize``
+  on an under-estimated frame) falls back to Spark's writer.
+* **Spark's writer** (``_write_spark``): ``repartition`` on the
+  partition columns (one shuffle that co-locates each partition's
+  rows), then the parquet/ORC writer's ``partitionBy``. File rolling is
+  Spark's ``maxRecordsPerFile`` (the reference rolls on real bytes at
+  512 MB, write.rs:66,330-370; Spark's only knob is a record cap, so we
+  derive it by parquet-encoding a bounded row sample with the table's
+  codec and dividing the byte target by the measured row width — see
+  ``_records_per_file``; the driver tier rolls on the same cap). It is
+  the only writer for frames over the bound, ORC output, tables with
+  bloom-filter properties, codecs other than zstd/snappy/gzip/none and
+  column types outside ``_ARROW_TYPES`` (nested types, variant, binary,
+  uuid, fixed, time).
 
 Identity-transform source columns stay *in* the data files (partition dirs
 carry derived ``_p_*`` names), so reading a file list directly — without
@@ -23,6 +43,7 @@ from __future__ import annotations
 import os
 import urllib.parse
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +54,10 @@ from iceberg_rust_archive_spark.spec.manifest import (
     CONTENT_DATA, CONTENT_EQUALITY_DELETES, DataFile,
 )
 from iceberg_rust_archive_spark.spec.schema import Schema
-from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
+from iceberg_rust_archive_spark.spec.table_metadata import (
+    DEFAULT_TARGET_FILE_SIZE, PROP_COMPRESSION, PROP_COMPRESSION_LEVEL,
+    PROP_ORC_COMPRESSION, PROP_TARGET_FILE_SIZE, TableMetadata,
+)
 from iceberg_rust_archive_spark.spec.types import spark_schema_for
 from iceberg_rust_archive_spark.sources.stats import (
     harvest_files, writer_nan_in_max,
@@ -53,10 +77,21 @@ _WIDTH_SAMPLE_ROWS = 512
 # directory the file lands in.
 _WIDTH_CACHE: dict[str, int] = {}
 
+# Column types the driver tier writes (each covered by the writer
+# differential test); decimals of any precision as FIXED_LEN_BYTE_ARRAY
+_ARROW_TYPES = frozenset({"boolean", "int", "long", "float", "double",
+                          "date", "timestamp", "timestamptz", "string"})
+# Spark codec name → pyarrow's, for the codecs the driver tier writes
+_ARROW_CODECS = {"zstd": "zstd", "snappy": "snappy", "gzip": "gzip",
+                 "uncompressed": "none", "none": "none"}
+# parquet-mr's default dictionary page limit (parquet.dictionary.page.size)
+_DICTIONARY_PAGE_BYTES = 1 << 20
+_BLOOM_PREFIX = "write.parquet.bloom-filter-enabled.column."
+
 
 def _records_per_file(df: DataFrame, target_bytes: int, codec: str,
                       cache_key: str | None = None,
-                      fmt: str = "parquet") -> int:
+                      fmt: str = "parquet", sample=None) -> int:
     """Byte-based file rolling through Spark's record-count knob: encode
     a bounded sample of ``df`` to parquet in-driver (same codec the real
     write uses) and derive ``maxRecordsPerFile = target / measured_width``.
@@ -68,7 +103,9 @@ def _records_per_file(df: DataFrame, target_bytes: int, codec: str,
     wide document rows and confetti files on skinny ones. The sample
     under-compresses relative to a full 512 MB row group (smaller
     dictionaries), so the cap errs toward smaller files — the safe
-    direction for executor memory at scale."""
+    direction for executor memory at scale. ``sample``: rows of ``df``
+    already on the driver (a pyarrow Table), measured instead of
+    running the sample job."""
     if cache_key is not None and cache_key in _WIDTH_CACHE:
         width = _WIDTH_CACHE[cache_key]
     else:
@@ -103,7 +140,8 @@ def _records_per_file(df: DataFrame, target_bytes: int, codec: str,
             return max(128, target_bytes // width)
         try:
             import io
-            tbl = df.limit(_WIDTH_SAMPLE_ROWS).toArrow()
+            tbl = df.limit(_WIDTH_SAMPLE_ROWS).toArrow() \
+                if sample is None else sample
             if tbl.num_rows == 0:
                 return max(10_000, target_bytes // 64)
             buf = io.BytesIO()
@@ -200,6 +238,40 @@ def _partition_value_from_str(s: str, transform: str, source_type: str):
     return s  # decimal-as-string / other
 
 
+def _parse_partition(rel: str, spec_fields) -> dict:
+    """The partition tuple of a hive-style relative directory
+    (``_p_<name>=<value>/...``)."""
+    partition: dict = {}
+    for seg in rel.split(os.sep):
+        if "=" not in seg:
+            continue
+        k, v = seg.split("=", 1)
+        name = k[len(_P_PREFIX):]
+        pf, src = next((t for t in spec_fields if t[0].name == name),
+                       (None, None))
+        if pf is None:
+            continue
+        partition[name] = _partition_value_from_str(
+            v, pf.transform,
+            src.field_type if isinstance(src.field_type, str)
+            else "string")
+    return partition
+
+
+# Characters Spark escapes in a partition directory value
+# (ExternalCatalogUtils.escapePathName), as %XX
+_PATH_ESCAPES = frozenset([chr(c) for c in range(0x20)]
+                          + list('"#%\'*/:=?\\\x7f{[]^'))
+
+
+def _escape_path_name(v: str | None) -> str:
+    """Spark's directory rendering of a string partition value."""
+    if v is None or v == "":
+        return "__HIVE_DEFAULT_PARTITION__"
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c
+                   for c in v)
+
+
 def align_to_schema(df: DataFrame, schema: Schema) -> DataFrame:
     """Project + cast input columns to the table schema (by name).
     Mirrors the reference's schema equality check on insert
@@ -249,8 +321,12 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
                     content: int = CONTENT_DATA,
                     equality_ids: tuple[int, ...] | None = None,
                     branch: str | None = None) -> list[DataFile]:
-    """Write ``df`` as new Parquet files under the table location and
-    return harvested DataFile records (not yet committed)."""
+    """Write ``df`` as new data or equality-delete files under the table
+    location and return harvested DataFile records (not yet committed).
+    The files come from the driver tier (``_write_arrow``) when the
+    frame is provably small, else from Spark's writer
+    (``_write_spark``); everything before and after that step is
+    shared."""
     from iceberg_rust_archive_spark.session import ensure_read_confs
     ensure_read_confs(spark)  # parquet field-id embed on any caller's session
     schema = md.current_schema(branch)
@@ -258,8 +334,9 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
         schema = schema.project(list(equality_ids))  # write.rs:163-168
     spec = md.default_spec()
     df = align_to_schema(df, schema)
+    data_df = df
     target_bytes = int(md.properties.get(
-        "write.target-file-size-bytes", 512_000_000))
+        PROP_TARGET_FILE_SIZE, DEFAULT_TARGET_FILE_SIZE))
     # Data-file format follows ``write.format.default`` (Iceberg table
     # property; the spec records a format PER FILE so flipping it mid-
     # table is legal — the scan reads each file under its own format).
@@ -279,16 +356,22 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
                 "defines variant physical encoding for parquet only); "
                 "unset write.format.default=orc for this table")
     codec = md.properties.get(
-        f"write.{fmt}.compression-codec", "zstd")
-    # measure row width BEFORE the partition shuffle (the sample limit
-    # then short-circuits the scan) and without the _p_* columns, which
-    # partitionBy routes into directory names, not file bytes
+        PROP_COMPRESSION if fmt == "parquet" else PROP_ORC_COMPRESSION,
+        "zstd")
+    # the zstd level (the one codec both writers take a level for)
+    level = md.properties.get(PROP_COMPRESSION_LEVEL) \
+        if fmt == "parquet" and codec == "zstd" else None
+    level = int(level) if level is not None else None
+    # row width is measured without the _p_* columns, which become
+    # directory names, not file bytes
     schema_fp = ",".join(f"{f.name}:{f.dataType.simpleString()}"
                          for f in df.schema.fields)
-    records_cap = _records_per_file(
-        df, target_bytes, codec,
-        cache_key=f"{schema_fp}#{codec}#{content}#{target_bytes}#{fmt}",
-        fmt=fmt)
+    width_key = f"{schema_fp}#{codec}#{content}#{target_bytes}#{fmt}"
+
+    def records_cap(sample=None) -> int:
+        return _records_per_file(data_df, target_bytes, codec,
+                                 cache_key=width_key, fmt=fmt,
+                                 sample=sample)
 
     # derive transform columns (A11)
     derivable, skipped_any = [], False
@@ -356,37 +439,16 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
         pcols.append(cname)
         spec_fields.append((pf, src))
 
-    # one shuffle to co-locate partitions; sort within tasks by the sort
-    # order (if any) so min/max file bounds stay tight for pruning.
-    # ``write.distribution-mode`` (Iceberg table property): 'hash'
-    # (default here) clusters rows by partition transform with one hash
-    # exchange; 'range' range-partitions on the transforms — a sampled
-    # skew-aware exchange that also globally ORDERS the partitions, so
-    # each output file covers a contiguous transform range (tightest
-    # possible bounds for pruning, at the cost of the sampling pass);
-    # 'none' skips the shuffle entirely — every task writes files for
-    # the partitions it already holds (write-side fan-out, right when
-    # upstream already clustered the data or partitions ≈ tasks).
-    dist_mode = md.properties.get("write.distribution-mode", "hash")
-    if pcols and dist_mode == "hash":
-        df = df.repartition(*[F.col(c) for c in pcols])
-    elif pcols and dist_mode == "range":
-        df = df.repartitionByRange(*[F.col(c) for c in pcols])
-    elif dist_mode not in ("none", "hash", "range"):
-        raise ValueError(
-            f"unknown write.distribution-mode {dist_mode!r}")
+    # sort within files by the sort order (if any) so min/max file
+    # bounds stay tight for pruning
+    sort_cols = []
     order = md.sort_orders.get(md.default_sort_order_id)
-    if order and order.fields:
-        sort_cols = []
-        for sf_ in order.fields:
-            fld = schema.field_by_id(sf_.source_id)
-            if fld is None:
-                continue
+    for sf_ in (order.fields if order else ()):
+        fld = schema.field_by_id(sf_.source_id)
+        if fld is not None:
             c = F.col(fld.name)
-            c = c.desc() if sf_.direction == "desc" else c.asc()
-            sort_cols.append(c)
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
+            sort_cols.append(c.desc() if sf_.direction == "desc"
+                             else c.asc())
 
     # data root + layout (table_metadata.rs:48-49): ``write.data.path``
     # overrides ``<location>/data``; ``write.object-storage.enabled``
@@ -404,9 +466,94 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
     tx_id = uuid.uuid4().hex[:12]
     out_dir = os.path.join(data_root,
                            ("_stage-" + tx_id) if hashed else tx_id)
+    dist_mode = md.properties.get("write.distribution-mode", "hash")
+    if dist_mode not in ("none", "hash", "range"):
+        raise ValueError(f"unknown write.distribution-mode {dist_mode!r}")
+    bloom = fmt == "parquet" and any(
+        k.startswith(_BLOOM_PREFIX) and str(v).lower() == "true"
+        for k, v in md.properties.items())
+    field_ids = {f.name: f.field_id for f in schema.fields}
+
+    written = None
+    # the driver tier writes through local file APIs
+    local = ":" not in data_root.split("/", 1)[0]
+    if local and fmt == "parquet" and not bloom \
+            and codec in _ARROW_CODECS \
+            and all(_arrow_writable(f.field_type) for f in schema.fields):
+        written = _write_arrow(
+            spark, df, list(data_df.columns), pcols, spec_fields,
+            sort_cols, field_ids, codec, level, records_cap,
+            out_dir, data_root if hashed else None)
+    if written is not None:
+        items, nan_counts = written
+    else:
+        items = _write_spark(
+            md, df, pcols, spec_fields, sort_cols, dist_mode, fmt, codec,
+            level, bloom, records_cap, out_dir,
+            data_root if hashed else None)
+        nan_counts = None
+
+    # Footer-derived zero-NaN proofs apply only to files Spark's writer
+    # just wrote (the inference is writer-specific — see
+    # writer_nan_in_max); probe the session's writer once, and only when
+    # a float column exists. The driver tier counts NaNs exactly.
+    nan_ok = nan_counts is None and fmt == "parquet" and any(
+        f.field_type in ("float", "double") for f in schema.fields
+        if isinstance(f.field_type, str)) and writer_nan_in_max(spark)
+    # uuid bounds stay full-length (spec: the bound is the exact
+    # 16-byte value; a string-truncated prefix is not a uuid)
+    uuid_fids = frozenset(
+        f.field_id for f in schema.fields if f.field_type == "uuid")
+    harvested = harvest_files(spark, items, field_ids, content,
+                              equality_ids, nan_zero_ok=nan_ok,
+                              no_trunc_fids=uuid_fids)
+    if nan_counts:
+        harvested = [replace(f, nan_value_counts=nan_counts[f.file_path])
+                     for f in harvested]
+    # Spark's writer can emit a zero-row file for an empty leading task
+    # (seen with unrepartitioned skinny delete sets); committing it
+    # would add a dead path to every merge-on-read relation forever.
+    empties = [f for f in harvested if f.record_count == 0]
+    for f in empties:
+        try:
+            store_for(f.file_path).remove(f.file_path)
+        except FileNotFoundError:
+            pass
+    return [f for f in harvested if f.record_count > 0]
+
+
+def _write_spark(md: TableMetadata, df: DataFrame, pcols: list[str],
+                 spec_fields, sort_cols, dist_mode: str, fmt: str,
+                 codec: str, level: int | None, bloom: bool, records_cap,
+                 out_dir: str, hashed_root: str | None
+                 ) -> list[tuple[str, dict]]:
+    """Spark's writer: shuffle, write job, then the written files with
+    the partition tuples parsed back from their directories."""
+    # measure row width BEFORE the partition shuffle (the sample limit
+    # then short-circuits the scan)
+    cap = records_cap()
+    # one shuffle to co-locate partitions. ``write.distribution-mode``
+    # (Iceberg table property): 'hash' (default here) clusters rows by
+    # partition transform with one hash exchange; 'range'
+    # range-partitions on the transforms — a sampled skew-aware exchange
+    # that also globally ORDERS the partitions, so each output file
+    # covers a contiguous transform range (tightest possible bounds for
+    # pruning, at the cost of the sampling pass); 'none' skips the
+    # shuffle entirely — every task writes files for the partitions it
+    # already holds (write-side fan-out, right when upstream already
+    # clustered the data or partitions ≈ tasks).
+    if pcols and dist_mode == "hash":
+        df = df.repartition(*[F.col(c) for c in pcols])
+    elif pcols and dist_mode == "range":
+        df = df.repartitionByRange(*[F.col(c) for c in pcols])
+    if sort_cols:
+        df = df.sortWithinPartitions(*sort_cols)
     writer = (df.write.mode("errorifexists")
               .option("compression", codec)
-              .option("maxRecordsPerFile", records_cap))
+              .option("maxRecordsPerFile", cap))
+    if level is not None:
+        writer = writer.option("parquet.compression.codec.zstd.level",
+                               str(level))
     # Iceberg bloom-filter properties
     # (write.parquet.bloom-filter-enabled.column.<c>): point-lookup
     # row-group skipping at scan time — the difference between reading
@@ -423,10 +570,7 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
     # extra file size per column on wide tables. Acceptable because the
     # cap bounds it and row-group skipping still works; revisit if
     # Spark ever forwards parquet-mr's per-column `enabled#col` keys.
-    bloom_pfx = "write.parquet.bloom-filter-enabled.column."
-    if fmt == "parquet" and any(
-            k.startswith(bloom_pfx) and str(v).lower() == "true"
-            for k, v in md.properties.items()):
+    if bloom:
         writer = (writer
                   .option("parquet.bloom.filter.enabled", "true")
                   .option("parquet.bloom.filter.max.bytes",
@@ -441,69 +585,185 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
     items: list[tuple[str, dict]] = []
     for root, _dirs, files in os.walk(out_dir):
         rel = os.path.relpath(root, out_dir)
-        partition: dict = {}
-        if rel != ".":
-            for seg in rel.split(os.sep):
-                if "=" not in seg:
-                    continue
-                k, v = seg.split("=", 1)
-                name = k[len(_P_PREFIX):]
-                pf, src = next((t for t in spec_fields
-                                if t[0].name == name), (None, None))
-                if pf is None:
-                    continue
-                partition[name] = _partition_value_from_str(
-                    v, pf.transform,
-                    src.field_type if isinstance(src.field_type, str)
-                    else "string")
+        partition = _parse_partition(rel, spec_fields) \
+            if rel != "." else {}
         for fn in files:
             if fn.endswith("." + fmt):
                 items.append((os.path.join(root, fn), partition))
+    if hashed_root is None:
+        return items
+    # relocate each file to <data_root>/<hex>/<uuid>.parquet; the
+    # hive-style stage path was only the partition-value carrier.
+    # (A production committer would write to final paths directly;
+    # local rename is metadata-only, and the stage dir is removed
+    # so orphan scans never see it.)
+    import shutil
+    moved: list[tuple[str, dict]] = []
+    for path, partition in items:
+        dest = _hashed_path(hashed_root, fmt)
+        os.rename(path, dest)
+        moved.append((dest, partition))
+    shutil.rmtree(out_dir, ignore_errors=True)
+    return moved
 
-    if hashed:
-        # relocate each file to <data_root>/<hex>/<uuid>.parquet; the
-        # hive-style stage path was only the partition-value carrier.
-        # (A production committer would write to final paths directly;
-        # local rename is metadata-only, and the stage dir is removed
-        # so orphan scans never see it.)
-        import hashlib
-        import shutil
-        moved: list[tuple[str, dict]] = []
-        for path, partition in items:
-            fn = uuid.uuid4().hex + "." + fmt
-            prefix = hashlib.sha256(fn.encode()).hexdigest()[:6]
-            dest_dir = os.path.join(data_root, prefix)
-            os.makedirs(dest_dir, exist_ok=True)
-            dest = os.path.join(dest_dir, fn)
-            os.rename(path, dest)
-            moved.append((dest, partition))
-        shutil.rmtree(out_dir, ignore_errors=True)
-        items = moved
 
-    field_ids = {f.name: f.field_id for f in schema.fields}
-    # Footer-derived zero-NaN proofs apply only to files WE just wrote
-    # (the inference is writer-specific — see writer_nan_in_max); probe
-    # the session's writer once, and only when a float column exists.
-    nan_ok = fmt == "parquet" and any(
-        f.field_type in ("float", "double") for f in schema.fields
-        if isinstance(f.field_type, str)) and writer_nan_in_max(spark)
-    # uuid bounds stay full-length (spec: the bound is the exact
-    # 16-byte value; a string-truncated prefix is not a uuid)
-    uuid_fids = frozenset(
-        f.field_id for f in schema.fields if f.field_type == "uuid")
-    harvested = harvest_files(spark, items, field_ids, content,
-                              equality_ids, nan_zero_ok=nan_ok,
-                              no_trunc_fids=uuid_fids)
-    # Spark's writer can emit a zero-row file for an empty leading task
-    # (seen with unrepartitioned skinny delete sets); committing it
-    # would add a dead path to every merge-on-read relation forever.
-    empties = [f for f in harvested if f.record_count == 0]
-    for f in empties:
-        try:
-            store_for(f.file_path).remove(f.file_path)
-        except FileNotFoundError:
-            pass
-    return [f for f in harvested if f.record_count > 0]
+def _hashed_path(data_root: str, fmt: str) -> str:
+    """A fresh ``<data_root>/<hex>/<uuid>.<fmt>`` object-storage path."""
+    import hashlib
+    fn = uuid.uuid4().hex + "." + fmt
+    dest_dir = os.path.join(data_root,
+                            hashlib.sha256(fn.encode()).hexdigest()[:6])
+    os.makedirs(dest_dir, exist_ok=True)
+    return os.path.join(dest_dir, fn)
+
+
+def _arrow_writable(field_type) -> bool:
+    return isinstance(field_type, str) and (
+        field_type in _ARROW_TYPES or field_type.startswith("decimal("))
+
+
+def _driver_sized(spark: SparkSession, df: DataFrame) -> bool:
+    """The optimizer's size estimate of ``df`` is at or under the
+    broadcast threshold — the bound Spark itself uses to collect a
+    relation to the driver."""
+    from iceberg_rust_archive_spark.operators.scan import (
+        _broadcast_threshold,
+    )
+    thr = _broadcast_threshold(spark)
+    return thr > 0 and int(str(
+        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())) \
+        <= thr
+
+
+def _write_arrow(spark: SparkSession, df: DataFrame, data_cols: list[str],
+                 pcols: list[str], spec_fields, sort_cols,
+                 field_ids: dict[str, int], codec: str, level: int | None,
+                 records_cap, out_dir: str, hashed_root: str | None):
+    """The driver tier: one collect, then pyarrow writes each
+    partition's files. Returns ``(items, nan_counts)`` — the written
+    ``(path, partition)`` pairs and each file's exact NaN count per
+    float column — or None when the frame is not provably small or the
+    collect fails, and Spark's writer takes over."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    # partition values cast to string in Spark: the same rendering
+    # partitionBy gives its directory names
+    out = df.select(*data_cols,
+                    *[F.col(c).cast("string").alias(c) for c in pcols])
+    if sort_cols:
+        # one sorted task, so every partition's rows keep Spark's
+        # order (nulls first ascending, last descending; NaN largest)
+        out = out.coalesce(1).sortWithinPartitions(*sort_cols)
+    if not _driver_sized(spark, out):
+        return None
+    from py4j.protocol import Py4JError
+    try:
+        tbl = out.toArrow()
+    except (Py4JError, MemoryError) as e:
+        # the estimate can be far too low (Spark sizes a string at
+        # 20 B): a collect over spark.driver.maxResultSize fails here
+        # (a raw Py4JJavaError) instead of exhausting the driver. Errors
+        # in the rows themselves arrive as PySparkException and raise.
+        import warnings
+        warnings.warn("driver-side write failed its collect; writing "
+                      f"with Spark's writer instead: {str(e)[:300]}",
+                      RuntimeWarning, stacklevel=3)
+        return None
+    data = tbl.select(data_cols)
+    arrow_schema = pa.schema([
+        f.with_metadata({b"PARQUET:field_id": str(field_ids[f.name])
+                         .encode()}) for f in data.schema])
+    float_cols = [f.name for f in data.schema
+                  if pa.types.is_floating(f.type)]
+    if not pcols:
+        groups = [("", data)]
+    else:
+        grouped = (tbl.select(pcols)
+                   .append_column("__i", pa.array(np.arange(tbl.num_rows)))
+                   .group_by(pcols, use_threads=False)
+                   .aggregate([("__i", "list")]))
+        keys = grouped.select(pcols).to_pylist()
+        rows = grouped.column("__i_list").combine_chunks()
+        groups = [("/".join(f"{c}={_escape_path_name(v)}"
+                            for c, v in key.items()),
+                   data.take(rows[i].values))
+                  for i, key in enumerate(keys)]
+    cap = records_cap(data.slice(0, _WIDTH_SAMPLE_ROWS))
+    items: list[tuple[str, dict]] = []
+    nan_counts: dict[str, dict[int, int]] = {}
+    for rel, part in groups:
+        partition = _parse_partition(rel, spec_fields) if rel else {}
+        for off in range(0, part.num_rows, cap):
+            chunk = pa.Table.from_arrays(part.slice(off, cap).columns,
+                                         schema=arrow_schema)
+            if hashed_root is not None:
+                path = _hashed_path(hashed_root, "parquet")
+            else:
+                d = os.path.join(out_dir, rel)
+                os.makedirs(d, exist_ok=True)
+                path = os.path.join(
+                    d, f"part-{len(items):05d}-{uuid.uuid4().hex}.parquet")
+            # an all-NULL column records no count, as the Spark path's
+            # harvest records none
+            nans = {c: int(pc.sum(pc.is_nan(col)).as_py() or 0)
+                    for c in float_cols
+                    if (col := chunk.column(c)).null_count < len(col)}
+            # pyarrow leaves NaN out of min/max, and Spark's parquet
+            # reader prunes row groups on them as if NaN were the
+            # largest value (its own writer's order): a column holding
+            # NaN is written without statistics, or ``x > c`` would skip
+            # the NaN rows
+            pq.write_table(chunk, path,
+                           compression=_ARROW_CODECS[codec],
+                           compression_level=level,
+                           use_dictionary=_dictionary_columns(chunk),
+                           write_statistics=[c for c in chunk.column_names
+                                             if not nans.get(c)],
+                           store_schema=False)
+            items.append((path, partition))
+            nan_counts[path] = {field_ids[c]: n for c, n in nans.items()}
+    return items, nan_counts
+
+
+def _dictionary_columns(tbl) -> list[str]:
+    """parquet-mr's dictionary fallback rule, per column: keep the
+    dictionary only when dictionary plus bit-packed indices come out
+    smaller than plain encoding and the dictionary fits its 1 MiB page.
+    pyarrow's default dictionary-encodes every column, which made
+    near-unique columns larger than Spark's files."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    out = []
+    for name, col in zip(tbl.column_names, tbl.columns):
+        t = col.type
+        n = len(col) - col.null_count
+        if n == 0 or pa.types.is_boolean(t):
+            continue
+        uniq = pc.unique(col).drop_null()
+        d = len(uniq)
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            plain = pc.sum(pc.binary_length(col)).as_py() + 4 * n
+            dict_bytes = pc.sum(pc.binary_length(uniq)).as_py() + 4 * d
+        else:
+            width = _flba_width(t.precision) if pa.types.is_decimal(t) \
+                else t.bit_width // 8
+            plain, dict_bytes = width * n, width * d
+        index_bytes = n * (d - 1).bit_length() / 8
+        if dict_bytes <= _DICTIONARY_PAGE_BYTES \
+                and dict_bytes + index_bytes < plain:
+            out.append(name)
+    return out
+
+
+def _flba_width(precision: int) -> int:
+    """Bytes of the FIXED_LEN_BYTE_ARRAY that holds a decimal."""
+    n = 1
+    while 10 ** precision > 2 ** (8 * n - 1):
+        n += 1
+    return n
 
 
 def write_delete_and_data(spark: SparkSession, md: TableMetadata,
@@ -515,7 +775,8 @@ def write_delete_and_data(spark: SparkSession, md: TableMetadata,
     CONCURRENTLY — the upsert/UPDATE/MERGE commit shape is always this
     pair at one sequence number, and the two writes are independent
     (disjoint staging dirs, no shared state beyond the benign width
-    cache). Two driver threads submit both Spark jobs at once; the
+    cache). Two driver threads submit both writes at once (each takes
+    the driver tier or Spark's writer on its own size estimate); the
     scheduler interleaves their stages, so the pair costs
     max(delete, data) wall-clock instead of the sum. Returns
     ``(delete_files, data_files)``; an exception in either write
@@ -561,8 +822,7 @@ def write_position_deletes(spark: SparkSession, md: TableMetadata,
     tx_id = uuid.uuid4().hex[:12]
     out_dir = os.path.join(md.location, "data", tx_id)
     (out.write.mode("errorifexists")
-     .option("compression", md.properties.get(
-         "write.parquet.compression-codec", "zstd"))
+     .option("compression", md.properties.get(PROP_COMPRESSION, "zstd"))
      .parquet(out_dir))
     items = [(os.path.join(r, fn), {})
              for r, _d, fns in os.walk(out_dir)

@@ -21,9 +21,12 @@ from iceberg_rust_archive_spark.spec.sort import SortOrder
 
 FORMAT_VERSION = 2
 
-# Table property keys honored by the writer (table_metadata.rs:46-49)
+# Table property keys honored by the writer (table_metadata.rs:46-49;
+# sources/write.py). The level applies to zstd, in both the driver tier
+# and Spark's writer.
 PROP_COMPRESSION = "write.parquet.compression-codec"
 PROP_COMPRESSION_LEVEL = "write.parquet.compression-level"
+PROP_ORC_COMPRESSION = "write.orc.compression-codec"
 PROP_TARGET_FILE_SIZE = "write.target-file-size-bytes"
 DEFAULT_TARGET_FILE_SIZE = 512_000_000  # write.rs:66
 

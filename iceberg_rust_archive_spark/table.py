@@ -563,7 +563,7 @@ class Table:
                 if any_scoped:
                     prior = _scan(spark, md,
                                   snapshot_id=s.parent_snapshot_id,
-                                  expose_pos=True)
+                                  expose_fp=True)
                     parent_snap = md.snapshots[s.parent_snapshot_id]
                     from pyspark.sql.types import (
                         StringType, StructField, StructType,

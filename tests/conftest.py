@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -57,3 +58,39 @@ def file_relations(df) -> list[set[str]]:
             out.append({re.sub(r"^file:/+", "/", p)
                         for p in leaf.relation().location().inputFiles()})
     return out
+
+
+@contextmanager
+def broadcast_threshold(spark, value):
+    """Set ``spark.sql.autoBroadcastJoinThreshold`` for a block and
+    restore it afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+@pytest.fixture()
+def spark_writer(spark):
+    """Route the test's writes through Spark's writer: with the
+    broadcast threshold off, no frame qualifies for the driver-side
+    write tier (sources/write.py)."""
+    with broadcast_threshold(spark, "-1"):
+        yield
+
+
+def local_rows(spark, rows, cols):
+    """``spark.createDataFrame(rows, cols)`` as a driver-built
+    ``LocalRelation``, whose size the optimizer knows, so a small write
+    of it takes the driver-side write tier (a row list alone becomes a
+    ``LogicalRDD`` of unknown size, which always takes Spark's
+    writer)."""
+    from iceberg_rust_archive_spark.session import local_frame
+    return local_frame(spark, [tuple(r) for r in rows],
+                       spark.createDataFrame(rows, cols).schema)

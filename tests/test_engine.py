@@ -9,6 +9,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import local_rows
+
 from iceberg_rust_archive_spark.catalog import FileCatalog, SqlCatalog
 from iceberg_rust_archive_spark.catalog.base import CommitFailedError
 from iceberg_rust_archive_spark.predicates import Pred
@@ -390,7 +392,8 @@ def test_byte_based_file_rolling(spark, catalog):
     rng = random.Random(7)
     rows = [(i, "".join(chr(rng.randrange(33, 127)) for _ in range(1024)))
             for i in range(512)]  # ~512 KB of payload
-    t.append(spark, spark.createDataFrame(rows, ["id", "payload"])
+    # a local relation, so the driver tier takes it by default
+    t.append(spark, local_rows(spark, rows, ["id", "payload"])
              .coalesce(1))  # single writer task → rolling does the splitting
     files = [e.data_file
              for mle in read_manifest_list(
@@ -401,6 +404,10 @@ def test_byte_based_file_rolling(spark, catalog):
     assert len(files) >= 4
     # and no file wildly overshoots the byte target
     assert max(f.file_size_in_bytes for f in files) < 4 * 65536
+
+
+def test_byte_based_file_rolling_spark_writer(spark, catalog, spark_writer):
+    test_byte_based_file_rolling(spark, catalog)
 
 
 def test_position_delete_idempotent(spark, catalog):
@@ -1302,6 +1309,11 @@ def test_sort_order_evolution_sql(spark, tmp_path):
     assert got == {1: 30, 2: 10, 3: 20, 4: 60, 5: 40, 6: 50}
 
 
+def test_sort_order_evolution_sql_spark_writer(spark, tmp_path,
+                                               spark_writer):
+    test_sort_order_evolution_sql(spark, tmp_path)
+
+
 def test_sql_dml_delete_update_merge_exact_rows(spark, tmp_path):
     """The DML triple on a 6-row table, exact final contents checked:
     DELETE → eq-delete file; UPDATE → eq-delete + re-insert, one
@@ -1474,6 +1486,12 @@ def test_write_distribution_modes(spark, tmp_path, mode):
     # of mode (partition integrity is mode-independent)
     files = eng.sql(f"SELECT partition FROM db.d_{mode}.files").collect()
     assert files and all(f.partition for f in files)
+
+
+@pytest.mark.parametrize("mode", ["hash", "range", "none"])
+def test_write_distribution_modes_spark_writer(spark, tmp_path, mode,
+                                               spark_writer):
+    test_write_distribution_modes(spark, tmp_path, mode)
 
 
 def test_partitions_metadata_table(spark, tmp_path):

@@ -129,6 +129,30 @@ def test_orc_multi_stratum_scan_matches_parquet_twin(spark, catalog):
     assert got["orc"] == got["parquet"]
 
 
+def test_orc_scoped_eq_delete_changelog_matches_parquet_twin(spark,
+                                                             catalog):
+    """A commit with a partition-scoped equality delete: ``changes()``
+    resolves it against the parent state tagged by file path only, so
+    an ORC table (no row ordinals) gives its Parquet twin's changelog."""
+    got = {}
+    for fmt in ("parquet", "orc"):
+        t = Table.create(catalog, f"db.cdc_{fmt}", SCHEMA, DAY_SPEC,
+                         properties={"write.format.default": fmt})
+        t = t.append(spark, spark.createDataFrame(ROWS, COLS))
+        first = t.metadata.current_snapshot().snapshot_id
+        t = t.delete_where_equal(
+            spark, spark.createDataFrame(
+                [(3, dt.date(2020, 2, 2)), (1, dt.date(2020, 2, 2))],
+                ["id", "date"]), ["id", "date"])
+        assert any(any(v is not None for v in e.data_file.partition.values())
+                   for e in _data_entries(t) if e.data_file.content == 2)
+        got[fmt] = sorted(
+            (r["id"], r["_change_type"]) for r in
+            t.changes(spark, from_snapshot_id=first).collect())
+    assert got["orc"] == [(3, "delete")]
+    assert got["orc"] == got["parquet"]
+
+
 @pytest.mark.parametrize("fmt", ["parquet", "orc"])
 def test_same_file_added_twice_keeps_a_copy_per_entry(spark, tmp_path,
                                                       fmt):

@@ -11,6 +11,10 @@ interop tests pin piecewise (Java-Avro manifest round-trip in
 test_avro_interop.py, vendored spec JSON-schema validation in
 test_spec_validation.py) — this is the end-to-end composition:
 metadata.json → manifest list → manifests → parquet data.
+
+Each test writes small local relations, which take the driver-side
+write tier; ``test_pyiceberg_interop_spark_writer`` reruns every test
+on Spark's writer.
 """
 
 import datetime as dt
@@ -23,6 +27,8 @@ pyiceberg = pytest.importorskip(
            "the independent-engine read-back gate")
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from conftest import local_rows  # noqa: E402
 
 from iceberg_rust_archive_spark.catalog import FileCatalog  # noqa: E402
 
@@ -41,8 +47,8 @@ def test_pyiceberg_reads_partitioned_append(spark, catalog):
     from test_engine import BATCH1, BATCH2, COLS, _mk_table
 
     t = _mk_table(catalog, "orders_pyiceberg")
-    t.append(spark, spark.createDataFrame(BATCH1, COLS))
-    t.append(spark, spark.createDataFrame(BATCH2, COLS))
+    t.append(spark, local_rows(spark, BATCH1, COLS))
+    t.append(spark, local_rows(spark, BATCH2, COLS))
 
     pt = _static_table(t.metadata_location)
     scanned = pt.scan().to_arrow()
@@ -61,8 +67,8 @@ def test_pyiceberg_applies_deletes(spark, catalog):
     from test_engine import BATCH1, COLS, _mk_table
 
     t = _mk_table(catalog, "orders_pyiceberg_del")
-    t.append(spark, spark.createDataFrame(BATCH1, COLS))
-    t.delete_where_equal(spark, spark.createDataFrame([(1,), (4,)], ["id"]),
+    t.append(spark, local_rows(spark, BATCH1, COLS))
+    t.delete_where_equal(spark, local_rows(spark, [(1,), (4,)], ["id"]),
                          ["id"])
     t.delete_where_pos(spark, F.col("id") == 2)
 
@@ -78,7 +84,7 @@ def test_pyiceberg_reads_deletion_vectors(spark, catalog):
     from test_engine import BATCH1, COLS, _mk_table
 
     t = _mk_table(catalog, "orders_pyiceberg_dv")
-    t.append(spark, spark.createDataFrame(BATCH1, COLS))
+    t.append(spark, local_rows(spark, BATCH1, COLS))
     t.delete_where_pos(spark, F.col("id") <= 2, use_dv=True)
 
     pt = _static_table(t.metadata_location)
@@ -105,7 +111,7 @@ def test_pyiceberg_prunes_month_partitions(spark, catalog):
     rows = [(i, i, i, dt.date(2020 + i % 2, 1 + i % 6, 5 + i), i)
             for i in range(12)]
     cols = ["id", "customer_id", "product_id", "date", "amount"]
-    t.append(spark, spark.createDataFrame(rows, cols))
+    t.append(spark, local_rows(spark, rows, cols))
 
     pt = _static_table(t.metadata_location)
     assert pt.scan().to_arrow().num_rows == len(rows)
@@ -134,7 +140,7 @@ def test_pyiceberg_prunes_bucket_partitions(spark, catalog):
                      spec)
     rows = [(i, i, i, dt.date(2021, 1, 1 + i % 20), i) for i in range(40)]
     cols = ["id", "customer_id", "product_id", "date", "amount"]
-    t.append(spark, spark.createDataFrame(rows, cols))
+    t.append(spark, local_rows(spark, rows, cols))
 
     pt = _static_table(t.metadata_location)
     for key in (7, 23):
@@ -169,3 +175,15 @@ def test_pyiceberg_reads_variant_table(spark, catalog):
         pytest.skip(f"pyiceberg version lacks v3 variant read: {e!r}")
     assert arrow.num_rows == 8
     assert sorted(arrow["k"].to_pylist()) == list(range(8))
+
+
+@pytest.mark.parametrize("case", [
+    test_pyiceberg_reads_partitioned_append,
+    test_pyiceberg_applies_deletes,
+    test_pyiceberg_reads_deletion_vectors,
+    test_pyiceberg_prunes_month_partitions,
+    test_pyiceberg_prunes_bucket_partitions,
+    test_pyiceberg_reads_variant_table,
+], ids=lambda f: f.__name__)
+def test_pyiceberg_interop_spark_writer(spark, catalog, spark_writer, case):
+    case(spark, catalog)

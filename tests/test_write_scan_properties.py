@@ -31,6 +31,7 @@ from hypothesis import strategies as st
 
 from iceberg_rust_archive_spark.catalog.file_catalog import FileCatalog
 from iceberg_rust_archive_spark.predicates import Pred
+from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.spec.partition import (
     PartitionField, PartitionSpec,
 )
@@ -160,6 +161,19 @@ def _norm_row(row, fields):
 @SLOW
 @given(case=table_case())
 def test_write_scan_roundtrip_all_types(spark, tmp_path_factory, case):
+    """Through the default writer: a small local relation takes the
+    driver tier when every column type is on its allow-list."""
+    _roundtrip_all_types(spark, tmp_path_factory, case)
+
+
+@SLOW
+@given(case=table_case())
+def test_write_scan_roundtrip_all_types_spark_writer(
+        spark, spark_writer, tmp_path_factory, case):
+    _roundtrip_all_types(spark, tmp_path_factory, case)
+
+
+def _roundtrip_all_types(spark, tmp_path_factory, case):
     fields, part, rows = case
     base = tmp_path_factory.mktemp("wsprop")
     cat = FileCatalog(str(base / "wh"))
@@ -179,7 +193,7 @@ def test_write_scan_roundtrip_all_types(spark, tmp_path_factory, case):
     spark_schema = T.StructType([
         T.StructField(f.name, iceberg_to_spark_type(f.field_type), True)
         for f in fields])
-    df = spark.createDataFrame(rows, spark_schema)
+    df = local_frame(spark, rows, spark_schema)
     t = t.append(spark, df)
 
     got = Counter(_norm_row(tuple(r), fields)
