@@ -651,7 +651,11 @@ def transform_column(transform: str, col: Column | str,
             scale = int(iceberg_type.split(",")[1].rstrip(")").strip())
             step = F.lit(Decimal(w).scaleb(-scale))
             return c - F.pmod(c, step)
-        return (c - F.pmod(c, F.lit(w))).cast("long")
+        # in long arithmetic: ``v - pmod(v, W)`` leaves the int range
+        # for v within W of its minimum (ANSI Spark raises on the
+        # overflow); the Python scalar path computes the same value
+        c = c.cast("long")
+        return c - F.pmod(c, F.lit(w))
     if iceberg_type == "timestamptz" and transform in (
             "year", "month", "day", "hour"):
         # Spec: time transforms on timestamptz apply to the UTC datetime

@@ -76,7 +76,7 @@ from iceberg_rust_archive_spark.predicates import (
 from iceberg_rust_archive_spark.plans.sqlparse import (
     _COMMA_FROM_RE, find_relations, is_join_shaped, rewrite_relations,
 )
-from iceberg_rust_archive_spark.session import local_frame
+from iceberg_rust_archive_spark.session import local_frame, materialized
 from iceberg_rust_archive_spark.spec.partition import PartitionSpec
 from iceberg_rust_archive_spark.spec.schema import Schema
 from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
@@ -674,23 +674,20 @@ class Engine:
                 t.update_where_pos(self.spark, pred, assigns)
                 return None
             # ONE scan of the matched rows feeds both the delete side
-            # and the re-insert side (cached across the two writes —
-            # the merge-on-read scan under it can be expensive)
+            # and the re-insert side (materialized once for the two
+            # writes — the merge-on-read scan under it can be expensive)
             from iceberg_rust_archive_spark.sources.write import (
                 write_delete_and_data,
             )
             schema = t.metadata.current_schema()
             eq_ids = tuple(schema.field_by_name(c).field_id for c in cols)
-            old = self._run_select(
-                f"SELECT * FROM {ident} WHERE {pred}").cache()
-            try:
+            with materialized(self._run_select(
+                    f"SELECT * FROM {ident} WHERE {pred}")) as old:
                 new = old.selectExpr(*[
                     f"({assigns[c.lower()]}) AS {c}"
                     if c.lower() in assigns else c for c in cols])
                 del_files, data_files = write_delete_and_data(
                     self.spark, t.metadata, old, eq_ids, new)
-            finally:
-                old.unpersist()
             txn = (t.new_transaction().append_delete_files(del_files)
                    .append_files(data_files))
             txn.commit_with_retry(

@@ -37,22 +37,36 @@ scans (δTᵢ = snapshot-range scan, A4) and re-runs the stored SQL.
 Aggregates (transform.rs:107-197 + aggregate_functions.rs:5-99): the delta
 passes run the aggregate SQL, their union is re-merged per group
 (sum→sum-of-sums, count→sum-of-counts, min/max→least/greatest), then the
-storage table is merged by ONE null-safe left join on the group keys:
-matched groups apply the merge expressions, unmatched ones are brand-new
-groups, and the NegDelta (transform.rs:214-360) retracts every touched
-group's stale row via an equality delete on the group keys (null-safe
-too, so a NULL key merges with its stored history).
+storage table is merged by ONE null-safe join on the group keys (a NULL
+key merges with its stored history). How the merged groups reach storage
+depends on its size:
+
+* **Copy-on-write** when the storage scan is provably small (its
+  ``_ice_broadcastable`` tag: planned bytes at or under the broadcast
+  threshold), and always for a keyless aggregate (one row): a FULL outer
+  join keeps every stored group, taking each key from the side that is
+  present; the result replaces the storage table as one data file
+  (``replace_files``) — the reference's IncrementalOverwrite
+  (mod.rs:410-415). No retraction is written, so no delete strata build
+  up and nothing needs compacting.
+* **Merge-on-read** otherwise: a LEFT join merges only the touched groups,
+  and the NegDelta (transform.rs:214-360) retracts each touched group's
+  stale row via an equality delete on the group keys (null-safe too);
+  ``_maybe_compact_storage`` rewrites the table once live delete strata
+  pile up.
 
 The reference shares the merged subplan between the upsert and the
 retraction via ForkNode channels (fork_node.rs:34-160); here
-``session.materialized`` runs the merged frame once, eagerly, and both
-writes read its result — one partition, so one data file and one delete
-file per refresh for a small delta. It is released when the refresh
-returns.
+``session.materialized`` runs the merged frame once, eagerly, and every
+write reads its result — one partition, and for a small result a
+driver-side relation whose writes take the driver tier: one data file per
+refresh under copy-on-write, one data and one delete file under
+merge-on-read. It is released when the refresh returns.
 """
 
 from __future__ import annotations
 
+import logging
 import re
 from contextlib import nullcontext
 
@@ -84,6 +98,8 @@ from iceberg_rust_archive_spark.spec.view_metadata import (
     SourceTableState, ViewMetadata,
 )
 from iceberg_rust_archive_spark.table import Table
+
+_log = logging.getLogger(__name__)
 
 FULL = "FullOverwrite"
 INCR_APPEND = "IncrementalAppend"
@@ -822,20 +838,33 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
         delta_agg = (delta.groupBy(*keys).agg(*merge_across) if keys
                      else delta.agg(*merge_across))
 
-    # --- merge: ONE null-safe left join of the delta onto the stored
-    # groups (transform.rs:107-197). Matched groups apply the merge
-    # expressions; unmatched ones are brand-new groups and keep their
-    # delta values (transform.rs:176-191). Keys compare null-safely,
-    # like the equality delete that retracts the stale rows, so a NULL
-    # group key merges with its stored history.
-    old = storage.scan(spark).select(
+    # --- merge (transform.rs:107-197): the delta aggregate joins the
+    # stored groups null-safely on the keys, so a NULL group key merges
+    # with its stored history; matched groups apply the merge
+    # expressions, unmatched delta groups are brand-new groups and keep
+    # their delta values (transform.rs:176-191).
+    rep: dict = {}
+    stored = storage.scan(spark, report=rep)
+    # copy-on-write for provably small storage (the scan's own broadcast
+    # tag) and for a keyless aggregate (one row); merge-on-read for the
+    # rest — see the module docstring
+    cow = not keys or getattr(stored, "_ice_broadcastable", False)
+    _log.debug("mv refresh %s: %s merge (storage %d bytes)", identifier,
+               "copy-on-write" if cow else "merge-on-read",
+               rep.get("data_bytes_planned", 0))
+    old = stored.select(
         *[F.col(k).alias(f"__old_{k}") for k in keys],
         *[F.col(a.alias).alias(f"__old_{a.alias}") for a in aggs])
     cond = F.lit(True)
     for k in keys:
         cond = cond & F.col(k).eqNullSafe(F.col(f"__old_{k}"))
     dtypes = {f.name: f.dataType for f in delta_agg.schema.fields}
-    merged_cols = [F.col(k) for k in keys]
+    # a FULL outer join takes each key from the side that is present
+    # (NULL is a legal key, so the presence marker decides, not
+    # coalesce); a left join always has the delta side
+    merged_cols = [F.when(F.col("__new"), F.col(k))
+                   .otherwise(F.col(f"__old_{k}")).alias(k)
+                   for k in keys] if cow else [F.col(k) for k in keys]
     for a in aggs:
         new_c, old_c = F.col(a.alias), F.col(f"__old_{a.alias}")
         if a.agg_fn in ("sum", "count"):  # old + new (aggregate_functions.rs)
@@ -847,23 +876,29 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
         else:
             e = F.greatest(old_c, new_c)
         merged_cols.append(e.cast(dtypes[a.alias]).alias(a.alias))
-    merged = delta_agg.join(old, cond, "left").select(*merged_cols)
+    merged = delta_agg.withColumn("__new", F.lit(True)).join(
+        old, cond, "full" if cow else "left").select(*merged_cols)
 
-    # The merged frame (one row per touched group) runs once and feeds
-    # both sides of the commit — the reference's ForkNode channels
-    # (fork_node.rs:34-160). NegDelta: retract every touched group's
-    # stale row via an equality delete on the keys (transform.rs:
-    # 214-360 → equality-delete files, A16), overlapping the delete
-    # and data writes on two threads.
+    # The merged frame runs once (one partition, so one file per side
+    # for a small result) — and, when small, becomes a driver-side
+    # relation, so its writes take the driver tier.
     with materialized(merged) as merged:
         upserts = merged
         if strategy == CHANGELOG_AGG and keys:
             # a group whose multiplicity reached 0 ceased to exist: it
-            # is retracted and NOT re-inserted — a GROUP BY result has
-            # no empty groups
+            # is dropped (retracted under merge-on-read) and NOT
+            # re-inserted — a GROUP BY result has no empty groups
             mult = _multiplicity_item(parsed).alias
             upserts = merged.filter(F.col(mult) > 0)
-        if keys:
+        if cow:
+            files = _write(spark, storage, upserts)
+        else:
+            # it feeds both sides of the commit — the reference's
+            # ForkNode channels (fork_node.rs:34-160). NegDelta: retract
+            # every touched group's stale row via an equality delete on
+            # the keys (transform.rs:214-360 → equality-delete files,
+            # A16), overlapping the delete and data writes on two
+            # threads.
             schema = storage.metadata.current_schema()
             eq_ids = tuple(schema.field_by_name(k).field_id for k in keys)
             from iceberg_rust_archive_spark.sources.write import (
@@ -872,16 +907,14 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
             del_files, files = write_delete_and_data(
                 spark, storage.metadata, merged.select(*keys), eq_ids,
                 upserts)
-        else:
-            del_files, files = [], _write(spark, storage, upserts)
 
     def build(t):
-        # a global aggregate is one row: the merged row replaces it
-        t = (t.append_files(files).append_delete_files(del_files) if keys
-             else t.replace_files(files))
+        t = (t.replace_files(files) if cow
+             else t.append_files(files).append_delete_files(del_files))
         return t.set_refresh_state(new_state.to_json_str())
     build(storage.new_transaction(branch)).commit_with_retry(build)
-    _maybe_compact_storage(spark, catalog, mv, branch)
+    if not cow:
+        _maybe_compact_storage(spark, catalog, mv, branch)
     return strategy
 
 

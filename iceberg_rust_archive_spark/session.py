@@ -9,10 +9,13 @@ parquet/file confs below.
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 _DEFAULT_CONFS = {
     # Let AQE re-plan at runtime: coalesce post-shuffle partitions, convert
@@ -203,19 +206,62 @@ def materialize_local(spark: SparkSession, df, rows=None):
 def materialized(df):
     """Run ``df`` once, eagerly, and yield a frame over its result,
     released on exit — the one owner of a frame that several writes
-    consume.
+    (or a write and its retraction) consume.
 
-    ``localCheckpoint`` keeps the partitioning AQE settled on (one
-    partition for a small post-aggregate result), where a ``.cache()``d
-    plan keeps its pre-AQE shuffle partitioning (a cached plan may not
-    change its output partitioning), so every write of it fans out into
-    one task and one file per shuffle partition."""
+    The eager ``localCheckpoint`` runs the plan once. The block manager
+    then knows what the result really holds (``memSize + diskSize`` of
+    the checkpointed RDD; reading it runs no job). When that is at or
+    under the broadcast threshold and every column is a type the
+    driver-side write tier writes, the result is collected once
+    (``toArrow()``), the checkpoint is released at once, and the frame
+    yielded is a ``local_frame`` ``LocalRelation``: its optimizer
+    statistics are its real size, so every write of it takes the driver
+    tier (``sources/write.py``). A checkpoint's own estimate is that of
+    the plan it came from — a join estimate Spark multiplies, megabytes
+    to gigabytes for a few rows — and would send each write through a
+    Spark job.
+
+    Otherwise the checkpoint itself is yielded. ``localCheckpoint``
+    keeps the partitioning AQE settled on (one partition for a small
+    post-aggregate result), where a ``.cache()``d plan keeps its pre-AQE
+    shuffle partitioning (a cached plan may not change its output
+    partitioning), so every write of it would fan out into one task and
+    one file per shuffle partition."""
+    from iceberg_rust_archive_spark.operators.scan import (
+        _broadcast_threshold,
+    )
+    from iceberg_rust_archive_spark.sources.write import arrow_collectable
     m = df.localCheckpoint(eager=True)
+    spark = m.sparkSession
+    sc = spark.sparkContext._jsc.sc()
+    rdd_id = m._jdf.queryExecution().analyzed().rdd().id()
     try:
-        yield m
+        thr = _broadcast_threshold(spark)
+        stored = _stored_bytes(sc, rdd_id) \
+            if thr > 0 and arrow_collectable(m.schema) else None
+        if stored is not None and stored <= thr:
+            _log.debug("materialized: local relation (%d stored bytes "
+                       "<= threshold %d)", stored, thr)
+            out = local_frame(spark, m.toArrow(), m.schema)
+            sc.unpersistRDD(rdd_id, True)
+            rdd_id = None
+        else:
+            _log.debug("materialized: checkpoint (%s stored bytes, "
+                       "threshold %d)", stored, thr)
+            out = m
+        yield out
     finally:
         # through the context, not RDD.unpersist, which logs a WARN for
         # every locally checkpointed RDD (its lineage is gone) — nothing
         # recomputes this one
-        rdd_id = m._jdf.queryExecution().analyzed().rdd().id()
-        m.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)
+        if rdd_id is not None:
+            sc.unpersistRDD(rdd_id, True)
+
+
+def _stored_bytes(sc, rdd_id: int) -> int:
+    """Bytes the block manager holds for RDD ``rdd_id``, in memory and
+    on disk (0 when nothing is stored: an empty result)."""
+    for info in sc.getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize()) + int(info.diskSize())
+    return 0

@@ -40,6 +40,7 @@ the metadata layer are parsed back from the hive-style paths.
 
 from __future__ import annotations
 
+import logging
 import os
 import urllib.parse
 import uuid
@@ -63,6 +64,8 @@ from iceberg_rust_archive_spark.sources.stats import (
     harvest_files, writer_nan_in_max,
 )
 
+_log = logging.getLogger(__name__)
+
 _P_PREFIX = "_p_"
 
 # Rows sampled to measure parquet-encoded row width. Small enough that
@@ -81,6 +84,11 @@ _WIDTH_CACHE: dict[str, int] = {}
 # differential test); decimals of any precision as FIXED_LEN_BYTE_ARRAY
 _ARROW_TYPES = frozenset({"boolean", "int", "long", "float", "double",
                           "date", "timestamp", "timestamptz", "string"})
+# the same types as Spark names them (``DataType.typeName()``); byte
+# and short widen to int on the way in
+_ARROW_SPARK_TYPES = frozenset({
+    "boolean", "byte", "short", "integer", "long", "float", "double",
+    "decimal", "date", "timestamp", "timestamp_ntz", "string"})
 # Spark codec name → pyarrow's, for the codecs the driver tier writes
 _ARROW_CODECS = {"zstd": "zstd", "snappy": "snappy", "gzip": "gzip",
                  "uncompressed": "none", "none": "none"}
@@ -177,6 +185,14 @@ def _records_per_file(df: DataFrame, target_bytes: int, codec: str,
 # the dir name, and the parser's unquote restores it, so the marker
 # round-trips the directory encoding exactly (r16).
 _EMPTY_MARKER = "%00"
+# Marker for a value holding a NUL character. Spark's directory
+# escaping (ExternalCatalogUtils.escapePathName) covers 0x01-0x1F but
+# not 0x00, so a raw NUL reaches the file system and the partition
+# directory cannot be created. Such a value is written as '%01' followed
+# by the value with '%' → '%25' and NUL → '%00', which the parser
+# unquotes; real values that start with '%01' take the '%00' prefix
+# above, so the mapping stays injective.
+_NUL_MARKER = "%01"
 
 
 def _unmark_empty(s: str) -> str:
@@ -184,6 +200,8 @@ def _unmark_empty(s: str) -> str:
         return ""
     if s.startswith(_EMPTY_MARKER):
         return s[len(_EMPTY_MARKER):]
+    if s.startswith(_NUL_MARKER):
+        return urllib.parse.unquote(s[len(_NUL_MARKER):])
     return s
 
 
@@ -429,9 +447,16 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
                                   or pf.transform.startswith("truncate")):
             # '' must stay distinguishable from null in the dir name
             # (see _EMPTY_MARKER); nulls fall through every WHEN to
-            # the otherwise and still render __HIVE_DEFAULT_PARTITION__
-            pcol = (F.when(pcol == "", F.lit(_EMPTY_MARKER))
+            # the otherwise and still render __HIVE_DEFAULT_PARTITION__;
+            # a NUL must not reach the dir name raw (see _NUL_MARKER)
+            nul_escaped = F.replace(
+                F.replace(pcol, F.lit("%"), F.lit("%25")),
+                F.lit("\x00"), F.lit("%00"))
+            pcol = (F.when(pcol.contains("\x00"),
+                           F.concat(F.lit(_NUL_MARKER), nul_escaped))
+                     .when(pcol == "", F.lit(_EMPTY_MARKER))
                      .when(pcol.startswith(_EMPTY_MARKER)
+                           | pcol.startswith(_NUL_MARKER)
                            | (pcol == "__HIVE_DEFAULT_PARTITION__"),
                            F.concat(F.lit(_EMPTY_MARKER), pcol))
                      .otherwise(pcol))
@@ -484,6 +509,10 @@ def write_datafiles(spark: SparkSession, md: TableMetadata, df: DataFrame,
             spark, df, list(data_df.columns), pcols, spec_fields,
             sort_cols, field_ids, codec, level, records_cap,
             out_dir, data_root if hashed else None)
+    else:
+        _log.debug("write: Spark's writer (format %s, codec %s, bloom %s "
+                   "or a column type is outside the driver tier)",
+                   fmt, codec, bloom)
     if written is not None:
         items, nan_counts = written
     else:
@@ -622,6 +651,13 @@ def _arrow_writable(field_type) -> bool:
         field_type in _ARROW_TYPES or field_type.startswith("decimal("))
 
 
+def arrow_collectable(schema) -> bool:
+    """Every column of the Spark ``schema`` is a type the driver tier
+    writes (``_ARROW_TYPES`` in Spark's type names)."""
+    return all(f.dataType.typeName() in _ARROW_SPARK_TYPES
+               for f in schema.fields)
+
+
 def _driver_sized(spark: SparkSession, df: DataFrame) -> bool:
     """The optimizer's size estimate of ``df`` is at or under the
     broadcast threshold — the bound Spark itself uses to collect a
@@ -630,9 +666,14 @@ def _driver_sized(spark: SparkSession, df: DataFrame) -> bool:
         _broadcast_threshold,
     )
     thr = _broadcast_threshold(spark)
-    return thr > 0 and int(str(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())) \
-        <= thr
+    if thr <= 0:
+        _log.debug("write: Spark's writer (broadcast threshold off)")
+        return False
+    est = int(str(
+        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    _log.debug("write: %s (estimate %d bytes, threshold %d)",
+               "driver tier" if est <= thr else "Spark's writer", est, thr)
+    return est <= thr
 
 
 def _write_arrow(spark: SparkSession, df: DataFrame, data_cols: list[str],

@@ -3,6 +3,8 @@ metadata + scan/write/transaction entry points."""
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_rust_archive_spark.catalog.base import Catalog
@@ -10,7 +12,7 @@ from iceberg_rust_archive_spark.operators.scan import (
     eq_delete_keys, pos_delete_pairs, scan as _scan,
 )
 from iceberg_rust_archive_spark.predicates import Pred
-from iceberg_rust_archive_spark.session import local_frame
+from iceberg_rust_archive_spark.session import local_frame, materialized
 from iceberg_rust_archive_spark.spec.manifest import (
     CONTENT_EQUALITY_DELETES,
 )
@@ -845,10 +847,10 @@ class Table:
                 _replans=_replans - 1)
         return self.refresh()
 
-    # cache the matched frame only while snapshot stats prove the table
-    # small (the same gate the engine's general MERGE uses) — above it
-    # the pairs pass and the re-insert pass replay the scan chain with
-    # column pruning instead of attempting a whole-table cache
+    # materialize the matched frame only while snapshot stats prove the
+    # table small (the same gate the engine's general MERGE uses) —
+    # above it the pairs pass and the re-insert pass replay the scan
+    # chain with column pruning instead of checkpointing a whole table
     UPDATE_CACHE_MAX_ROWS = 20_000_000
 
     def update_where_pos(self, spark: SparkSession, predicate,
@@ -913,29 +915,24 @@ class Table:
                    .filter(predicate))
         total_rows = int(((snap.summary or {}))
                          .get("total-records", 1 << 62))
-        cached = total_rows <= self.UPDATE_CACHE_MAX_ROWS
-        if cached:
-            matched = matched.cache()
-        hits = matched.select(F.col("__fp").alias("file_path"),
-                              F.col("__pos").alias("pos"))
-        new = matched.selectExpr(*[
-            f"({sets[c.lower()]}) AS {c}" if c.lower() in sets else c
-            for c in cols])
         # the DV encode and the data write are independent consumers of
         # the matched frame — overlap them on two threads (the pair
-        # costs max(), not the sum; concurrent first-touch of the cache
-        # is serialized by Spark's cache lock)
+        # costs max(), not the sum)
         from concurrent.futures import ThreadPoolExecutor
-        try:
+        with (materialized(matched)
+              if total_rows <= self.UPDATE_CACHE_MAX_ROWS
+              else nullcontext(matched)) as matched:
+            hits = matched.select(F.col("__fp").alias("file_path"),
+                                  F.col("__pos").alias("pos"))
+            new = matched.selectExpr(*[
+                f"({sets[c.lower()]}) AS {c}" if c.lower() in sets else c
+                for c in cols])
             with ThreadPoolExecutor(max_workers=2) as ex:
                 f_dv = ex.submit(write_deletion_vectors, spark, md, hits,
                                  existing_dv)
                 f_da = ex.submit(write_datafiles, spark, md, new,
                                  branch=branch)
                 dv_files, data_files = f_dv.result(), f_da.result()
-        finally:
-            if cached:
-                matched.unpersist()
         if not dv_files and not data_files:
             return self  # nothing matched — don't commit a snapshot
 

@@ -29,7 +29,14 @@ def no_leaked_caches(spark):
     """Fail a test that leaves a cached relation or a persisted RDD
     behind: every cached frame is released by its owner. Counted
     against the state the test started from, so a leak from an earlier
-    test is not blamed on this one."""
+    test is not blamed on this one.
+
+    Counts alone can miss a leak: a later statement that replaces a temp
+    view uncaches every plan reading it, which brings the count back.
+    So every frame that calls ``cache()``/``persist()`` during the test
+    is recorded, and one that still reports ``is_cached`` at teardown
+    was never unpersisted by its owner."""
+    from pyspark.sql.classic.dataframe import DataFrame
     cache = spark._jsparkSession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc
 
@@ -37,8 +44,23 @@ def no_leaked_caches(spark):
         return set(jsc.getPersistentRDDs().keys()) | {
             i.id() for i in jsc.sc().getRDDStorageInfo()}
 
+    frames, originals = [], {n: getattr(DataFrame, n)
+                             for n in ("cache", "persist")}
+    for name, orig in originals.items():
+        def record(self, *args, _orig=orig, **kw):
+            frames.append(self)
+            return _orig(self, *args, **kw)
+        setattr(DataFrame, name, record)
     cached, rdds = cache.numCachedEntries(), persisted()
-    yield
+    try:
+        yield
+    finally:
+        for name, orig in originals.items():
+            setattr(DataFrame, name, orig)
+    held = [f for f in frames if f.is_cached]
+    for f in held:
+        f.unpersist()  # the next test starts clean either way
+    assert not held, f"{len(held)} cached frame(s) never unpersisted"
     leaked = persisted() - rdds
     assert not leaked, f"persisted RDDs left behind: {sorted(leaked)}"
     assert cache.numCachedEntries() <= cached, \

@@ -814,6 +814,27 @@ def test_failed_update_releases_its_cache(spark, tmp_path, props,
                   .collect()) == [(1, "a"), (2, "b")]
 
 
+
+def test_small_update_takes_the_driver_tier(spark, tmp_path, monkeypatch,
+                                            no_leaked_caches):
+    """A small equality-path UPDATE materializes its matched rows as a
+    driver-side relation, so both of its writes take the driver tier:
+    it completes with Spark's writer made to fail."""
+    from iceberg_rust_archive_spark.plans.engine import Engine
+    from iceberg_rust_archive_spark.sources import write as write_mod
+
+    eng = Engine(spark, FileCatalog(str(tmp_path / "wh")))
+    eng.sql("CREATE SCHEMA db")
+    eng.sql("CREATE TABLE db.t (k BIGINT, v STRING)")
+    eng.sql("INSERT INTO db.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+
+    def spark_writer(*a, **k):
+        raise AssertionError("write reached Spark's writer")
+    monkeypatch.setattr(write_mod, "_write_spark", spark_writer)
+    eng.sql("UPDATE db.t SET v = upper(v) WHERE k >= 2")
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM db.t")
+                  .collect()) == [(1, "a"), (2, "B"), (3, "C")]
+
 def test_time_travel_sql_and_procedures(spark, tmp_path):
     """VERSION AS OF / TIMESTAMP AS OF suffixes, INSERT OVERWRITE, and
     CALL system.* maintenance procedures through the SQL router."""

@@ -3,6 +3,7 @@ the SQL shim (planner.rs DDL surface)."""
 
 import pytest
 
+from conftest import broadcast_threshold
 from iceberg_rust_archive_spark.catalog import FileCatalog
 from iceberg_rust_archive_spark.plans.engine import Engine
 from iceberg_rust_archive_spark.plans.sqlparse import (
@@ -101,27 +102,30 @@ def test_aggregate_mv_incremental(engine):
     """delta_queries/mod.rs:470-892 shape: aggregate MV merged
     incrementally (sum → old+new; new groups via anti-join; old group rows
     retracted by equality delete)."""
-    engine.sql("CREATE MATERIALIZED VIEW db.agg_mv AS "
-               "SELECT sum(quantity) AS total, product_id FROM db.orders "
-               "GROUP BY product_id")
-    engine.refresh_materialized_view("db.agg_mv")
-    got = {r["product_id"]: r["total"]
-           for r in engine.sql("SELECT * FROM db.agg_mv").collect()}
-    assert got == {1: 7, 2: 1, 3: 3}
+    # merge-on-read shape: with the broadcast threshold off no storage
+    # scan is provably small, so the refresh never copies on write
+    with broadcast_threshold(engine.spark, "-1"):
+        engine.sql("CREATE MATERIALIZED VIEW db.agg_mv AS "
+                   "SELECT sum(quantity) AS total, product_id FROM db.orders "
+                   "GROUP BY product_id")
+        engine.refresh_materialized_view("db.agg_mv")
+        got = {r["product_id"]: r["total"]
+               for r in engine.sql("SELECT * FROM db.agg_mv").collect()}
+        assert got == {1: 7, 2: 1, 3: 3}
 
-    engine.sql("INSERT INTO db.orders VALUES "
-               "(7,1,3,DATE '2020-01-03',1),(8,2,1,DATE '2020-01-03',2),"
-               "(9,2,4,DATE '2020-01-03',5)")  # product 4 is a NEW group
-    assert engine.refresh_materialized_view("db.agg_mv") == INCR_AGG
-    got = {r["product_id"]: r["total"]
-           for r in engine.sql("SELECT * FROM db.agg_mv").collect()}
-    assert got == {1: 9, 2: 1, 3: 4, 4: 5}
-    # the incremental path must not have rescanned/rewritten everything:
-    # storage table now has data + equality-delete files
-    storage = engine.load_table("db.agg_mv_storage")
-    mlist = read_manifest_list(
-        storage.metadata.current_snapshot().manifest_list)
-    assert any(m.content == 1 for m in mlist), "expected delete manifest"
+        engine.sql("INSERT INTO db.orders VALUES "
+                   "(7,1,3,DATE '2020-01-03',1),(8,2,1,DATE '2020-01-03',2),"
+                   "(9,2,4,DATE '2020-01-03',5)")  # product 4 is a NEW group
+        assert engine.refresh_materialized_view("db.agg_mv") == INCR_AGG
+        got = {r["product_id"]: r["total"]
+               for r in engine.sql("SELECT * FROM db.agg_mv").collect()}
+        assert got == {1: 9, 2: 1, 3: 4, 4: 5}
+        # the incremental path must not have rescanned/rewritten everything:
+        # storage table now has data + equality-delete files
+        storage = engine.load_table("db.agg_mv_storage")
+        mlist = read_manifest_list(
+            storage.metadata.current_snapshot().manifest_list)
+        assert any(m.content == 1 for m in mlist), "expected delete manifest"
 
 
 def _live_delete_strata(table) -> set:
@@ -153,33 +157,36 @@ def test_mv_refresh_loop_auto_compacts(engine, mv_sql):
     from iceberg_rust_archive_spark.plans.mv import (
         _STORAGE_COMPACT_DELETE_STRATA,
     )
-    engine.sql(f"CREATE MATERIALIZED VIEW db.loop_mv AS {mv_sql}")
-    engine.refresh_materialized_view("db.loop_mv")
-    max_strata, compacted = 0, False
-    for i in range(7, 7 + 2 * _STORAGE_COMPACT_DELETE_STRATA):
-        engine.sql(f"INSERT INTO db.orders VALUES "
-                   f"({i},1,1,DATE '2020-03-01',{i % 3 + 1})")
-        assert engine.refresh_materialized_view("db.loop_mv") == INCR_AGG
-        want = {r[1]: r[0] for r in engine.sql(mv_sql).collect()}
-        got = {r["product_id"]: r["total"] for r in
-               engine.sql("SELECT * FROM db.loop_mv").collect()}
-        assert got == want, f"divergence after refresh {i}"
-        strata = len(_live_delete_strata(
-            engine.load_table("db.loop_mv_storage")))
-        compacted = compacted or strata == 0
-        max_strata = max(max_strata, strata)
-    # the chain was bounded by the threshold, and at least one
-    # compaction actually ran (strata dropped back to zero)
-    assert max_strata < _STORAGE_COMPACT_DELETE_STRATA, max_strata
-    assert compacted
+    # merge-on-read shape: with the broadcast threshold off no storage
+    # scan is provably small, so the refresh never copies on write
+    with broadcast_threshold(engine.spark, "-1"):
+        engine.sql(f"CREATE MATERIALIZED VIEW db.loop_mv AS {mv_sql}")
+        engine.refresh_materialized_view("db.loop_mv")
+        max_strata, compacted = 0, False
+        for i in range(7, 7 + 2 * _STORAGE_COMPACT_DELETE_STRATA):
+            engine.sql(f"INSERT INTO db.orders VALUES "
+                       f"({i},1,1,DATE '2020-03-01',{i % 3 + 1})")
+            assert engine.refresh_materialized_view("db.loop_mv") == INCR_AGG
+            want = {r[1]: r[0] for r in engine.sql(mv_sql).collect()}
+            got = {r["product_id"]: r["total"] for r in
+                   engine.sql("SELECT * FROM db.loop_mv").collect()}
+            assert got == want, f"divergence after refresh {i}"
+            strata = len(_live_delete_strata(
+                engine.load_table("db.loop_mv_storage")))
+            compacted = compacted or strata == 0
+            max_strata = max(max_strata, strata)
+        # the chain was bounded by the threshold, and at least one
+        # compaction actually ran (strata dropped back to zero)
+        assert max_strata < _STORAGE_COMPACT_DELETE_STRATA, max_strata
+        assert compacted
 
 
-def test_mv_null_group_key_keeps_history(engine):
-    """A NULL group key merges with its stored row: the equality delete
-    retracts the NULL group null-safely, so the merge join must match it
-    null-safely too, or the group restarts from the delta alone. A sum
-    over NULL values only stays NULL through the merge, in a stored
-    group and in a brand-new one."""
+def test_mv_null_group_key_keeps_history(engine, monkeypatch):
+    """A NULL group key merges with its stored row: the merge join
+    matches it null-safely, and the copy-on-write merge takes a present
+    side's key by a presence marker (NULL is a legal key), or the group
+    restarts from the delta alone. A sum over NULL values only stays
+    NULL through the merge, in a stored group and in a brand-new one."""
     engine.sql("CREATE TABLE db.nk (k STRING, v BIGINT)")
     engine.sql("INSERT INTO db.nk VALUES ('a', 1), (NULL, 10), ('b', NULL)")
     mv_sql = "SELECT k, count(*) AS n, sum(v) AS s FROM db.nk GROUP BY k"
@@ -187,7 +194,9 @@ def test_mv_null_group_key_keeps_history(engine):
     assert engine.refresh_materialized_view("db.nk_mv") == FULL
     engine.sql("INSERT INTO db.nk VALUES "
                "('a', 2), (NULL, 20), ('b', NULL), ('c', NULL)")
+    _forbid_spark_writer(monkeypatch)
     assert engine.refresh_materialized_view("db.nk_mv") == INCR_AGG
+    _assert_copied_on_write(engine.load_table("db.nk_mv_storage"))
     got = {tuple(r) for r in engine.sql("SELECT * FROM db.nk_mv").collect()}
     assert got == {tuple(r) for r in engine.sql(mv_sql).collect()}
     assert got == {("a", 2, 3), (None, 2, 30), ("b", 2, None),
@@ -196,14 +205,18 @@ def test_mv_null_group_key_keeps_history(engine):
 
 def test_global_aggregate_mv_stays_one_row(engine):
     """An aggregate without GROUP BY has no keys to retract by: the
-    merged row replaces the stored one instead of piling up beside it."""
+    merged row replaces the stored one (copy-on-write, whatever the
+    threshold) instead of piling up beside it."""
     mv_sql = "SELECT count(*) AS n, sum(quantity) AS q FROM db.orders"
     engine.sql(f"CREATE MATERIALIZED VIEW db.g_mv AS {mv_sql}")
     engine.refresh_materialized_view("db.g_mv")
     engine.sql("INSERT INTO db.orders VALUES (7,1,3,DATE '2020-01-03',4)")
     assert engine.refresh_materialized_view("db.g_mv") == INCR_AGG
+    _assert_copied_on_write(engine.load_table("db.g_mv_storage"))
     engine.sql("DELETE FROM db.orders WHERE id = 1")
-    assert engine.refresh_materialized_view("db.g_mv") == CHANGELOG_AGG
+    with broadcast_threshold(engine.spark, "-1"):
+        assert engine.refresh_materialized_view("db.g_mv") == CHANGELOG_AGG
+    _assert_copied_on_write(engine.load_table("db.g_mv_storage"))
     got = [tuple(r) for r in engine.sql("SELECT * FROM db.g_mv").collect()]
     assert got == [tuple(r) for r in engine.sql(mv_sql).collect()]
     assert got == [(6, 14)]
@@ -213,28 +226,31 @@ def test_mv_refresh_owns_its_lifetimes(engine, spark):
     """A small-delta incremental refresh commits one data file and one
     equality-delete file, and leaves no cached relation, no persisted
     RDD and no changed session conf behind."""
-    engine.sql("CREATE MATERIALIZED VIEW db.own_mv AS "
-               "SELECT product_id, count(*) AS n, sum(quantity) AS q "
-               "FROM db.orders GROUP BY product_id")
-    engine.refresh_materialized_view("db.own_mv")
-    engine.sql("INSERT INTO db.orders VALUES "
-               "(7,1,3,DATE '2020-01-03',1),(8,2,1,DATE '2020-01-03',2),"
-               "(9,2,4,DATE '2020-01-03',5)")
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    jsc = spark.sparkContext._jsc.sc()
-    confs, cached = dict(spark.conf.getAll), cache.numCachedEntries()
-    stored = {i.id() for i in jsc.getRDDStorageInfo()}
-    assert engine.refresh_materialized_view("db.own_mv") == INCR_AGG
-    assert dict(spark.conf.getAll) == confs
-    assert cache.numCachedEntries() == cached
-    assert {i.id() for i in jsc.getRDDStorageInfo()} <= stored
-    snap = engine.load_table("db.own_mv_storage") \
-        .metadata.current_snapshot()
-    added = [e.data_file.content for entries in read_manifests(
-        [m.manifest_path for m in read_manifest_list(snap.manifest_list)])
-        for e in entries
-        if e.status == STATUS_ADDED and e.snapshot_id == snap.snapshot_id]
-    assert sorted(added) == [CONTENT_DATA, CONTENT_EQUALITY_DELETES]
+    # merge-on-read shape: with the broadcast threshold off no storage
+    # scan is provably small, so the refresh never copies on write
+    with broadcast_threshold(engine.spark, "-1"):
+        engine.sql("CREATE MATERIALIZED VIEW db.own_mv AS "
+                   "SELECT product_id, count(*) AS n, sum(quantity) AS q "
+                   "FROM db.orders GROUP BY product_id")
+        engine.refresh_materialized_view("db.own_mv")
+        engine.sql("INSERT INTO db.orders VALUES "
+                   "(7,1,3,DATE '2020-01-03',1),(8,2,1,DATE '2020-01-03',2),"
+                   "(9,2,4,DATE '2020-01-03',5)")
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        jsc = spark.sparkContext._jsc.sc()
+        confs, cached = dict(spark.conf.getAll), cache.numCachedEntries()
+        stored = {i.id() for i in jsc.getRDDStorageInfo()}
+        assert engine.refresh_materialized_view("db.own_mv") == INCR_AGG
+        assert dict(spark.conf.getAll) == confs
+        assert cache.numCachedEntries() == cached
+        assert {i.id() for i in jsc.getRDDStorageInfo()} <= stored
+        snap = engine.load_table("db.own_mv_storage") \
+            .metadata.current_snapshot()
+        added = [e.data_file.content for entries in read_manifests(
+            [m.manifest_path for m in read_manifest_list(snap.manifest_list)])
+            for e in entries
+            if e.status == STATUS_ADDED and e.snapshot_id == snap.snapshot_id]
+        assert sorted(added) == [CONTENT_DATA, CONTENT_EQUALITY_DELETES]
 
 
 def test_mor_scan_tags_are_local_relations(engine):
@@ -242,19 +258,103 @@ def test_mor_scan_tags_are_local_relations(engine):
     file with its sequence number through a driver-built relation; it
     must be a JVM LocalRelation, not a LogicalRDD whose every use
     schedules a parallelize stage."""
-    engine.sql("CREATE MATERIALIZED VIEW db.mor_mv AS "
-               "SELECT sum(quantity) AS total, product_id FROM db.orders "
-               "GROUP BY product_id")
-    engine.refresh_materialized_view("db.mor_mv")
-    for i in range(7, 10):
+    # merge-on-read shape: with the broadcast threshold off no storage
+    # scan is provably small, so the refresh never copies on write
+    with broadcast_threshold(engine.spark, "-1"):
+        engine.sql("CREATE MATERIALIZED VIEW db.mor_mv AS "
+                   "SELECT sum(quantity) AS total, product_id FROM db.orders "
+                   "GROUP BY product_id")
+        engine.refresh_materialized_view("db.mor_mv")
+        for i in range(7, 10):
+            engine.sql(f"INSERT INTO db.orders VALUES "
+                       f"({i},1,{i % 2 + 1},DATE '2020-03-01',1)")
+            assert engine.refresh_materialized_view("db.mor_mv") == INCR_AGG
+        storage = engine.load_table("db.mor_mv_storage")
+        assert len(_live_delete_strata(storage)) == 3
+        plan = storage.scan(engine.spark)._jdf.queryExecution() \
+            .analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+
+def _forbid_spark_writer(monkeypatch):
+    """Fail any write that reaches Spark's writer: every file must come
+    from the driver-side write tier."""
+    from iceberg_rust_archive_spark.sources import write as write_mod
+
+    def spark_writer(*a, **k):
+        raise AssertionError("write reached Spark's writer")
+    monkeypatch.setattr(write_mod, "_write_spark", spark_writer)
+
+
+def _assert_copied_on_write(storage):
+    """The current snapshot replaced the storage with at most one data
+    file and left no delete file and no delete manifest."""
+    snap = storage.metadata.current_snapshot()
+    mlist = read_manifest_list(snap.manifest_list)
+    assert not any(m.content == 1 for m in mlist), "delete manifest"
+    added = [e.data_file.content for entries in read_manifests(
+        [m.manifest_path for m in mlist]) for e in entries
+        if e.status == STATUS_ADDED and e.snapshot_id == snap.snapshot_id]
+    assert added in ([], [CONTENT_DATA]), added
+    assert snap.summary["operation"] == "replace"
+    assert snap.summary["total-delete-files"] == "0"
+
+
+def test_small_mv_refresh_copies_on_write(engine, monkeypatch):
+    """A keyed aggregate MV whose storage is provably small refreshes
+    copy-on-write: over several appends each refresh commits exactly
+    one data file and no delete file, nothing reaches Spark's writer,
+    and the MV equals a full recompute."""
+    mv_sql = ("SELECT product_id, count(*) AS n, sum(quantity) AS q "
+              "FROM db.orders GROUP BY product_id")
+    engine.sql(f"CREATE MATERIALIZED VIEW db.cow_mv AS {mv_sql}")
+    engine.refresh_materialized_view("db.cow_mv")
+    _forbid_spark_writer(monkeypatch)
+    for i in range(7, 12):
         engine.sql(f"INSERT INTO db.orders VALUES "
-                   f"({i},1,{i % 2 + 1},DATE '2020-03-01',1)")
-        assert engine.refresh_materialized_view("db.mor_mv") == INCR_AGG
-    storage = engine.load_table("db.mor_mv_storage")
-    assert len(_live_delete_strata(storage)) == 3
-    plan = storage.scan(engine.spark)._jdf.queryExecution() \
-        .analyzed().toString()
-    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+                   f"({i},1,{i % 5 + 1},DATE '2020-03-01',{i})")
+        assert engine.refresh_materialized_view("db.cow_mv") == INCR_AGG
+        storage = engine.load_table("db.cow_mv_storage")
+        _assert_copied_on_write(storage)
+        assert storage.metadata.current_snapshot() \
+            .summary["total-data-files"] == "1"
+        got = {tuple(r) for r in
+               engine.sql("SELECT * FROM db.cow_mv").collect()}
+        assert got == {tuple(r) for r in engine.sql(mv_sql).collect()}
+
+
+def test_refresh_logs_its_merge_choice(engine, caplog):
+    """The refresh logs its merge choice at DEBUG: copy-on-write for a
+    small storage table; with a threshold below the storage size, the
+    merge-on-read path — one data and one equality-delete file, a
+    checkpointed merge and Spark's writer."""
+    import logging
+    caplog.set_level(logging.DEBUG, logger="iceberg_rust_archive_spark")
+    engine.sql("CREATE MATERIALIZED VIEW db.log_mv AS "
+               "SELECT product_id, count(*) AS n FROM db.orders "
+               "GROUP BY product_id")
+    engine.refresh_materialized_view("db.log_mv")
+
+    def refresh(i):
+        engine.sql(f"INSERT INTO db.orders VALUES "
+                   f"({i},1,3,DATE '2020-01-03',1)")
+        caplog.clear()
+        assert engine.refresh_materialized_view("db.log_mv") == INCR_AGG
+        return " | ".join(r.getMessage() for r in caplog.records)
+
+    log = refresh(7)
+    assert "copy-on-write merge" in log, log
+    assert "materialized: local relation" in log, log
+    assert "write: driver tier" in log, log
+    with broadcast_threshold(engine.spark, "1"):
+        log = refresh(8)
+    assert "merge-on-read merge" in log, log
+    assert "materialized: checkpoint" in log, log
+    assert "write: Spark's writer" in log, log
+    snap = engine.load_table("db.log_mv_storage") \
+        .metadata.current_snapshot()
+    assert snap.summary["total-delete-files"] == "1"
 
 
 def test_join_aggregate_mv(engine):
@@ -315,14 +415,16 @@ def test_plain_view_replay(engine):
     assert rows[0][0] == 8  # rows (3,3),(5,2),(6,3)
 
 
-def test_min_max_aggregate_mv(engine):
+def test_min_max_aggregate_mv(engine, monkeypatch):
     engine.sql("CREATE MATERIALIZED VIEW db.mm AS "
                "SELECT min(quantity) AS mn, max(quantity) AS mx, product_id "
                "FROM db.orders GROUP BY product_id")
     engine.refresh_materialized_view("db.mm")
     engine.sql("INSERT INTO db.orders VALUES "
                "(10,9,1,DATE '2020-03-01',9),(11,9,3,DATE '2020-03-01',0)")
+    _forbid_spark_writer(monkeypatch)
     assert engine.refresh_materialized_view("db.mm") == INCR_AGG
+    _assert_copied_on_write(engine.load_table("db.mm_storage"))
     got = {r["product_id"]: (r["mn"], r["mx"])
            for r in engine.sql("SELECT * FROM db.mm").collect()}
     assert got == {1: (1, 9), 2: (1, 1), 3: (0, 3)}
@@ -459,12 +561,13 @@ def test_mv_full_refresh_after_source_delete(engine):
     assert got == {1: 6, 3: 3}
 
 
-def test_mv_changelog_refresh_survives_source_deletes(engine, spark):
+def test_mv_changelog_refresh_survives_source_deletes(engine, spark,
+                                                      monkeypatch):
     """A sum/count aggregate MV with COUNT(*) stays INCREMENTAL through
     source DELETEs: the changelog's signed weights retract the deleted
-    rows' contributions, fully-deleted groups disappear, and the result
-    equals a from-scratch recompute — where the reference must fall back
-    to FullOverwrite."""
+    rows' contributions, fully-deleted groups disappear (dropped from
+    the copy-on-write result), and the result equals a from-scratch
+    recompute — where the reference must fall back to FullOverwrite."""
     from iceberg_rust_archive_spark.plans.mv import CHANGELOG_AGG
 
     engine.sql("CREATE MATERIALIZED VIEW db.clv AS "
@@ -485,8 +588,10 @@ def test_mv_changelog_refresh_survives_source_deletes(engine, spark):
     engine.sql("INSERT INTO db.orders VALUES "
                "(7, 2, 4, DATE '2020-03-03', 5)")
 
+    _forbid_spark_writer(monkeypatch)
     assert engine.refresh_materialized_view("db.clv") == CHANGELOG_AGG
     assert mv_rows() == {1: (3, 4), 3: (1, 3), 4: (1, 5)}
+    _assert_copied_on_write(engine.load_table("db.clv_storage"))
 
     # UPDATE = delete+insert in one commit; changelog handles it too
     engine.sql("UPDATE db.orders SET quantity = quantity + 10 "

@@ -250,6 +250,20 @@ def test_truncate():
         == decimal.Decimal("10.50")
 
 
+
+def test_int_truncate_near_min_matches_scalar(spark):
+    """``truncate[W]`` of an int within W of the int minimum leaves the
+    int range; the Spark column (ANSI arithmetic) must give the scalar
+    path's value instead of raising an overflow."""
+    from iceberg_rust_archive_spark.functions.transforms import (
+        transform_column,
+    )
+    vals = [-2_147_483_641, -2_147_483_648, 2_147_483_647, -7, 0]
+    df = spark.createDataFrame([(v,) for v in vals], "v int")
+    got = [r[0] for r in df.select(
+        transform_column("truncate[10]", "v", "int")).collect()]
+    assert got == [truncate_value(v, 10, "int") for v in vals]
+
 def test_v1_table_metadata_compat():
     """V1 docs (singular schema / partition-spec, no id-keyed maps) must
     load through the V1→V2 shim (table_metadata.rs:428-814)."""

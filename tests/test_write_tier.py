@@ -15,6 +15,7 @@ from conftest import broadcast_threshold
 
 from iceberg_rust_archive_spark.catalog.file_catalog import FileCatalog
 from iceberg_rust_archive_spark.predicates import Pred, prune_datafiles
+from iceberg_rust_archive_spark.session import local_frame
 from iceberg_rust_archive_spark.sources import write as write_mod
 from iceberg_rust_archive_spark.sources.manifests import (
     read_manifest, read_manifest_list,
@@ -325,3 +326,79 @@ def test_compression_level_honored(spark, tmp_path, writer):
         rows[level] = sorted(tuple(r) for r in t.scan(spark).collect())
     assert sizes["1"] != sizes["19"], sizes
     assert rows["1"] == rows["19"]
+
+
+def _stored_rdds(spark) -> set:
+    return {i.id() for i in
+            spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _leaf(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["exit", "exception"])
+def test_materialized_sizes_by_what_it_stored(spark, fail):
+    """``session.materialized`` sizes its result by the bytes the block
+    manager stored, not by the optimizer's estimate: a join of a few
+    rows that the optimizer sizes far over the threshold becomes a
+    driver-side ``LocalRelation`` (so its writes take the driver tier)
+    and its checkpoint is released at once; a result over the threshold
+    stays the checkpoint. Both are released on exit and on an
+    exception."""
+    from iceberg_rust_archive_spark.session import materialized
+    joined = spark.range(1000).join(spark.range(1000), "id")
+    assert not write_mod._driver_sized(spark, joined)  # 1000² × 8 B
+    before = _stored_rdds(spark)
+
+    class Boom(Exception):
+        pass
+
+    for thr, leaf in (("10485760", "LocalRelation"), ("1024", "LogicalRDD")):
+        with broadcast_threshold(spark, thr):
+            try:
+                with materialized(joined) as m:
+                    assert _leaf(m) == leaf
+                    assert m.count() == 1000
+                    held = _stored_rdds(spark) - before
+                    assert len(held) == (leaf == "LogicalRDD"), held
+                    if leaf == "LocalRelation":
+                        assert write_mod._driver_sized(spark, m)
+                    if fail:
+                        raise Boom()
+            except Boom:
+                pass
+        assert _stored_rdds(spark) <= before
+
+
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_nul_partition_values_round_trip(spark, tmp_path, monkeypatch,
+                                         writer):
+    """Spark's directory escaping leaves NUL raw, so a string partition
+    value holding one could not be written by Spark's writer. Both
+    writers commit the exact value as the identity and truncate tuples,
+    and an '=' probe finds its rows; values that look like the markers
+    stay distinct."""
+    cat = FileCatalog(str(tmp_path / "wh"))
+    cat.create_namespace("db")
+    sch = Schema(0, StructTypeSpec((
+        NestedField(1, "k", "string", True),
+        NestedField(2, "v", "long", True))))
+    values = ["\x00", "a\x00b", "%\x00%25", "%01", "%01\x00", "%00",
+              "", "plain", "\x02\U0001f600\x00'0", "\U0001f600\x7f"]
+    rows = [(k, i) for i, k in enumerate(values)] + [(None, len(values))]
+    for tr, cut in (("identity", None), ("truncate[3]", 3)):
+        spec = PartitionSpec(0, (PartitionField(1, 1000, "pk", tr),))
+        t = Table.create(cat, f"db.nul_{tr[:5]}", sch, spec)
+        spy = _Spy(monkeypatch, "_write_spark")
+        with broadcast_threshold(spark,
+                                 "10485760" if writer == "driver" else "-1"):
+            t = t.append(spark, local_frame(spark, rows, "k string, v long"))
+        assert spy.calls == (writer == "spark")
+        monkeypatch.undo()
+        tuples = {f.partition["pk"] for f in _files(t)}
+        assert tuples == {k if k is None else k[:cut] for k, _ in rows}
+        for k, v in rows[:-1]:
+            got = sorted(r["v"] for r in t.scan(
+                spark, filter=[Pred("k", "=", k)]).collect())
+            assert got == [v], (tr, k, got)
