@@ -5,8 +5,10 @@ The reference intercepts DDL in a DataFusion query planner
 the engine with Iceberg tables registered. Here: a light SQL router — DDL
 and INSERT are parsed with regexes (the reference's transform parsing is a
 regex too, planner.rs:81-116); SELECTs run on ``spark.sql`` with every
-referenced catalog table registered as a temp view (views replay their
-stored SQL, table.rs:170-190; MVs resolve to their storage table).
+referenced catalog relation bound for that statement alone: Spark's parser
+finds each reference, and a temp view with a statement-unique name,
+dropped once the statement is analyzed, takes its place (views replay
+their stored SQL, table.rs:170-190; MVs resolve to their storage table).
 
 Supported statements::
 
@@ -39,7 +41,8 @@ Supported statements::
         | TIMESTAMP AS OF '<ts>'
     SELECT ... FROM ns.t.snapshots | .files | .manifests | .history
         | .refs | .partitions | .entries | .position_deletes
-        | .all_files | .all_manifests | .metadata_log_entries
+        | .all_files | .all_manifests | .all_entries
+        | .metadata_log_entries
     CALL system.rewrite_manifests('ns.t') | system.compact('ns.t')
         | system.zorder('ns.t', 'c1', ...) | system.expire_snapshots('ns.t', ms)
         | system.rewrite_position_deletes('ns.t')
@@ -74,7 +77,7 @@ from iceberg_rust_archive_spark.predicates import (
     _split_top,
 )
 from iceberg_rust_archive_spark.plans.sqlparse import (
-    _COMMA_FROM_RE, find_relations, is_join_shaped, rewrite_relations,
+    SelectRelations, bind_names, run_with_views,
 )
 from iceberg_rust_archive_spark.session import local_frame, materialized
 from iceberg_rust_archive_spark.spec.partition import PartitionSpec
@@ -84,7 +87,7 @@ from iceberg_rust_archive_spark.spec.types import NestedField, StructTypeSpec
 from iceberg_rust_archive_spark.spec.view_metadata import (
     MaterializedViewMetadata, ViewMetadata,
 )
-from iceberg_rust_archive_spark.table import Table
+from iceberg_rust_archive_spark.table import METADATA_TABLES, Table
 
 # MERGE caches its target's merge-on-read resolution only below this
 # many rows (snapshot-summary total-records): small targets pay one
@@ -198,34 +201,6 @@ def _masked_groups(rx: "re.Pattern", s: str) -> list | None:
         return None
     return [s[m.start(i):m.end(i)] if m.start(i) != -1 else None
             for i in range(m.re.groups + 1)]
-
-
-class _OrigGroups:
-    """Match-like accessor whose group text comes from the ORIGINAL
-    string while the match ran over its literal-masked copy."""
-
-    def __init__(self, m: "re.Match", original: str):
-        self._m, self._s = m, original
-
-    def group(self, i: int = 0):
-        return None if self._m.start(i) == -1 \
-            else self._s[self._m.start(i):self._m.end(i)]
-
-
-def _masked_sub(rx: "re.Pattern", repl_fn, s: str) -> str:
-    """``re.sub``-with-callable where matching runs on the literal-
-    masked text and the callable sees original-text groups. Unlike
-    ``_sub_outside_quotes`` this still lets the PATTERN span a quoted
-    literal (e.g. time travel's ``VERSION AS OF 'v1'`` — the mask keeps
-    the quote delimiters) while a pattern can never bind on text hiding
-    INSIDE a literal."""
-    out, last = [], 0
-    for m in rx.finditer(_mask_quoted(s)):
-        out.append(s[last:m.start()])
-        out.append(repl_fn(_OrigGroups(m, s)))
-        last = m.end()
-    out.append(s[last:])
-    return "".join(out)
 
 
 def _sub_outside_quotes(rx: "re.Pattern", repl: str, s: str) -> str:
@@ -899,8 +874,6 @@ class Engine:
         tgt = self._run_select(f"SELECT * FROM {identifier}")
         if cache_tgt:
             tgt = tgt.cache()
-        tgt.createOrReplaceTempView("__merge_tgt")
-        sdf.createOrReplaceTempView("__merge_src")
 
         keys = []
         for a, b in re.findall(r"\w+\.(\w+)\s*=\s*\w+\.(\w+)",
@@ -991,10 +964,12 @@ class Engine:
                 "CASE " + " ".join(col_cases[c])
                 + f" ELSE {talias}.{c} END AS {c}" for c in cols)
             oldk = ", ".join(f"{talias}.{k} AS __old_{k}" for k in keys)
-            affected = self.spark.sql(
+            affected = bind_names(
+                self.spark,
                 f"SELECT {act} AS __act, {oldk}, {proj} "
                 f"FROM __merge_tgt {talias} JOIN __merge_src {salias} "
-                f"ON {on}").filter(F.col("__act") >= 0)
+                f"ON {on}", {"__merge_tgt": tgt, "__merge_src": sdf},
+            ).filter(F.col("__act") >= 0)
             # ONE aggregation is the ONLY pass over the matched join
             # output (r16 verdict #3; guide §2.4): it serves the
             # ambiguity guard (Iceberg/Delta semantics: a target row
@@ -1051,10 +1026,11 @@ class Engine:
             # keys — against the cache that's free, and on the
             # uncached (large-table) path it lets column pruning
             # reach every scan of the chain replay
-            tgt.select(*keys).createOrReplaceTempView("__merge_tgt_keys")
-            inserts = self.spark.sql(
+            inserts = bind_names(
+                self.spark,
                 f"SELECT {act} AS __act, {proj} FROM __merge_src {salias} "
-                f"LEFT ANTI JOIN __merge_tgt_keys {talias} ON {on}"
+                f"LEFT ANTI JOIN __merge_tgt_keys {talias} ON {on}",
+                {"__merge_src": sdf, "__merge_tgt_keys": tgt.select(*keys)},
             ).filter(F.col("__act") >= 0).select(*cols)
             data_parts.append(inserts)
 
@@ -1654,11 +1630,12 @@ class Engine:
                            StructType(fields))
 
     def _run_select(self, sql: str) -> DataFrame:
-        """Register every referenced catalog tabular, then spark.sql
-        (the A33 context-provider role). Time travel rides standard
-        suffixes: ``FROM t VERSION AS OF <snapshot-id>`` and
-        ``FROM t TIMESTAMP AS OF '<ts>'`` (A35) — the pinned scan is
-        registered under a derived view name before delegation."""
+        """Bind each catalog relation Spark's parser finds in the
+        statement for this statement alone (``run_with_views``), then
+        spark.sql (the A33 context-provider role). Time travel rides
+        ``FROM t VERSION AS OF <snapshot-id|'ref'>`` and ``FROM t
+        TIMESTAMP AS OF '<ts>'`` (A35); ``ns.t.<kind>`` reads a
+        metadata table (``METADATA_TABLES``)."""
         # Bare `SELECT count(*)/min(c)/max(c)[, ...] FROM <iceberg
         # table>` routes through the metadata fast path: manifest
         # record_counts and column bounds answer it with ZERO Spark jobs
@@ -1670,216 +1647,90 @@ class Engine:
         fast = self._metadata_agg_fast_path(sql)
         if fast is not None:
             return fast
-        tt_mapping = {}
+        rels = SelectRelations(self.spark, sql)
+        bound: dict = {}   # one frame per relation, however often named
+        for r in rels.relations:
+            if (r.name, r.as_of) not in bound:
+                bound[r.name, r.as_of] = self._bind_relation(r, rels)
+        return run_with_views(self.spark, sql, {
+            r: bound[r.name, r.as_of] for r in rels.relations})
 
-        def _pin(m):
-            ident, kind, lit = m.group(1), m.group(2).lower(), m.group(3)
+    def _bind_relation(self, ref, rels) -> DataFrame | None:
+        """The frame one relation reference binds to, or None to leave
+        it to Spark (not a catalog relation)."""
+        if ref.as_of is not None:
             try:
-                t = self.load_table(ident)
+                t = self.load_table(ref.name)
             except Exception:  # noqa: BLE001
-                return m.group(0)
-            safe = re.sub(r"\W", "_", ident)
-            if kind.startswith("version"):
-                ref = lit.strip().strip("'")
-                if ref.isdigit():
-                    # numeric → snapshot id; quoted name → branch/tag
-                    # ref (Spark-Iceberg's VERSION AS OF convention)
-                    df = t.scan(self.spark, snapshot_id=int(ref))
-                else:
-                    df = t.scan(self.spark, branch=ref)
-                ref_safe = re.sub(r"\W", "_", ref)
-                vn = f"ice_tt_{safe}_{ref_safe}"
-            else:
-                import datetime as _dt
-                ts = _dt.datetime.fromisoformat(lit.strip().strip("'"))
-                if ts.tzinfo is None:
-                    # Spark parses a naive TIMESTAMP AS OF literal in
-                    # the SESSION zone; .timestamp() on a naive value
-                    # would use the PROCESS zone instead
-                    from iceberg_rust_archive_spark.predicates import (
-                        _resolve_session_tz,
-                    )
-                    tz = _resolve_session_tz(
-                        self.spark.conf.get(
-                            "spark.sql.session.timeZone", "UTC") or "UTC")
-                    if tz is not None:
-                        ts = ts.replace(tzinfo=tz)
-                ms = int(ts.timestamp() * 1000)
-                df = t.scan(self.spark, as_of_ms=ms)
-                vn = f"ice_tt_{safe}_{ms}"
-            df.createOrReplaceTempView(vn)
-            tt_mapping[ident] = vn
-            return vn
-        sql = _masked_sub(re.compile(
-            r"([\w.]+)\s+(version\s+as\s+of|timestamp\s+as\s+of)\s+"
-            r"('[^']*'|\d+)", re.IGNORECASE), _pin, sql)
-
-        def _meta(m):
-            # ns.t.snapshots/files/manifests/history → metadata table
-            ident, kind = m.group(1), m.group(2).lower()
-            try:
-                df = self.load_table(ident).inspect(self.spark, kind)
+                return None
+            # TIMESTAMP AS OF is epoch ms; VERSION AS OF a number is a
+            # snapshot id, a quoted name a branch/tag ref (Spark-Iceberg's
+            # convention)
+            v = ref.as_of
+            return t.scan(self.spark, **(
+                {"as_of_ms": v} if isinstance(v, int) else
+                {"snapshot_id": int(v)} if v.isdigit() else {"branch": v}))
+        ident, _, kind = ref.name.rpartition(".")
+        if kind in METADATA_TABLES and "." in ident:
+            try:  # ns.t.<kind> → metadata table
+                return self.load_table(ident).inspect(self.spark, kind)
             except Exception:  # noqa: BLE001 — not a catalog table
-                return m.group(0)
-            safe = re.sub(r"\W", "_", ident)
-            vn = f"ice_meta_{safe}_{kind}"
-            df.createOrReplaceTempView(vn)
-            return vn
-        sql = _masked_sub(re.compile(
-            r"([\w.]+)\.(snapshots|files|manifests|history|refs"
-            r"|partitions|entries)\b", re.IGNORECASE), _meta, sql)
-
-        mapping = {}
-        rels = find_relations(sql)
-        # pushdown only for a statement with exactly ONE relation
-        # MENTION: a self-join (`FROM t a JOIN t b`) registers one
-        # shared view, so pruning it by one alias's predicate would
-        # filter BOTH sides; a comma-list (`FROM t, v`) hides its
-        # second relation from the FROM/JOIN regex entirely. Count raw
-        # mentions and refuse comma-lists — refusal only costs pruning.
-        masked_sql = _mask_quoted(sql)
-        raw_rels = re.findall(r"\b(?:from|join)\s+[A-Za-z_][\w.]*",
-                              masked_sql, re.IGNORECASE)
-        comma_from = _COMMA_FROM_RE.search(masked_sql)
-        single_rel = len(raw_rels) == 1 and not comma_from
-        # the broadcast hint is worth attaching only when the statement
-        # can apply it (is_join_shaped — the shared definition with the
-        # MV rewriter). Hinting a relation that only feeds a UNION /
-        # scalar subquery leaves an unapplied hint that Catalyst strips
-        # with a HintErrorLogger warning on every run — log noise that
-        # buries real hint failures (r14 verdict #3). In the IN/EXISTS
-        # shape the outer probe relation is hinted too, but a probe big
-        # enough to matter is never provably small, so the unapplied-
-        # hint case is confined to tiny⋈tiny statements.
-        has_join = is_join_shaped(sql, masked_sql)
-        for name in rels:
-            try:
-                md = self.catalog.load_tabular(name.lower())
-            except Exception:  # noqa: BLE001 — not a catalog table
-                ext = self._externals.get(name.lower())
-                if ext is not None:
-                    # CREATE EXTERNAL TABLE registration: explicit-
-                    # schema relation over its location, re-registered
-                    # per statement (the view name carries no dots)
-                    evn = "ice_ext_" + re.sub(r"\W", "_", name.lower())
-                    ext.createOrReplaceTempView(evn)
-                    mapping[name.lower()] = evn
-                continue
-            vn = "ice_" + re.sub(r"\W", "_", name)
-            if isinstance(md, MaterializedViewMetadata):
-                # MV scan = storage-table scan (table.rs:183-189),
-                # projected back through any avg sum/count decomposition
-                df = mv_mod.storage_read_projection(
-                    md.sql,
-                    Table.load(self.catalog, md.storage_table)
-                    .scan(self.spark))
-            elif isinstance(md, ViewMetadata):
-                df = self._run_select(md.sql)  # view replay (A20)
-            elif isinstance(md, TableMetadata):
-                # A7 through the SQL surface: the statement's top-level
-                # WHERE conjuncts push into the scan as pruning Preds
-                # (single-relation statements only — per-table
-                # attribution is then unambiguous). Sound by the
-                # inexact-filter contract: pruning with a SUBSET of
-                # conjuncts keeps a superset of matching files, and the
-                # full WHERE still applies in the delegated spark.sql.
-                # Without this, an Engine `SELECT ... WHERE day = X`
-                # planned EVERY file at metadata level — at 100 TB the
-                # pruning layer, not parquet row-group skipping, is
-                # what bounds the scan.
-                preds = (_table_preds_from_where(
-                    sql, md.current_schema()) if single_rel else None)
-                rep: dict = {}
-                df = Table(self.catalog, name, md).scan(
-                    self.spark, filter=preds, report=rep)
-                from pyspark.sql import functions as F
-                if has_join and (
-                        rep.get("broadcastable")  # planned bytes ≤ thr
-                        or self._stats_broadcastable(
-                            md, rep.get("data_bytes_planned"))):
-                    # stats-based planning (SURVEY §4; the reference
-                    # feeds table statistics into DataFusion's CBO,
-                    # datafusion_iceberg/src/statistics.rs:20-146):
-                    # metadata proves this relation tiny, so hint it
-                    # broadcast-side — multi-table SQL then picks
-                    # BroadcastHashJoin over sort-merge for dimension
-                    # tables even when Spark's own size estimate
-                    # (file bytes of a MoR chain, subquery output)
-                    # cannot see it. Statements with no join skip the
-                    # hint (nothing to apply it to).
-                    df = F.broadcast(df)
-            else:
-                continue
-            df.createOrReplaceTempView(vn)
-            mapping[name.lower()] = vn
-        return self.spark.sql(rewrite_relations(sql, mapping))
-
-def _extract_top_where(sql: str) -> str | None:
-    """The text of the statement's TOP-LEVEL WHERE clause (depth 0,
-    outside string literals), up to the next top-level GROUP/ORDER/
-    HAVING/LIMIT/UNION — or None. Subquery WHEREs sit inside parens
-    and are never matched."""
-    depth, i, n, in_str = 0, 0, len(sql), None
-    start = None
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            if start is None and ch in "wW" \
-                    and re.match(r"where\b", sql[i:], re.IGNORECASE) \
-                    and not (i and (sql[i - 1].isalnum()
-                                    or sql[i - 1] == "_")):
-                start = i + 5
-                i += 5
-                continue
-            if start is not None \
-                    and re.match(r"(group\s+by|order\s+by|having|limit"
-                                 r"|union)\b", sql[i:], re.IGNORECASE) \
-                    and not (i and (sql[i - 1].isalnum()
-                                    or sql[i - 1] == "_")):
-                return sql[start:i].strip() or None
-        i += 1
-    return sql[start:].strip().rstrip(";").strip() if start is not None \
-        else None
+                pass
+        try:
+            md = self.catalog.load_tabular(ref.name)
+        except Exception:  # noqa: BLE001 — not a catalog table
+            # CREATE EXTERNAL TABLE registration: explicit-schema
+            # relation over its location
+            return self._externals.get(ref.name)
+        if isinstance(md, MaterializedViewMetadata):
+            # MV scan = storage-table scan (table.rs:183-189), projected
+            # back through any avg sum/count decomposition
+            return mv_mod.storage_read_projection(
+                md.sql,
+                Table.load(self.catalog, md.storage_table).scan(self.spark))
+        if isinstance(md, ViewMetadata):
+            return self._run_select(md.sql)  # view replay (A20)
+        if not isinstance(md, TableMetadata):
+            return None
+        # A7 through the SQL surface: the WHERE conjuncts directly over
+        # the statement's only relation push into the scan as pruning
+        # Preds. Sound by the inexact-filter contract: pruning with a
+        # SUBSET of conjuncts keeps a superset of matching files, and the
+        # full WHERE still applies in spark.sql. Without this, an Engine
+        # `SELECT ... WHERE day = X` planned EVERY file at metadata level
+        # — at 100 TB the pruning layer, not parquet row-group skipping,
+        # is what bounds the scan.
+        preds = _table_preds(rels.conjuncts(), md.current_schema())
+        rep: dict = {}
+        df = Table(self.catalog, ref.name, md).scan(
+            self.spark, filter=preds, report=rep)
+        if rels.has_join and (
+                rep.get("broadcastable")  # planned bytes ≤ thr
+                or self._stats_broadcastable(
+                    md, rep.get("data_bytes_planned"))):
+            # stats-based planning (SURVEY §4; the reference feeds table
+            # statistics into DataFusion's CBO, datafusion_iceberg/src/
+            # statistics.rs:20-146): metadata proves this relation tiny,
+            # so hint it broadcast-side — multi-table SQL then picks
+            # BroadcastHashJoin over sort-merge for dimension tables even
+            # when Spark's own size estimate (file bytes of a MoR chain,
+            # subquery output) cannot see it. A statement with no join
+            # skips the hint: Catalyst would strip it unapplied with a
+            # HintErrorLogger warning on every run.
+            from pyspark.sql import functions as F
+            df = F.broadcast(df)
+        return df
 
 
-def _table_preds_from_where(sql: str, schema):
-    """Best-effort pruning Preds from the statement's top-level WHERE:
-    each depth-0 AND conjunct that parses in the conjunctive fragment
-    AND names a schema column (alias qualifiers stripped) becomes a
-    Pred; everything else is simply not pushed. Callers rely on the
-    scan's inexact-filter contract — the full WHERE still evaluates in
-    Spark SQL above — so partial extraction only ever costs pruning,
-    never correctness."""
-    from iceberg_rust_archive_spark.predicates import (
-        Pred, _split_top, try_parse_preds,
-    )
-    wtext = _extract_top_where(sql)
-    if not wtext:
-        return None
-    if len(_split_top(wtext, " OR ")) > 1:
-        # OR binds looser than AND: ``a OR b AND c`` is a DISJUNCTION
-        # (a OR (b AND c)), so pushing ANY conjunct — even one that
-        # parses cleanly, like c — prunes files matching only via the
-        # ``a`` branch. A top-level OR anywhere in the WHERE text means
-        # no term is a true conjunct of the whole clause; refuse to
-        # push (costs pruning, never correctness). Parenthesized ORs
-        # sit at depth>0 and still allow the sibling conjuncts through.
-        return None
+def _table_preds(conjuncts: list[str], schema):
+    """Pruning Preds from WHERE conjunct texts: each one that parses in
+    the conjunctive fragment and names a schema column (alias qualifiers
+    stripped); the rest are not pushed, which costs pruning, never
+    correctness (the full WHERE still applies in Spark SQL)."""
+    from iceberg_rust_archive_spark.predicates import Pred, try_parse_preds
     out = []
-    for term in _split_top(wtext, " AND "):
-        got = try_parse_preds(term.strip())
-        if not got:
-            continue
-        for p in got:
+    for term in conjuncts:
+        for p in try_parse_preds(term) or ():
             col = p.column
             if schema.field_by_name(col) is None:
                 tail = col.split(".")[-1]

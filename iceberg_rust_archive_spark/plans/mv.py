@@ -79,17 +79,13 @@ from iceberg_rust_archive_spark.catalog.base import (
 from iceberg_rust_archive_spark.predicates import (
     _mask_quoted, _scan_quoted,
 )
-from iceberg_rust_archive_spark.operators.scan import (
-    broadcast_if_small,
-)
 from iceberg_rust_archive_spark.plans.sqlparse import (
-    ParsedSelect, is_join_shaped, parse_select, rewrite_relations,
+    ParsedSelect, SelectRelations, bind_names, parse_select, splice,
     split_union, strip_order_by,
 )
 from iceberg_rust_archive_spark.session import materialized
 from iceberg_rust_archive_spark.spec.partition import PartitionSpec
 from iceberg_rust_archive_spark.spec.schema import Schema
-from iceberg_rust_archive_spark.spec.table_metadata import TableMetadata
 from iceberg_rust_archive_spark.spec.types import (
     StructTypeSpec, spark_to_iceberg_type,
 )
@@ -205,10 +201,6 @@ class SourceState:
         # changelog eligibility: the old snapshot must still exist so
         # Table.changes can resolve deletes against it
         self.old_exists = old is not None
-
-
-def _view_name(identifier: str, suffix: str) -> str:
-    return "mv_src_" + re.sub(r"\W", "_", identifier) + "_" + suffix
 
 
 def _multiplicity_item(parsed: ParsedSelect):
@@ -335,7 +327,8 @@ def _append_weight_item(branch_sql: str, wexpr: str) -> str:
     raise ValueError(f"branch without FROM: {branch_sql!r}")
 
 
-def _expand_view_refs(catalog: Catalog, sql: str, depth: int = 0) -> str:
+def _expand_view_refs(spark: SparkSession, catalog: Catalog, sql: str,
+                      depth: int = 0) -> str:
     """Resolve non-table relations so the refresh machinery only ever
     binds real tables: a plain VIEW inlines as a subquery (its query
     re-evaluates each refresh — correct; the expansion marks the plan
@@ -345,28 +338,26 @@ def _expand_view_refs(catalog: Catalog, sql: str, depth: int = 0) -> str:
     through MV-over-MV layers."""
     if depth > 10:
         raise ValueError("view nesting deeper than 10 levels")
-    mapping: dict[str, str] = {}
-    for name in parse_select(sql).relations:
+    repl: dict = {}
+    for ref in SelectRelations(spark, sql).relations:
         try:
-            md = catalog.load_tabular(name.lower())
+            md = catalog.load_tabular(ref.name)
         except Exception:  # noqa: BLE001 — unresolved → leave to binder
             continue
         if isinstance(md, MaterializedViewMetadata):
             _, _, proj = storage_plan(md.sql)
             if proj is None:
-                mapping[name.lower()] = md.storage_table
+                repl[ref] = md.storage_table
             else:
                 # inner MV persists an avg decomposition — project the
                 # declared columns back over its storage table
                 cols = ", ".join(f"{e} AS {n}" for n, e in proj)
-                mapping[name.lower()] = \
-                    f"(SELECT {cols} FROM {md.storage_table})"
+                repl[ref] = f"(SELECT {cols} FROM {md.storage_table})"
         elif isinstance(md, ViewMetadata):
-            mapping[name.lower()] = f"({strip_order_by(md.sql)})"
-    if not mapping:
+            repl[ref] = f"({strip_order_by(md.sql)})"
+    if not repl:
         return sql
-    return _expand_view_refs(catalog, rewrite_relations(sql, mapping),
-                             depth + 1)
+    return _expand_view_refs(spark, catalog, splice(sql, repl), depth + 1)
 
 
 def _touches_variant(sql: str, tables) -> bool:
@@ -392,7 +383,7 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
     mv = catalog.load_tabular(identifier)
     if not isinstance(mv, MaterializedViewMetadata):
         raise TypeError(f"{identifier} is not a materialized view")
-    sql = _expand_view_refs(catalog, mv.sql)
+    sql = _expand_view_refs(spark, catalog, mv.sql)
     # δ(∪ᵢ Bᵢ) = ∪ᵢ δBᵢ: a top-level UNION ALL of incremental-append
     # branches refreshes per branch (transform.rs:85-100). Returns None
     # when the shape doesn't qualify — the normal path below then runs
@@ -516,23 +507,11 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
 
     def bind_and_run(bindings: dict[str, DataFrame],
                      sql_text: str | None = None) -> DataFrame:
-        text = sql_text or run_sql
-        # join-shaped replayed SQL (shared is_join_shaped — explicit
-        # JOIN, comma-FROM, IN/EXISTS subquery, same as the engine's
-        # SQL surface): a provably-small scan binding (tagged by
-        # operators/scan.py) carries a broadcast hint so the dim side
-        # of an MV refresh join plans BroadcastHashJoin up front;
-        # join-less replays stay unhinted (an unapplied hint is a
-        # HintErrorLogger warning per run — r15)
-        joins = is_join_shaped(text)
-        mapping = {}
-        for name, df in bindings.items():
-            if joins:
-                df = broadcast_if_small(df)
-            vn = _view_name(name, "v")
-            df.createOrReplaceTempView(vn)
-            mapping[name.lower()] = vn
-        return spark.sql(rewrite_relations(text, mapping))
+        # in a join-shaped replay (a join or subquery in the parse
+        # tree, as on the engine's SQL surface) a provably-small scan
+        # binding carries a broadcast hint, so the dim side of an MV
+        # refresh join plans BroadcastHashJoin up front (bind_names)
+        return bind_names(spark, sql_text or run_sql, bindings)
 
     def current_bindings() -> dict[str, DataFrame]:
         return {s.name: s.table.scan(spark) for s in sources}
@@ -686,7 +665,7 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
             outer_of, ubranches, ubparses, outer_rels = union_ctx
             src_by_name = {s.name.lower(): s for s in sources}
             outer_srcs = [src_by_name[r.lower()] for r in outer_rels]
-            amap, ub_aliased = _union_name_split(ubranches, ubparses,
+            amap, ub_aliased = _union_name_split(spark, ubranches, ubparses,
                                                  outer_rels)
             for b_sql, pb in zip(ub_aliased, ubparses):
                 bsrcs = [src_by_name[nm.lower()] for nm in pb.relations]
@@ -751,7 +730,7 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
             outer_of, ubranches, ubparses, outer_rels = union_ctx
             src_by_name = {s.name.lower(): s for s in sources}
             outer_srcs = [src_by_name[r.lower()] for r in outer_rels]
-            amap, ub_aliased = _union_name_split(ubranches, ubparses,
+            amap, ub_aliased = _union_name_split(spark, ubranches, ubparses,
                                                  outer_rels)
             for b_sql, pb in zip(ub_aliased, ubparses):
                 bsrcs = [src_by_name[nm.lower()] for nm in pb.relations]
@@ -918,7 +897,7 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
     return strategy
 
 
-def _union_name_split(ubranches, ubparses, outer_rels):
+def _union_name_split(spark, ubranches, ubparses, outer_rels):
     """Alias union-internal occurrences of tables that ALSO appear in
     the outer join (the reference's transform_down rebinds each
     occurrence independently, delta_queries/transform.rs:381-479):
@@ -932,7 +911,9 @@ def _union_name_split(ubranches, ubparses, outer_rels):
     if not overlap:
         return {}, list(ubranches)
     amap = {nm: "__usplit_" + re.sub(r"\W", "_", nm) for nm in overlap}
-    return amap, [rewrite_relations(b, amap) for b in ubranches]
+    return amap, [splice(b, {r: amap[r.name] for r in
+                             SelectRelations(spark, b).relations
+                             if r.name in amap}) for b in ubranches]
 
 
 _RESERVED_AFTER_SUBQUERY = {"where", "group", "having", "order", "limit",
@@ -1089,17 +1070,6 @@ def _refresh_union_all_mv(spark: SparkSession, catalog: Catalog,
                              s.current_snapshot_id or -1)
             for s in sources))
 
-    def run_branch(b_sql: str, bindings: dict[str, DataFrame]) -> DataFrame:
-        joins = is_join_shaped(b_sql)
-        mapping = {}
-        for name, df in bindings.items():
-            if joins:
-                df = broadcast_if_small(df)  # small-scan tag (bind_and_run)
-            vn = _view_name(name, "v")
-            df.createOrReplaceTempView(vn)
-            mapping[name.lower()] = vn
-        return spark.sql(rewrite_relations(b_sql, mapping))
-
     # UNION column names come from the FIRST branch; later branches
     # align by POSITION — rename each delta to the storage layout
     storage_cols = [f.name for f in
@@ -1115,7 +1085,7 @@ def _refresh_union_all_mv(spark: SparkSession, catalog: Catalog,
                for i in pb.items):
             cur = {n: state_by_name[n.lower()].table.scan(spark)
                    for n in pb.relations}
-            if len(run_branch(b_sql, cur).schema.fields) \
+            if len(bind_names(spark, b_sql, cur).schema.fields) \
                     != len(storage_cols):
                 return None
     delta: DataFrame | None = None
@@ -1134,7 +1104,7 @@ def _refresh_union_all_mv(spark: SparkSession, catalog: Catalog,
                 else:
                     bindings[other.name] = other.table.scan(
                         spark, snapshot_id=other.old_snapshot_id)
-            d = run_branch(b_sql, bindings).toDF(*storage_cols)
+            d = bind_names(spark, b_sql, bindings).toDF(*storage_cols)
             delta = d if delta is None else delta.unionByName(d)
     assert delta is not None, "stale sources but no branch pass ran"
 

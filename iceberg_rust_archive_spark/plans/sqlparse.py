@@ -1,18 +1,26 @@
-"""Minimal SQL analysis for the MV rewriter and the DDL shim.
+"""SQL analysis: the relation binder and the MV classifier.
 
 The reference extracts source relations with a sqlparser visitor
-(iceberg-rust/src/sql.rs:12-21) and classifies refresh strategy by logical
-plan shape (materialized_view/mod.rs:370-415). We operate on the SQL text
-of the limited grammar the reference's MV tests use (SELECT-FROM-JOIN-
-WHERE-GROUP BY); anything outside it is classified FULL (always-correct
+(iceberg-rust/src/sql.rs:12-21); ``SelectRelations`` reads them from
+Spark's own parse tree, and ``run_with_views`` binds each for one
+statement — the engine, MV refresh and MERGE all bind through these.
+The MV strategy classifier (``parse_select``) reads the SQL text of the
+limited grammar the reference's MV tests use (SELECT-FROM-JOIN-WHERE-
+GROUP BY); anything outside it is classified FULL (always-correct
 fallback, exactly the reference's behavior for unknown plan nodes).
 """
-
 from __future__ import annotations
 
 import re
+import uuid
+import weakref
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 
+from pyspark.errors.exceptions.captured import capture_sql_exception
+from pyspark.sql import DataFrame
+
+from iceberg_rust_archive_spark.operators.scan import broadcast_if_small
 from iceberg_rust_archive_spark.predicates import (
     _mask_quoted, _scan_quoted, _split_top,
 )
@@ -38,24 +46,183 @@ def find_relations(sql: str) -> list[str]:
     return out
 
 
-_COMMA_FROM_RE = re.compile(
-    r"\bfrom\s+[A-Za-z_][\w.]*(?:\s+(?:as\s+)?\w+)?\s*,", re.IGNORECASE)
-_JOIN_SHAPE_RE = re.compile(
-    r"\bjoin\b|\b(?:in|exists)\s*\(\s*select\b", re.IGNORECASE)
+@dataclass(frozen=True)
+class RelationRef:
+    """A relation reference: lowercased name, ``[start, stop)`` text span
+    (with any ``AS OF`` clause) and its time travel: the ``VERSION AS OF``
+    string, or ``TIMESTAMP AS OF`` in epoch ms."""
+    name: str
+    start: int
+    stop: int
+    as_of: str | int | None = None
 
 
-def is_join_shaped(sql: str, masked: str | None = None) -> bool:
-    """True when the statement can APPLY a broadcast hint: an explicit
-    JOIN, a comma-list FROM (implicit cross/inner join), or an
-    IN/EXISTS subquery (Spark rewrites those to left-semi/anti joins
-    whose build side accepts the hint). The single definition shared
-    by the engine's SQL surface and the MV refresh rewriter — r15
-    shipped two divergent copies and an MV defined with `FROM a, b
-    WHERE …` or an IN-subquery silently lost its broadcast hint in the
-    refresh replay (perf-only, results unaffected). Pass ``masked``
-    when the caller already holds ``_mask_quoted(sql)``."""
-    m = masked if masked is not None else _mask_quoted(sql)
-    return bool(_COMMA_FROM_RE.search(m)) or bool(_JOIN_SHAPE_RE.search(m))
+# Origin is a case class, Origin(line, startPosition, startIndex,
+# stopIndex, sqlText, ...): its rendering carries both indices and the
+# text they index
+_ORIGIN_RE = re.compile(r"Origin\((?:Some\(\d+\)|None),(?:Some\(\d+\)|None),"
+                        r"Some\((\d+)\),Some\((\d+)\),Some\(")
+# per-session JVM handles (``_handles``)
+_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _handles(spark) -> SimpleNamespace:
+    """The session's parser, conf and catalog, ``TreeNode.origin`` as a
+    Scala function (``node.map`` with it reads every origin of a subtree
+    in one py4j round trip), and what ``run_with_views`` calls. Each is
+    looked up once: py4j resolves a ``jvm.a.b.C`` path by one round trip
+    per segment, ~1 ms for a Spark class."""
+    got = _HANDLES.get(spark)
+    if got is None:
+        state, jvm = spark._jsparkSession.sessionState(), spark._jvm
+        cls, inv = jvm.java.lang.Class.forName, jvm.java.lang.invoke
+        trees = "org.apache.spark.sql.catalyst.trees."
+        origin = inv.MethodHandles.publicLookup().findVirtual(
+            cls(trees + "TreeNode"), "origin",
+            inv.MethodType.methodType(cls(trees + "Origin")))
+        got = _HANDLES[spark] = SimpleNamespace(
+            parser=state.sqlParser(), conf=state.conf(),
+            catalog=state.catalog(),
+            origin=jvm.scala.jdk.javaapi.FunctionConverters
+            .asScalaFromFunction(inv.MethodHandleProxies.asInterfaceInstance(
+                cls("java.util.function.Function"), origin)),
+            time_travel=jvm.org.apache.spark.sql.catalyst.analysis
+            .TimeTravelSpec,
+            create_view=jvm.org.apache.spark.sql.execution.command
+            .ViewHelper.createTemporaryViewRelation,
+            table_id=jvm.org.apache.spark.sql.catalyst.TableIdentifier,
+            no_view=jvm.scala.collection.mutable.HashMap().lift(),
+            none=jvm.scala.Option.empty(),
+            nil=jvm.scala.collection.immutable.Nil.toList())
+    return got
+
+
+class SelectRelations:
+    """One statement parsed by Spark: its ``relations`` (subqueries and
+    CTE bodies too), ``has_join`` (a Join or a subquery expression, which
+    Spark plans as a join) and ``conjuncts()``."""
+
+    def __init__(self, spark, text: str):
+        self._h = h = _handles(spark)
+        self.text = text
+        self.relations, self.has_join = [], False
+        self._filters: list = []   # the Filter directly over each ref
+        self._walk_tree(capture_sql_exception(h.parser.parsePlan)(text))
+
+    def _span(self, node) -> tuple[int, int] | None:
+        """The union of the origins in ``node``'s subtree (``BETWEEN``'s
+        own origin covers ``BETWEEN a AND b``, not its operand) that index
+        this statement's text: a shared node such as the ``true`` literal
+        keeps the origin of whichever statement first built it."""
+        s, tail = node.map(self._h.origin).toString(), self.text + "),"
+        spans = [(int(m[1]), int(m[2])) for m in _ORIGIN_RE.finditer(s)
+                 if s.startswith(tail, m.end())]
+        return (min(a for a, _ in spans),
+                max(b for _, b in spans) + 1) if spans else None
+
+    def _walk_tree(self, plan) -> None:
+        self._walk(plan, None)
+        subs = plan.subqueriesAll()
+        for i in range(subs.size()):
+            self.has_join = True
+            self._walk(subs.apply(i), None)
+
+    def _walk(self, node, over) -> None:
+        kind = node.nodeName()
+        if kind in ("UnresolvedRelation", "RelationTimeTravel"):
+            rel, as_of = node, None
+            lo, hi = self._span(node)
+            if kind == "RelationTimeTravel":  # its span is only AS OF
+                rel, over, version = node.relation(), None, node.version()
+                lo = self._span(rel)[0]
+                # TIMESTAMP AS OF evaluates as Spark does (session zone)
+                as_of = version.get() if version.isDefined() else \
+                    self._h.time_travel.create(
+                        node.timestamp(), version,
+                        self._h.conf.sessionLocalTimeZone()
+                    ).get().timestamp() // 1000
+            self.relations.append(
+                RelationRef(rel.tableName().lower(), lo, hi, as_of))
+            self._filters.append(over)
+            return
+        self.has_join = self.has_join or kind == "Join"
+        # a Filter's conjuncts reach its relation through an alias only
+        nxt = node if kind == "Filter" else \
+            over if kind == "SubqueryAlias" else None
+        kids = node.children()
+        for i in range(kids.size()):
+            self._walk(kids.apply(i), nxt)
+        if kind == "UnresolvedWith":  # CTE bodies are inner children
+            inner = node.innerChildren()
+            for i in range(inner.size()):
+                self._walk_tree(inner.apply(i))
+
+    def conjuncts(self) -> list[str]:
+        """For a statement with exactly one relation reference, the text
+        of each AND conjunct of the Filter directly over it (through an
+        alias) and of no other Filter, so a WHERE over a derived table
+        never reaches the inner scan. An ``OR`` conjunct is left out."""
+        if len(self.relations) != 1 or self._filters[0] is None:
+            return []
+        out, stack = [], [self._filters[0].condition()]
+        while stack:
+            e = stack.pop()
+            kind = e.nodeName()
+            if kind == "And":
+                stack += [e.right(), e.left()]
+            elif kind != "Or" and (span := self._span(e)) is not None:
+                out.append(self.text[slice(*span)])
+        return out
+
+
+def splice(text: str, repl: dict) -> str:
+    """``text`` with each ``RelationRef`` span in ``repl`` replaced."""
+    out, last = [], 0
+    for ref in sorted(repl, key=lambda r: r.start):
+        out += [text[last:ref.start], repl[ref]]
+        last = ref.stop
+    return "".join(out) + text[last:]
+
+
+def run_with_views(spark, text: str, frames: dict) -> DataFrame:
+    """Run ``text`` with each ``RelationRef`` in ``frames`` bound to its
+    DataFrame (None: left to Spark) by a temp view with a statement-unique
+    name, dropped once ``spark.sql`` has analyzed the statement — through
+    the session catalog, as ``spark.catalog.dropTempView`` (and PySpark's
+    ``spark.sql(text, **frames)``, which calls it) would also uncache
+    the plan the view wraps, a cached MERGE target included."""
+    frames = {ref: df for ref, df in frames.items() if df is not None}
+    h, views = _handles(spark), {}
+    try:
+        for ref, df in frames.items():
+            if id(df) not in views:
+                views[id(df)] = vn = "ice_" + re.sub(
+                    r"\W", "_", ref.name) + "_" + uuid.uuid4().hex[:12]
+                # the session-catalog steps of CREATE TEMPORARY VIEW,
+                # without running that command as a query (its query
+                # execution costs ~3 ms, several times the rest); with
+                # replace off the helper never needs the old view
+                plan = df._jdf.logicalPlan()
+                h.catalog.createTempView(vn, h.create_view(
+                    h.table_id.apply(vn), spark._jsparkSession, False,
+                    h.no_view, h.none, plan, plan, h.nil, h.none), False)
+        return spark.sql(splice(
+            text, {ref: views[id(df)] for ref, df in frames.items()}))
+    finally:
+        for vn in views.values():
+            h.catalog.dropTempView(vn)
+
+
+def bind_names(spark, text: str, bindings: dict) -> DataFrame:
+    """``run_with_views`` binding by (lowercase) relation name. In a
+    join-shaped statement a scan ``operators/scan.py`` proved small
+    carries a broadcast hint (``broadcast_if_small``); a join-less one
+    stays unhinted, as Catalyst strips an unapplied hint with a warning."""
+    rels = SelectRelations(spark, text)
+    by_name = {k.lower(): broadcast_if_small(v) if rels.has_join else v
+               for k, v in bindings.items()}
+    return run_with_views(spark, text,
+                          {r: by_name.get(r.name) for r in rels.relations})
 
 
 def split_top_level(s: str, sep: str = ",") -> list[str]:
@@ -247,20 +414,3 @@ def strip_order_by(sql: str) -> str:
         if prefix.count("(") == prefix.count(")"):
             return text[:m.start()].strip()
     return text
-
-
-def rewrite_relations(sql: str, mapping: dict[str, str]) -> str:
-    """Replace table identifiers after FROM/JOIN with view names —
-    matched on the literal-MASKED text so 'from x' inside a string
-    literal survives verbatim."""
-    masked = _mask_quoted(sql)
-    out, last = [], 0
-    for m in re.finditer(r"\b(from|join)\s+([A-Za-z_][\w.]*)", masked,
-                         re.IGNORECASE):
-        kw = sql[m.start(1):m.end(1)]
-        name = sql[m.start(2):m.end(2)]
-        out.append(sql[last:m.start()])
-        out.append(f"{kw} {mapping.get(name.lower(), name)}")
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)

@@ -27,6 +27,12 @@ from iceberg_rust_archive_spark.sources.write import write_datafiles
 from iceberg_rust_archive_spark.spec.types import iceberg_to_spark_type
 from iceberg_rust_archive_spark.transaction import Transaction
 
+# every kind ``Table.inspect`` serves; SQL reads them as ``ns.t.<kind>``
+METADATA_TABLES = ("snapshots", "history", "refs", "manifests", "files",
+                   "entries", "partitions", "position_deletes",
+                   "all_manifests", "all_files", "all_entries",
+                   "metadata_log_entries")
+
 
 def _project_by_id(d: DataFrame, from_schema: Schema,
                    to_schema: Schema) -> DataFrame:
@@ -968,9 +974,9 @@ class Table:
         return self.refresh()
 
     def inspect(self, spark: SparkSession, kind: str) -> DataFrame:
-        """Metadata tables (Iceberg's ``t.snapshots`` / ``t.files`` /
-        ``t.manifests`` / ``t.history`` introspection surface; driver-
-        side metadata only — no data scan):
+        """Metadata tables (Iceberg's ``t.snapshots`` / ``t.files`` / …
+        introspection surface; driver-side metadata only — no data
+        scan), one per kind in ``METADATA_TABLES``, among them:
 
         - snapshots: one row per snapshot (id, parent, sequence,
           timestamp, operation, manifest-list path),
@@ -978,6 +984,8 @@ class Table:
         - files: current snapshot's live data/delete files with stats,
         - history: the snapshot log as (made_current_at, snapshot_id,
           is_current_ancestor)."""
+        if kind not in METADATA_TABLES:
+            raise ValueError(f"unknown metadata table {kind!r}")
         import json as _json
 
         from iceberg_rust_archive_spark.sources.manifests import (
@@ -1168,20 +1176,19 @@ class Table:
                 rows, "name string, type string, snapshot_id long, "
                       "min_snapshots_to_keep int, max_snapshot_age_ms "
                       "long, max_ref_age_ms long")
-        if kind == "history":
-            current_chain = set()
-            s = snap
-            while s is not None:
-                current_chain.add(s.snapshot_id)
-                s = md.snapshots.get(s.parent_snapshot_id) \
-                    if s.parent_snapshot_id is not None else None
-            rows = [(e["timestamp-ms"], e["snapshot-id"],
-                     e["snapshot-id"] in current_chain)
-                    for e in md.snapshot_log]
-            return spark.createDataFrame(
-                rows, "made_current_at_ms long, snapshot_id long, "
-                      "is_current_ancestor boolean")
-        raise ValueError(f"unknown metadata table {kind!r}")
+        # history
+        current_chain = set()
+        s = snap
+        while s is not None:
+            current_chain.add(s.snapshot_id)
+            s = md.snapshots.get(s.parent_snapshot_id) \
+                if s.parent_snapshot_id is not None else None
+        rows = [(e["timestamp-ms"], e["snapshot-id"],
+                 e["snapshot-id"] in current_chain)
+                for e in md.snapshot_log]
+        return spark.createDataFrame(
+            rows, "made_current_at_ms long, snapshot_id long, "
+                  "is_current_ancestor boolean")
 
     def upsert(self, spark: SparkSession, df: DataFrame,
                keys: list[str] | None = None,

@@ -18,7 +18,7 @@ from iceberg_rust_archive_spark.sources.manifests import read_manifest_list
 from iceberg_rust_archive_spark.spec import (
     NestedField, PartitionField, PartitionSpec, Schema, StructTypeSpec,
 )
-from iceberg_rust_archive_spark.table import Table
+from iceberg_rust_archive_spark.table import METADATA_TABLES, Table
 
 ORDERS_SCHEMA = Schema(0, StructTypeSpec((
     NestedField(1, "id", "long", True),
@@ -4540,6 +4540,173 @@ def test_run_select_rewrites_skip_literals(spark, tmp_path):
     note = "db.t version as of 1 and db.t.files"
     r = eng.sql(f"SELECT k, '{note}' AS note FROM db.t").collect()
     assert r[0].note == note
+
+
+def _two_file_engine(spark, tmp_path):
+    """db.t (k, v) in two data files: v = 1 alone in the first, so a
+    scan pruned by a predicate on an outer ``v`` drops it."""
+    from iceberg_rust_archive_spark.plans.engine import Engine
+
+    eng = Engine(spark, FileCatalog(str(tmp_path / "wh")))
+    eng.sql("CREATE SCHEMA db")
+    eng.sql("CREATE TABLE db.t (k BIGINT, v BIGINT)")
+    eng.sql("INSERT INTO db.t VALUES (1, 1)")
+    eng.sql("INSERT INTO db.t VALUES (1, 2), (1, 3), (2, 4), (2, 5)")
+    return eng
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT * FROM (SELECT k, count(*) AS v FROM {t} GROUP BY k) "
+    "WHERE v >= 2",
+    "SELECT * FROM (SELECT k, v * 10 AS v FROM {t}) WHERE v >= 20",
+])
+def test_derived_table_where_not_pushed_into_inner_scan(spark, tmp_path,
+                                                        sql):
+    """A WHERE over a derived table filters the derived columns, not the
+    table's: only a Filter directly over the relation prunes its scan.
+    Pushing the outer ``v >= …`` into db.t's scan dropped the v = 1
+    file, so the count read 2 instead of 3 and the projection lost
+    rows."""
+    eng = _two_file_engine(spark, tmp_path)
+    eng.load_table("db.t").scan(spark).createOrReplaceTempView("plain_t")
+    try:
+        want = sorted(spark.sql(sql.format(t="plain_t")).collect())
+        assert sorted(eng.sql(sql.format(t="db.t")).collect()) == want
+    finally:
+        spark.catalog.dropTempView("plain_t")
+
+
+def test_timestamp_as_of_reads_in_session_zone(spark, tmp_path):
+    """``TIMESTAMP AS OF`` reads the snapshot current at that instant: a
+    naive literal in the session time zone, an offset literal as given,
+    both to the millisecond."""
+    import datetime as dt
+    import time
+    import zoneinfo
+
+    eng = _two_file_engine(spark, tmp_path)
+    first = eng.load_table("db.t").metadata.snapshots
+    ms = max(s.timestamp_ms for s in first.values())
+    time.sleep(0.01)
+    eng.sql("INSERT INTO db.t VALUES (3, 6)")
+    at = dt.datetime.fromtimestamp(ms / 1000, dt.timezone.utc)
+    tz0 = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        naive = at.astimezone(zoneinfo.ZoneInfo("America/New_York")) \
+            .replace(tzinfo=None).isoformat(" ", "milliseconds")
+        for lit in (naive, at.isoformat("T", "milliseconds")):
+            assert eng.sql(f"SELECT count(*) AS n FROM db.t TIMESTAMP AS OF "
+                           f"'{lit}'").collect()[0].n == 5, lit
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz0)
+    assert eng.sql("SELECT count(*) AS n FROM db.t").collect()[0].n == 6
+
+
+def test_comma_from_binds_every_relation(spark, tmp_path):
+    """Every relation of a comma-list FROM is bound, not only the first
+    (the second one used to reach Spark unbound: TABLE_OR_VIEW_NOT_FOUND)."""
+    eng = _two_file_engine(spark, tmp_path)
+    eng.sql("CREATE TABLE db.u (k BIGINT, w STRING)")
+    eng.sql("INSERT INTO db.u VALUES (1, 'a'), (3, 'c')")
+    got = eng.sql("SELECT t.k, u.w FROM db.t t, db.u u "
+                  "WHERE t.k = u.k").collect()
+    assert sorted((r.k, r.w) for r in got) == [(1, "a")] * 3
+
+
+@pytest.mark.parametrize("kind", METADATA_TABLES)
+def test_metadata_table_through_sql(spark, tmp_path, kind):
+    """``ns.t.<kind>`` reads the same rows as ``Table.inspect`` for every
+    kind it serves, and the engine docstring lists the kind."""
+    from iceberg_rust_archive_spark.plans import engine as eng_mod
+
+    eng = _two_file_engine(spark, tmp_path)
+    eng.sql("ALTER TABLE db.t SET TBLPROPERTIES "
+            "('write.delete.format'='dv')")
+    eng.sql("DELETE FROM db.t WHERE v = 3")
+    want = eng.load_table("db.t").inspect(spark, kind).collect()
+    got = eng.sql(f"SELECT * FROM db.t.{kind}").collect()
+    assert sorted(map(repr, got)) == sorted(map(repr, want))
+    assert f".{kind}" in eng_mod.__doc__
+
+
+@pytest.mark.usefixtures("no_leaked_caches")
+def test_statements_bind_in_isolation(spark, tmp_path, monkeypatch):
+    """Relations bind per statement under statement-unique view names:
+    concurrent SELECTs on one table with different (pruning) WHEREs
+    each read their own scan; no engine-made view outlives its
+    statement; dropping the views keeps a cached MERGE target cached;
+    literals and backquoted identifiers survive the splice."""
+    import threading
+
+    from iceberg_rust_archive_spark.plans import sqlparse as sp
+
+    eng = _two_file_engine(spark, tmp_path)
+    views_before = {t.name for t in spark.catalog.listTables()}
+
+    # two threads, one table, different WHEREs (each prunes a file)
+    wrong = []
+
+    def reader(where, want):
+        for _ in range(40):
+            got = eng.sql(f"SELECT sum(v) AS s FROM db.t WHERE {where}") \
+                .collect()[0].s
+            if got != want:
+                wrong.append((where, got))
+
+    threads = [threading.Thread(target=reader, args=("v < 2", 1)),
+               threading.Thread(target=reader, args=("v >= 2", 14))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in threads)
+    assert wrong == []
+
+    snap = eng.load_table("db.t").metadata.current_snapshot().snapshot_id
+    assert eng.sql(f"SELECT count(*) AS n FROM db.t VERSION AS OF {snap} "
+                   "WHERE k = 1").collect()[0].n == 3
+
+    # MERGE: the cached target stays cached across both statements
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_after = []
+    run = sp.run_with_views
+
+    def recording(*a, **kw):
+        out = run(*a, **kw)
+        cached_after.append(cache.numCachedEntries())
+        return out
+
+    before = cache.numCachedEntries()
+    monkeypatch.setattr(sp, "run_with_views", recording)
+    eng.sql("MERGE INTO db.t t USING (SELECT 20 AS k, 4 AS v "
+            "UNION ALL SELECT 7, 70) s ON t.v = s.v "
+            "WHEN MATCHED THEN UPDATE SET k = s.k "
+            "WHEN NOT MATCHED THEN INSERT *")
+    monkeypatch.setattr(sp, "run_with_views", run)
+    assert len(cached_after) == 2
+    assert min(cached_after) > before
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM db.t")
+                  .collect()) == [(1, 1), (1, 2), (1, 3), (2, 5), (7, 70),
+                                  (20, 4)]
+
+    eng.sql("CREATE MATERIALIZED VIEW db.mv AS "
+            "SELECT k, count(*) AS n FROM db.t GROUP BY k")
+    eng.refresh_materialized_view("db.mv")
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM db.mv")
+                  .collect()) == [(1, 3), (2, 1), (7, 1), (20, 1)]
+    vn = eng.sql("CALL system.create_changelog_view('db.t')") \
+        .collect()[0].view_name
+    try:
+        assert {t.name for t in spark.catalog.listTables()} \
+            - views_before == {vn}
+    finally:
+        spark.catalog.dropTempView(vn)
+
+    # the splice keeps literal braces and backquoted identifiers
+    got = eng.sql("SELECT '{\"a\":1}' AS j, `k` FROM `db`.`t` "
+                  "WHERE `v` = 1 AND '{}' = '{}'").collect()
+    assert [(r.j, r.k) for r in got] == [('{"a":1}', 1)]
 
 
 def test_metadata_min_max_fast_path(spark, tmp_path):

@@ -1502,9 +1502,10 @@ def test_sql_analysis_ignores_literal_content(spark):
     assert sp.strip_order_by(
         "SELECT * FROM (SELECT a FROM t ORDER BY a) q") \
         == "SELECT * FROM (SELECT a FROM t ORDER BY a) q"
-    assert sp.rewrite_relations(
-        "SELECT ' from t ' FROM t", {"t": "v9"}) \
-        == "SELECT ' from t ' FROM v9"
+    sql = "SELECT ' from t ' FROM t"
+    refs = sp.SelectRelations(spark, sql).relations
+    assert [r.name for r in refs] == ["t"]
+    assert sp.splice(sql, {refs[0]: "v9"}) == "SELECT ' from t ' FROM v9"
     parts, kind = sp.split_union(
         "SELECT 'a union all b' FROM t UNION ALL SELECT r'x' FROM u")
     assert parts == ["SELECT 'a union all b' FROM t",

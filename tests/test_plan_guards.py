@@ -317,29 +317,35 @@ def test_stats_broadcastable_backstops(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", t0)
 
 
-def test_join_shape_detection_shared():
+def test_join_shape_detection_shared(spark):
     """r15 ADVICE: the engine and the MV rewriter previously carried
     divergent join detectors — an MV defined with `FROM a, b WHERE …`
     or an IN-subquery silently lost its broadcast hint in the refresh
-    replay. Both modules must now bind the SAME is_join_shaped, and it
-    must recognize every hint-applicable shape."""
+    replay. Both modules must now bind through the SAME parse-tree
+    helper, and its ``has_join`` must recognize every hint-applicable
+    shape."""
     from iceberg_rust_archive_spark.plans import engine as eng_mod
     from iceberg_rust_archive_spark.plans import mv as mv_mod
-    from iceberg_rust_archive_spark.plans.sqlparse import is_join_shaped
+    from iceberg_rust_archive_spark.plans import sqlparse as sp
 
-    assert eng_mod.is_join_shaped is is_join_shaped
-    assert mv_mod.is_join_shaped is is_join_shaped
-    assert is_join_shaped("SELECT * FROM a, b WHERE a.k = b.k")
-    assert is_join_shaped("SELECT * FROM a AS x, b WHERE x.k = b.k")
-    assert is_join_shaped("SELECT * FROM a WHERE k IN (SELECT k FROM b)")
-    assert is_join_shaped("SELECT * FROM a WHERE EXISTS (SELECT 1 FROM b)")
-    assert is_join_shaped("SELECT a.k FROM a JOIN b ON a.k = b.k")
-    assert is_join_shaped("SELECT a.k FROM a LEFT OUTER JOIN b ON a.k=b.k")
-    assert not is_join_shaped("SELECT k FROM a")
-    assert not is_join_shaped("SELECT k FROM a UNION ALL SELECT k FROM b")
+    assert eng_mod.SelectRelations is sp.SelectRelations
+    assert eng_mod.bind_names is sp.bind_names
+    assert mv_mod.bind_names is sp.bind_names
+
+    def has_join(sql):
+        return sp.SelectRelations(spark, sql).has_join
+
+    assert has_join("SELECT * FROM a, b WHERE a.k = b.k")
+    assert has_join("SELECT * FROM a AS x, b WHERE x.k = b.k")
+    assert has_join("SELECT * FROM a WHERE k IN (SELECT k FROM b)")
+    assert has_join("SELECT * FROM a WHERE EXISTS (SELECT 1 FROM b)")
+    assert has_join("SELECT a.k FROM a JOIN b ON a.k = b.k")
+    assert has_join("SELECT a.k FROM a LEFT OUTER JOIN b ON a.k=b.k")
+    assert not has_join("SELECT k FROM a")
+    assert not has_join("SELECT k FROM a UNION ALL SELECT k FROM b")
     # quoted literals never count as structure
-    assert not is_join_shaped("SELECT * FROM a WHERE s = ' join '")
-    assert not is_join_shaped("SELECT * FROM a WHERE s = 'x in (select'")
+    assert not has_join("SELECT * FROM a WHERE s = ' join '")
+    assert not has_join("SELECT * FROM a WHERE s = 'x in (select'")
 
 
 def test_broadcast_if_small_public_seam(spark, tmp_path):
