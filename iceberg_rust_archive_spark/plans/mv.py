@@ -507,8 +507,8 @@ def refresh_materialized_view(spark: SparkSession, catalog: Catalog,
 
     def bind_and_run(bindings: dict[str, DataFrame],
                      sql_text: str | None = None) -> DataFrame:
-        # in a join-shaped replay (a join or subquery in the parse
-        # tree, as on the engine's SQL surface) a provably-small scan
+        # in a join-shaped replay (a join or an IN, EXISTS or LATERAL
+        # subquery, as on the engine's SQL surface) a provably-small scan
         # binding carries a broadcast hint, so the dim side of an MV
         # refresh join plans BroadcastHashJoin up front (bind_names)
         return bind_names(spark, sql_text or run_sql, bindings)

@@ -69,7 +69,7 @@ _HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 def _handles(spark) -> SimpleNamespace:
     """The session's parser, conf and catalog, ``TreeNode.origin`` as a
     Scala function (``node.map`` with it reads every origin of a subtree
-    in one py4j round trip), and what ``run_with_views`` calls. Each is
+    in one py4j round trip), ``TimeTravelSpec`` and tree patterns, each
     looked up once: py4j resolves a ``jvm.a.b.C`` path by one round trip
     per segment, ~1 ms for a Spark class."""
     got = _HANDLES.get(spark)
@@ -80,6 +80,7 @@ def _handles(spark) -> SimpleNamespace:
         origin = inv.MethodHandles.publicLookup().findVirtual(
             cls(trees + "TreeNode"), "origin",
             inv.MethodType.methodType(cls(trees + "Origin")))
+        pattern = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
         got = _HANDLES[spark] = SimpleNamespace(
             parser=state.sqlParser(), conf=state.conf(),
             catalog=state.catalog(),
@@ -88,24 +89,23 @@ def _handles(spark) -> SimpleNamespace:
                 cls("java.util.function.Function"), origin)),
             time_travel=jvm.org.apache.spark.sql.catalyst.analysis
             .TimeTravelSpec,
-            create_view=jvm.org.apache.spark.sql.execution.command
-            .ViewHelper.createTemporaryViewRelation,
-            table_id=jvm.org.apache.spark.sql.catalyst.TableIdentifier,
-            no_view=jvm.scala.collection.mutable.HashMap().lift(),
-            none=jvm.scala.Option.empty(),
-            nil=jvm.scala.collection.immutable.Nil.toList())
+            # IN/EXISTS become semi/anti joins, LATERAL a join; a scalar
+            # subquery's hint would be stripped unapplied with a warning
+            join_subqueries=[getattr(pattern, k + "_SUBQUERY")()
+                             for k in ("LIST", "EXISTS", "LATERAL")])
     return got
 
 
 class SelectRelations:
     """One statement parsed by Spark: its ``relations`` (subqueries and
-    CTE bodies too), ``has_join`` (a Join or a subquery expression, which
-    Spark plans as a join) and ``conjuncts()``."""
+    CTE bodies too), ``has_join`` (a Join, or an IN, EXISTS or LATERAL
+    subquery, which Spark plans as a join) and ``conjuncts()``."""
 
     def __init__(self, spark, text: str):
         self._h = h = _handles(spark)
         self.text = text
         self.relations, self.has_join = [], False
+        self._has_subquery = False  # any subquery expression
         self._filters: list = []   # the Filter directly over each ref
         self._walk_tree(capture_sql_exception(h.parser.parsePlan)(text))
 
@@ -123,8 +123,13 @@ class SelectRelations:
     def _walk_tree(self, plan) -> None:
         self._walk(plan, None)
         subs = plan.subqueriesAll()
-        for i in range(subs.size()):
-            self.has_join = True
+        n = subs.size()
+        if n:
+            # a plan's pattern bits cover its nested subquery plans too
+            self._has_subquery = True
+            self.has_join = self.has_join or any(
+                plan.containsPattern(p) for p in self._h.join_subqueries)
+        for i in range(n):
             self._walk(subs.apply(i), None)
 
     def _walk(self, node, over) -> None:
@@ -134,12 +139,15 @@ class SelectRelations:
             lo, hi = self._span(node)
             if kind == "RelationTimeTravel":  # its span is only AS OF
                 rel, over, version = node.relation(), None, node.version()
-                lo = self._span(rel)[0]
+                lo, ts = self._span(rel)[0], node.timestamp()
+                if ts.isDefined() and not ts.get().resolved():
+                    raise ValueError(
+                        "TIMESTAMP AS OF takes a timestamp literal, not "
+                        + self.text[slice(*self._span(ts.get()))])
                 # TIMESTAMP AS OF evaluates as Spark does (session zone)
                 as_of = version.get() if version.isDefined() else \
                     self._h.time_travel.create(
-                        node.timestamp(), version,
-                        self._h.conf.sessionLocalTimeZone()
+                        ts, version, self._h.conf.sessionLocalTimeZone()
                     ).get().timestamp() // 1000
             self.relations.append(
                 RelationRef(rel.tableName().lower(), lo, hi, as_of))
@@ -158,11 +166,13 @@ class SelectRelations:
                 self._walk_tree(inner.apply(i))
 
     def conjuncts(self) -> list[str]:
-        """For a statement with exactly one relation reference, the text
-        of each AND conjunct of the Filter directly over it (through an
-        alias) and of no other Filter, so a WHERE over a derived table
-        never reaches the inner scan. An ``OR`` conjunct is left out."""
-        if len(self.relations) != 1 or self._filters[0] is None:
+        """For a statement with one relation reference, no join and no
+        subquery (whose Filter may name an outer ``range()`` or ``VALUES``
+        row), the text of each AND conjunct of the Filter directly over
+        it (through an alias), so a WHERE over a derived table never
+        reaches the inner scan. ``OR`` conjuncts are left out."""
+        if len(self.relations) != 1 or self.has_join \
+                or self._has_subquery or self._filters[0] is None:
             return []
         out, stack = [], [self._filters[0].condition()]
         while stack:
@@ -192,25 +202,18 @@ def run_with_views(spark, text: str, frames: dict) -> DataFrame:
     ``spark.sql(text, **frames)``, which calls it) would also uncache
     the plan the view wraps, a cached MERGE target included."""
     frames = {ref: df for ref, df in frames.items() if df is not None}
-    h, views = _handles(spark), {}
+    catalog, views = _handles(spark).catalog, {}
     try:
         for ref, df in frames.items():
             if id(df) not in views:
                 views[id(df)] = vn = "ice_" + re.sub(
                     r"\W", "_", ref.name) + "_" + uuid.uuid4().hex[:12]
-                # the session-catalog steps of CREATE TEMPORARY VIEW,
-                # without running that command as a query (its query
-                # execution costs ~3 ms, several times the rest); with
-                # replace off the helper never needs the old view
-                plan = df._jdf.logicalPlan()
-                h.catalog.createTempView(vn, h.create_view(
-                    h.table_id.apply(vn), spark._jsparkSession, False,
-                    h.no_view, h.none, plan, plan, h.nil, h.none), False)
+                df.createTempView(vn)  # a new name: nothing to uncache
         return spark.sql(splice(
             text, {ref: views[id(df)] for ref, df in frames.items()}))
     finally:
         for vn in views.values():
-            h.catalog.dropTempView(vn)
+            catalog.dropTempView(vn)
 
 
 def bind_names(spark, text: str, bindings: dict) -> DataFrame:

@@ -1176,19 +1176,20 @@ class Table:
                 rows, "name string, type string, snapshot_id long, "
                       "min_snapshots_to_keep int, max_snapshot_age_ms "
                       "long, max_ref_age_ms long")
-        # history
-        current_chain = set()
-        s = snap
-        while s is not None:
-            current_chain.add(s.snapshot_id)
-            s = md.snapshots.get(s.parent_snapshot_id) \
-                if s.parent_snapshot_id is not None else None
-        rows = [(e["timestamp-ms"], e["snapshot-id"],
-                 e["snapshot-id"] in current_chain)
-                for e in md.snapshot_log]
-        return spark.createDataFrame(
-            rows, "made_current_at_ms long, snapshot_id long, "
-                  "is_current_ancestor boolean")
+        if kind == "history":
+            current_chain = set()
+            s = snap
+            while s is not None:
+                current_chain.add(s.snapshot_id)
+                s = md.snapshots.get(s.parent_snapshot_id) \
+                    if s.parent_snapshot_id is not None else None
+            rows = [(e["timestamp-ms"], e["snapshot-id"],
+                     e["snapshot-id"] in current_chain)
+                    for e in md.snapshot_log]
+            return spark.createDataFrame(
+                rows, "made_current_at_ms long, snapshot_id long, "
+                      "is_current_ancestor boolean")
+        raise ValueError(f"no reader for metadata table {kind!r}")
 
     def upsert(self, spark: SparkSession, df: DataFrame,
                keys: list[str] | None = None,

@@ -4559,6 +4559,10 @@ def _two_file_engine(spark, tmp_path):
     "SELECT * FROM (SELECT k, count(*) AS v FROM {t} GROUP BY k) "
     "WHERE v >= 2",
     "SELECT * FROM (SELECT k, v * 10 AS v FROM {t}) WHERE v >= 20",
+    "SELECT * FROM range(3) AS r(v) "
+    "WHERE EXISTS (SELECT 1 FROM {t} x WHERE r.v = 1 AND x.k = 2)",
+    "SELECT * FROM VALUES (1), (2) AS r(v) "
+    "WHERE EXISTS (SELECT 1 FROM {t} x WHERE r.v = 1 AND x.k = 2)",
 ])
 def test_derived_table_where_not_pushed_into_inner_scan(spark, tmp_path,
                                                         sql):
@@ -4566,7 +4570,9 @@ def test_derived_table_where_not_pushed_into_inner_scan(spark, tmp_path,
     table's: only a Filter directly over the relation prunes its scan.
     Pushing the outer ``v >= …`` into db.t's scan dropped the v = 1
     file, so the count read 2 instead of 3 and the projection lost
-    rows."""
+    rows. In a subquery, ``r.v = 1`` names the outer ``range()`` or
+    ``VALUES`` row: pushed into db.t's scan as ``v = 1`` it kept only
+    the first file, which holds no k = 2 row, and EXISTS read false."""
     eng = _two_file_engine(spark, tmp_path)
     eng.load_table("db.t").scan(spark).createOrReplaceTempView("plain_t")
     try:
@@ -4601,6 +4607,16 @@ def test_timestamp_as_of_reads_in_session_zone(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz0)
     assert eng.sql("SELECT count(*) AS n FROM db.t").collect()[0].n == 6
+
+
+def test_timestamp_as_of_expression_is_refused(spark, tmp_path):
+    """``TIMESTAMP AS OF`` takes a literal: an expression raises a
+    ValueError that names it (Spark's ``TimeTravelSpec`` would fail on
+    the unresolved expression with a bare AssertionError)."""
+    eng = _two_file_engine(spark, tmp_path)
+    with pytest.raises(ValueError, match="TIMESTAMP AS OF .*INTERVAL 1 DAY"):
+        eng.sql("SELECT * FROM db.t TIMESTAMP AS OF "
+                "TIMESTAMP '2024-01-02 03:04:05' - INTERVAL 1 DAY")
 
 
 def test_comma_from_binds_every_relation(spark, tmp_path):

@@ -323,7 +323,7 @@ def test_join_shape_detection_shared(spark):
     or an IN-subquery silently lost its broadcast hint in the refresh
     replay. Both modules must now bind through the SAME parse-tree
     helper, and its ``has_join`` must recognize every hint-applicable
-    shape."""
+    shape (a Join, an IN, EXISTS or LATERAL subquery) and no other."""
     from iceberg_rust_archive_spark.plans import engine as eng_mod
     from iceberg_rust_archive_spark.plans import mv as mv_mod
     from iceberg_rust_archive_spark.plans import sqlparse as sp
@@ -343,6 +343,11 @@ def test_join_shape_detection_shared(spark):
     assert has_join("SELECT a.k FROM a LEFT OUTER JOIN b ON a.k=b.k")
     assert not has_join("SELECT k FROM a")
     assert not has_join("SELECT k FROM a UNION ALL SELECT k FROM b")
+    # a LATERAL subquery plans as a join; a scalar one does not, and a
+    # hint on its relation would be stripped with a warning every run
+    assert has_join("SELECT * FROM a, LATERAL (SELECT * FROM b "
+                    "WHERE b.k = a.k)")
+    assert not has_join("SELECT (SELECT max(v) FROM b) AS m FROM a")
     # quoted literals never count as structure
     assert not has_join("SELECT * FROM a WHERE s = ' join '")
     assert not has_join("SELECT * FROM a WHERE s = 'x in (select'")
